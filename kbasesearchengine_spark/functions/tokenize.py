@@ -12,11 +12,12 @@ word characters on lowered text, suited to code-like corpora.
 Exposed four ways:
  - ``tokenize_py``      pure-Python (oracle + unit tests)
  - ``tokenize_expr`` /
-   ``token_count_expr`` JVM Catalyst expressions (split+filter — the hot
-                        path: whole-stage codegen, no Python worker;
-                        equivalence with tokenize_py asserted in pytest)
+   ``hash_tokens_expr`` /
+   ``token_count_expr`` JVM Catalyst expressions (regexp_extract_all /
+                        regexp_count — the hot path: whole-stage codegen,
+                        no Python worker; equivalence with tokenize_py
+                        asserted in pytest)
  - ``tokenize_udf``     scalar pandas UDF -> array<string> (legacy/interop)
- - ``token_count_udf``  scalar pandas UDF -> int (doc length dl)
  - ``SQL_TOKENIZE``     the equivalent DuckDB/ANSI expression (oracle SQL)
 """
 
@@ -84,7 +85,3 @@ def token_count_expr(col) -> "F.Column":
 def tokenize_udf(texts: pd.Series) -> pd.Series:
     return texts.map(tokenize_py)
 
-
-@F.pandas_udf(T.IntegerType())
-def token_count_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: len(tokenize_py(t))).astype("int32")

@@ -6,23 +6,20 @@ lib/src/kbasesearchengine/search/ElasticIndexingStorage.java:322-379; the
 whole event->index pipeline of main/IndexerWorker.java collapses into this
 single batch DAG, per SURVEY.md §3.2).
 
-Physical design (built for 100 TB, tested on local[32]):
+Physical design (built for 100 TB):
 
   corpus ──assign_doc_ids──► docs(doc_id, keys…, lang, sha256, dl, segment)
           (dense, partition-invariant: doc_id = rank over sorted keys)
-  docs ──agg──► stats(N, avgdl)                       [tiny, broadcast]
-  docs ──repartitionByRange(segment, doc_id)──mapInPandas(JVM tokenize+
-         xxhash64 → int64 tf-aggregate + sort + compress)──►
-         postings(segment, term_hash, df, doc_ids␣Δvarint, tfs␣varint,
-         dls␣varint, block_last/block_max_tf/block_min_dl)
-          [build_postings_from_docs — the DEFAULT one-shuffle RAM-buffer
-           build, the Lucene flush model; memory bound = partition's doc
-           budget, consolidated later by the merge stage]
+  docs ──observe(count, sum dl, max doc_id) during the write──►
+         stats(N, avgdl)                              [tiny, broadcast]
+  docs ──mapInArrow(JVM tokenize+xxhash64 → int64 tf-aggregate + sort +
+         compress)──► postings(segment, term_hash, df, doc_ids␣Δvarint,
+         tfs␣varint, dls␣varint, block_last/block_max_tf/block_min_dl)
+          [build_postings_from_docs — the one posting builder: one
+           RAM-buffer pass per doc-range partition, the Lucene flush
+           model; memory bound = FLUSH_PAIRS, consolidated later by the
+           merge stage]
   postings ──groupBy(term_hash).agg(sum df)──► terms(term_hash, df)
-
-An alternative sort-based two-stage path (tokenize_tf + build_postings:
-explode (doc,term,tf) rows, shuffle on (segment, term), in-JVM spill sort,
-streaming encode) is kept for memory-constrained segments.
 
 Skew: postings are sharded by `segment`, a bounded doc-range bucket — a
 stopword's postings split across every segment (the salt role of the north
@@ -42,11 +39,11 @@ import json
 import math
 import os
 import time
-from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import encode_grouped
@@ -66,6 +63,21 @@ FORMAT_VERSION = 4  # bump on any index layout/schema change
 #     cheaper than string at query time; query terms are hashed
 #     driver-side by the compatible pure-Python XXH64
 #     (functions/hashing.py; collision bound documented there).
+
+# RAM-buffer budget per posting flush, in (doc,term) pairs. Sized for
+# the CACHE tier, not for RAM: the flush kernel is argsort + 5-lane
+# gather over ~28 B/pair, and with all cores sharing one memory system a
+# kernel-shape microbench ran 4.3x faster at 8 procs and scaled 0.92 (vs
+# 0.31) when the working set dropped from 336 MB (12M pairs) to 42
+# MB/proc. Real 450k-doc A/B in matched host windows: group-0 68->20.6 s
+# at 8 cores, 76.5->50.3 s at 2 cores. 750k pairs was tried and is WORSE
+# (group-0 58.7 s vs 24.2 s at 8 cores, same window) — per-flush fixed
+# costs dominate below ~1M pairs. Smaller flushes emit more split
+# posting rows per (segment, term) — readers merge those (disjoint doc
+# ranges; test_tiny_flush_buffer_rank_identical) and the merge stage
+# consolidates, so the trade is fragment count (~2x rows, equal bytes at
+# 450k docs) for cache residency.
+FLUSH_PAIRS = 1_500_000
 
 POSTING_SCHEMA = (
     "segment int, term_hash bigint, df int, doc_ids binary, tfs binary, "
@@ -190,17 +202,15 @@ def build_docs(
     text_col: str = "content",
     doc_id_col: str | None = None,
     num_segments: int = 16,
-    id_partitions: int | None = None,
-    carry_tokens: bool = False,
     keep_text: bool = True,
-) -> tuple[DataFrame, int, int | None]:
+) -> tuple[DataFrame, int]:
     """docs table: doc_id, keys, metadata, sha256(content), dl, segment.
 
     sha256 is the per-row invariant carried through the engine (reference
     analog: the md5 system field, ElasticIndexingStorage.java:404-410).
     Returns (docs, n_docs). The segment is a contiguous doc_id range bucket.
 
-    carry_tokens=True adds a ``_toks`` column (hash_tokens_expr — the
+    The frame also carries a ``_toks`` column (hash_tokens_expr — the
     hashed token array) computed ONCE inside the post-shuffle persisted
     frame, with dl = size(_toks): the posting build then consumes the
     cached arrays instead of re-running the tokenize regex over the full
@@ -210,32 +220,22 @@ def build_docs(
     after sha256/dl/_toks are derived, the payload is dead weight in
     executor memory).
     """
-    total_dl = None
     if doc_id_col is None:
-        if carry_tokens:
-            def _prep(sdf: DataFrame) -> DataFrame:
-                sdf = sdf.withColumn("_toks", hash_tokens_expr(text_col))
-                sdf = sdf.withColumn("dl", F.size("_toks").cast("int"))
-                sdf = sdf.withColumn("sha256", F.sha2(F.col(text_col), 256))
-                return sdf if keep_text else sdf.drop(text_col)
+        def _prep(sdf: DataFrame) -> DataFrame:
+            sdf = sdf.withColumn("_toks", hash_tokens_expr(text_col))
+            sdf = sdf.withColumn("dl", F.size("_toks").cast("int"))
+            sdf = sdf.withColumn("sha256", F.sha2(F.col(text_col), 256))
+            return sdf if keep_text else sdf.drop(text_col)
 
-            with_ids, n_docs, total_dl = assign_doc_ids(
-                corpus, key_cols, id_partitions, post_shuffle=_prep
-            )
-        else:
-            with_ids, n_docs, total_dl = assign_doc_ids(
-                corpus, key_cols, id_partitions, compute_dl=text_col
-            )
+        with_ids, n_docs, _ = assign_doc_ids(
+            corpus, key_cols, post_shuffle=_prep
+        )
     else:
         with_ids = corpus.withColumn(
             "doc_id", F.col(doc_id_col).cast("bigint")
-        )
-        if carry_tokens:
-            with_ids = with_ids.withColumn(
-                "_toks", hash_tokens_expr(text_col)
-            ).withColumn("dl", F.size("_toks").cast("int"))
-        else:
-            with_ids = with_ids.withColumn("dl", token_count_expr(text_col))
+        ).withColumn(
+            "_toks", hash_tokens_expr(text_col)
+        ).withColumn("dl", F.size("_toks").cast("int"))
         n_docs = with_ids.count()
     seg_size = max(1, math.ceil(n_docs / num_segments))
     docs = with_ids
@@ -245,172 +245,10 @@ def build_docs(
         "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
     )
     docs._kbse_sort_cache = getattr(with_ids, "_kbse_sort_cache", None)
-    return docs, n_docs, total_dl
-
-
-def compute_stats(docs: DataFrame) -> dict:
-    row = docs.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("dl").alias("total_dl"),
-        F.max("doc_id").alias("max_doc_id"),
-    ).collect()[0]
-    n = int(row["n_docs"])
-    return {
-        "n_docs": n,
-        "avgdl": (row["total_dl"] or 0) / n if n else 0.0,
-        "total_dl": int(row["total_dl"] or 0),
-        "max_doc_id": int(row["max_doc_id"]) if row["max_doc_id"] is not None else -1,
-    }
-
-
-# ---------------------------------------------------------------- tokens
-
-
-def tokenize_tf(docs: DataFrame, text_col: str = "content") -> DataFrame:
-    """(doc_id, segment, term_hash, tf, dl) — tf aggregated inside the
-    Arrow batch, so the shuffle moves one row per distinct (doc, term),
-    not one per token occurrence (map-side combine before the exchange).
-
-    Tokenize AND hash happen JVM-side (hash_tokens_expr, whole-stage
-    codegen); the Arrow boundary carries int64 hash arrays and Python only
-    does whole-array numpy aggregation — no per-row Python, no per-token
-    Python objects at all (input_hint)."""
-    src = docs.select(
-        "doc_id", "segment", "dl", hash_tokens_expr(text_col).alias("_toks")
-    )
-
-    def explode_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks_list = pdf["_toks"]  # Series of numpy int64 arrays
-            lens = np.fromiter(
-                (len(t) for t in toks_list), dtype=np.int64, count=len(toks_list)
-            )
-            if lens.sum() == 0:
-                continue
-            ridx = np.repeat(
-                np.arange(len(toks_list), dtype=np.int32), lens
-            )
-            flat = np.concatenate([t for t in toks_list if len(t)])
-            # integer-key tf aggregation: factorize the int64 hashes once
-            # (vectorized int hashing), then one np.unique over composite
-            # (row, term) keys — int32-narrowed when the range fits (see
-            # build_postings_from_docs)
-            codes, uniq_hashes = pd.factorize(flat, sort=False)
-            n_uniq = len(uniq_hashes)
-            if len(toks_list) * n_uniq < (1 << 31):
-                key = ridx * np.int32(n_uniq) + codes.astype(
-                    np.int32, copy=False
-                )
-            else:
-                key = ridx.astype(np.int64) * np.int64(n_uniq) + codes
-            ukey, counts = np.unique(key, return_counts=True)
-            rr = (ukey // n_uniq).astype(np.int64)
-            tcode = (ukey % n_uniq).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[rr],
-                    "segment": pdf["segment"].to_numpy()[rr].astype(np.int32),
-                    "term_hash": np.asarray(uniq_hashes, dtype=np.int64)[tcode],
-                    "tf": counts.astype(np.int32),
-                    "dl": pdf["dl"].to_numpy()[rr].astype(np.int32),
-                }
-            )
-
-    return src.mapInPandas(
-        explode_tf,
-        schema="doc_id bigint, segment int, term_hash bigint, tf int, dl int",
-    )
+    return docs, n_docs
 
 
 # ---------------------------------------------------------------- postings
-
-
-def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Encode one sorted run of token rows into posting rows.
-
-    pdf is sorted by (segment, term_hash, doc_id). All arithmetic (group
-    boundaries, delta, varint byte scatter, block maxima) is whole-array;
-    per-group Python is reduced to buffer slicing (codec.encode_grouped).
-    """
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(
-            columns=[
-                "segment", "term_hash", "df", "doc_ids", "tfs", "dls",
-                "block_last", "block_max_tf", "block_min_dl",
-                "block_doc_off", "block_tf_off", "block_dl_off",
-            ]
-        )
-    seg = pdf["segment"].to_numpy()
-    term = pdf["term_hash"].to_numpy()
-    # no uint64 widening — the codec is dtype-native (r5)
-    doc = pdf["doc_id"].to_numpy()
-    tf = pdf["tf"].to_numpy()
-    dl = pdf["dl"].to_numpy()
-    new_group = np.ones(n, dtype=bool)
-    new_group[1:] = (seg[1:] != seg[:-1]) | (term[1:] != term[:-1])
-    starts = np.flatnonzero(new_group)
-    ends = np.append(starts[1:], n)
-
-    enc = encode_grouped(doc, tf, dl, starts, ends, BLOCK_SIZE)
-    return pd.DataFrame(
-        {
-            "segment": seg[starts].astype(np.int32),
-            "term_hash": term[starts].astype(np.int64),
-            "df": (ends - starts).astype(np.int32),
-            "doc_ids": enc["doc_ids"],
-            "tfs": enc["tfs"],
-            "dls": enc["dls"],
-            "block_last": enc["block_last"],
-            "block_max_tf": enc["block_max_tf"],
-            "block_min_dl": enc["block_min_dl"],
-            "block_doc_off": enc["block_doc_off"],
-            "block_tf_off": enc["block_tf_off"],
-            "block_dl_off": enc["block_dl_off"],
-        }
-    )
-
-
-def build_postings(
-    tokens: DataFrame,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Sort-based posting construction (the Lucene-analog merge sort).
-
-    Shuffle key (segment, term) bounds every reducer group by the segment
-    size regardless of term frequency — stopword-skew safe by construction.
-    """
-    spark = tokens.sparkSession
-    nump = shuffle_partitions or spark.sparkContext.defaultParallelism
-
-    arranged = tokens.repartition(
-        nump, "segment", "term_hash"
-    ).sortWithinPartitions("segment", "term_hash", "doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            seg = pdf["segment"].to_numpy()
-            term = pdf["term_hash"].to_numpy()
-            # hold back the (possibly incomplete) trailing group
-            last_seg, last_term = seg[-1], term[-1]
-            tail_start = len(pdf)
-            while tail_start > 0 and seg[tail_start - 1] == last_seg and term[
-                tail_start - 1
-            ] == last_term:
-                tail_start -= 1
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                yield _encode_groups(head)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry)
-
-    return arranged.mapInPandas(encode, schema=POSTING_SCHEMA)
 
 
 _POSTING_PA_SCHEMA = None  # built lazily (pyarrow import at worker use)
@@ -440,21 +278,55 @@ def _posting_pa_schema():
     return _POSTING_PA_SCHEMA
 
 
+def posting_rows(
+    seg: np.ndarray,
+    term: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    dl: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+) -> pd.DataFrame:
+    """Encode posting groups into POSTING_SCHEMA rows.
+
+    doc/tf/dl are the concatenated per-group lanes, sorted by doc within
+    each group; group i is [starts[i], ends[i]) with key (seg[i],
+    term[i]). The build's flush and the segment merge both emit rows
+    through here, so block metadata and lazy-decode byte offsets are
+    always laid out by the same encoder."""
+    enc = encode_grouped(doc, tf, dl, starts, ends, BLOCK_SIZE)
+    return pd.DataFrame(
+        {
+            "segment": seg.astype(np.int32),
+            "term_hash": term.astype(np.int64),
+            "df": (ends - starts).astype(np.int32),
+            "doc_ids": enc["doc_ids"],
+            "tfs": enc["tfs"],
+            "dls": enc["dls"],
+            "block_last": enc["block_last"],
+            "block_max_tf": enc["block_max_tf"],
+            "block_min_dl": enc["block_min_dl"],
+            "block_doc_off": enc["block_doc_off"],
+            "block_tf_off": enc["block_tf_off"],
+            "block_dl_off": enc["block_dl_off"],
+        }
+    )
+
+
 def build_postings_from_docs(
     docs: DataFrame,
     text_col: str = "content",
-    num_partitions: int | None = None,
     pre_partitioned: bool = False,
-    tokens_col: str = "_toks",
 ) -> DataFrame:
     """One-shuffle posting build (the Lucene RAM-buffer flush model).
 
     Raw docs are range-partitioned on (segment, doc_id) — each partition a
-    contiguous doc range — then ONE mapInPandas stage tokenizes, tf-
-    aggregates, groups and compresses. Compared to the two-stage
-    tokenize→shuffle-token-rows→encode plan this moves ~1/2 the bytes
-    (raw text once instead of the exploded (doc,term,tf,dl) stream) and
-    crosses the Arrow boundary twice instead of four times.
+    contiguous doc range — then ONE mapInArrow stage tf-aggregates,
+    groups and compresses. A frame from build_docs already carries the
+    hashed-token arrays (``_toks``) and its doc-range partitioning, so it
+    is consumed as-is; any other frame (a stored docs table on resume, an
+    incremental add) is tokenized JVM-side from text_col after the
+    optional range shuffle (pre_partitioned=True skips it).
 
     Memory: one partition's uncompressed postings (bounded by the doc-range
     budget — at scale, size partitions/segments so this fits the worker;
@@ -463,26 +335,16 @@ def build_postings_from_docs(
     A (segment, term) posting may split across a partition boundary —
     readers merge duplicate term rows (disjoint, ordered doc ranges).
     """
-    spark = docs.sparkSession
-    nump = num_partitions or spark.sparkContext.defaultParallelism
-    if tokens_col in docs.columns:
-        # the assigned frame already carries hashed-token arrays (computed
-        # once, post-shuffle, inside the persisted frame — build_docs
-        # carry_tokens): consume them directly, zero re-tokenization
-        src = docs.select(
-            "doc_id", "segment", "dl", F.col(tokens_col).alias("_toks")
-        )
-        if not pre_partitioned:
-            src = src.repartitionByRange(
-                nump, "segment", "doc_id"
-            ).sortWithinPartitions("segment", "doc_id")
+    if "_toks" in docs.columns:
+        src = docs.select("doc_id", "segment", "dl", "_toks")
     else:
         src = docs.select(
             "doc_id", "segment", "dl", F.col(text_col).alias("_text")
         )
         if not pre_partitioned:
             src = src.repartitionByRange(
-                nump, "segment", "doc_id"
+                docs.sparkSession.sparkContext.defaultParallelism,
+                "segment", "doc_id",
             ).sortWithinPartitions("segment", "doc_id")
         # tokenize AND hash JVM-side (codegen'd regexp + xxhash64
         # transform) AFTER the shuffle — raw text moves over the exchange,
@@ -491,22 +353,7 @@ def build_postings_from_docs(
         src = src.select(
             "doc_id", "segment", "dl", hash_tokens_expr("_text").alias("_toks")
         )
-
-    # RAM-buffer budget per flush, in (doc,term) pairs. Sized for the
-    # CACHE tier, not for RAM: the flush kernel is argsort + 5-lane
-    # gather over ~28 B/pair, and with all cores sharing one memory
-    # system the kernel-shape microbench (tools/flush_scaling_probe.py)
-    # runs 4.3x faster at 8 procs and scales 0.92 (vs 0.31) when the
-    # working set drops from 336 MB (12M pairs) to 42 MB/proc. Real
-    # 450k-doc A/B in matched host windows: group-0 68->20.6 s at 8
-    # cores, 76.5->50.3 s at 2 cores. 750k pairs was tried and is WORSE
-    # (group-0 58.7 s vs 24.2 s at 8 cores, same window) — per-flush
-    # fixed costs dominate below ~1M pairs. Smaller flushes emit more
-    # split posting rows per (segment, term) — readers merge those
-    # (disjoint doc ranges; test_tiny_flush_buffer_rank_identical) and
-    # the merge stage consolidates, so the trade is fragment count
-    # (~2x rows, equal bytes at 450k docs) for cache residency.
-    FLUSH_PAIRS = int(os.environ.get("KBSE_FLUSH_PAIRS", "1500000"))
+    flush_pairs = FLUSH_PAIRS  # read on the driver, shipped in the closure
 
     def _flush(seg_l, doc_l, dl_l, tf_l, code_l):
         seg = np.concatenate(seg_l)
@@ -547,22 +394,8 @@ def build_postings_from_docs(
         # the codec as-is — the three astype(uint64) widening copies this
         # replaces were ~40% of the gathered bytes in a kernel measured
         # AT its DRAM-streaming ceiling (VERDICT r4), pure waste
-        enc = encode_grouped(doc, tf, dl, starts, ends, BLOCK_SIZE)
-        return pd.DataFrame(
-            {
-                "segment": seg[starts].astype(np.int32),
-                "term_hash": codes[starts].astype(np.int64),
-                "df": (ends - starts).astype(np.int32),
-                "doc_ids": enc["doc_ids"],
-                "tfs": enc["tfs"],
-                "dls": enc["dls"],
-                "block_last": enc["block_last"],
-                "block_max_tf": enc["block_max_tf"],
-                "block_min_dl": enc["block_min_dl"],
-                "block_doc_off": enc["block_doc_off"],
-                "block_tf_off": enc["block_tf_off"],
-                "block_dl_off": enc["block_dl_off"],
-            }
+        return posting_rows(
+            seg[starts], codes[starts], doc, tf, dl, starts, ends
         )
 
     def build(batches):
@@ -627,7 +460,7 @@ def build_postings_from_docs(
             tf_l.append(counts.astype(np.int32))
             code_l.append(np.asarray(uniq_hashes, dtype=np.int64)[tcode])
             pending += len(ukey)
-            if pending >= FLUSH_PAIRS:
+            if pending >= flush_pairs:
                 # RAM-buffer flush (Lucene-style): emit a sub-range of the
                 # partition as posting rows; readers merge split rows
                 yield pa.RecordBatch.from_pandas(
@@ -659,6 +492,20 @@ def build_terms(postings: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------- full build
+
+
+def require_exactly_once_metrics(spark: SparkSession) -> None:
+    """Refuse speculative execution. Build and mutation metrics come from
+    Dataset.observe inside the writes, which counts every successful task
+    attempt — exactly once only when no task runs twice (stage-retry
+    reruns cannot happen in local mode; speculation would add duplicates).
+    """
+    if spark.conf.get("spark.speculation", "false").lower() == "true":
+        raise ValueError(
+            "spark.speculation must be off: build and mutation metrics "
+            "are observed during writes, and speculative duplicate tasks "
+            "would be counted twice"
+        )
 
 
 class IndexBuilder:
@@ -729,24 +576,17 @@ class IndexBuilder:
         corpus instead of re-reading stored docs (deterministic ids).
         """
         spark = self.spark
+        require_exactly_once_metrics(spark)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         t_all = time.time()
-        # observe()-based write metrics are exactly-once only when no task
-        # is executed twice successfully — rule out speculative duplicates
-        # (stage-retry reruns are already impossible in local mode, and
-        # the legacy agg re-read stays as the fallback)
-        use_observe = (
-            spark.conf.get("spark.speculation", "false").lower() != "true"
-        )
 
         docs_path = os.path.join(self.index_dir, "docs")
         cached_docs = None
-        docs_write_task = None
         if not (resume and self.has_marker("docs")):
             t0 = time.time()
-            docs, n_docs, total_dl = build_docs(
+            docs, n_docs = build_docs(
                 corpus, key_cols, text_col, doc_id_col, self.num_segments,
-                carry_tokens=True, keep_text=store_text,
+                keep_text=store_text,
             )
             # keep the assigned frame: it is already range-partitioned in
             # doc_id order AND carries the hashed-token arrays, so the
@@ -757,76 +597,57 @@ class IndexBuilder:
                 c for c in cached_docs.columns
                 if c not in ("_toks", "doc_id", "sha256", "segment")
             ]
-            to_store = cached_docs.select(*base, "doc_id", "sha256", "segment")
-            doc_obs = None
-            if total_dl is None and use_observe:
-                # stats fall out of the docs write itself — no separate
-                # compute_stats aggregation job (guide §1.2: don't compute
-                # things twice)
-                from pyspark.sql import Observation
-
-                doc_obs = Observation()
-                to_store = to_store.observe(
-                    doc_obs,
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("dl").alias("total_dl"),
-                    F.max("doc_id").alias("max_doc_id"),
-                )
-
-            def docs_write_task(
-                _to_store=to_store, _n_docs=n_docs,
-                _total_dl=total_dl, _obs=doc_obs, _t0=t0,
-            ):
-                spark.sparkContext.setJobDescription("index build: docs table")
-                _to_store.write.mode("overwrite").partitionBy(
-                    "segment"
-                ).parquet(docs_path)
-                if _n_docs == 0:
-                    # a zero-row partitionBy write emits NO files — leave a
-                    # schema-bearing empty partition so every reader (and
-                    # the first incremental add) still infers the layout
-                    _to_store.drop("segment").limit(0).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(docs_path, "segment=-1"))
-                if _total_dl is not None:
-                    st = {"n_docs": _n_docs,
-                          "avgdl": _total_dl / _n_docs if _n_docs else 0.0,
-                          "total_dl": int(_total_dl),
-                          "max_doc_id": _n_docs - 1}
-                elif _obs is not None:
-                    m = _obs.get
-                    nd = int(m["n_docs"] or 0)
-                    st = {"n_docs": nd,
-                          "avgdl": (m["total_dl"] or 0) / nd if nd else 0.0,
-                          "total_dl": int(m["total_dl"] or 0),
-                          "max_doc_id": int(m["max_doc_id"])
-                          if m["max_doc_id"] is not None else -1}
-                else:
-                    st = compute_stats(cached_docs)
-                st["num_segments"] = self.num_segments
-                st["seg_size"] = max(
-                    1, math.ceil(st["n_docs"] / self.num_segments)
-                )
-                st["k1"], st["b"] = 1.2, 0.75
-                st["format_version"] = FORMAT_VERSION
-                with open(os.path.join(self.index_dir, "stats.json"), "w") as f:
-                    json.dump(st, f)
-                self.write_marker(
-                    "docs", {"rows": st["n_docs"], "seconds": time.time() - _t0}
-                )
-                return st
-
-            # the posting groups only need seg_size, which is a pure
-            # function of n_docs — the docs write itself can run
-            # CONCURRENTLY with them (guide §2.6: overlap independent
-            # jobs; both read the same persisted frame, and resume
-            # markers stay ordered per artifact)
-            stats = {"n_docs": n_docs}
-            seg_size = max(1, math.ceil(n_docs / self.num_segments))
+            # stats fall out of the docs write itself — no separate
+            # aggregation job (guide §1.2: don't compute things twice)
+            doc_obs = Observation()
+            to_store = cached_docs.select(
+                *base, "doc_id", "sha256", "segment"
+            ).observe(
+                doc_obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("dl").alias("total_dl"),
+                F.max("doc_id").alias("max_doc_id"),
+            )
+            # docs write FIRST, serially: that pass materializes the
+            # shared persisted frame (one computation, no cold-cache
+            # race); the posting groups then run over the warm cache
+            spark.sparkContext.setJobDescription("index build: docs table")
+            to_store.write.mode("overwrite").partitionBy("segment").parquet(
+                docs_path
+            )
+            if n_docs == 0:
+                # a zero-row partitionBy write emits NO files — leave a
+                # schema-bearing empty partition so every reader (and
+                # the first incremental add) still infers the layout
+                to_store.drop("segment").limit(0).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(docs_path, "segment=-1"))
+            m = doc_obs.get
+            nd = int(m["n_docs"] or 0)
+            stats = {
+                "n_docs": nd,
+                "avgdl": (m["total_dl"] or 0) / nd if nd else 0.0,
+                "total_dl": int(m["total_dl"] or 0),
+                "max_doc_id": int(m["max_doc_id"])
+                if m["max_doc_id"] is not None else -1,
+                "num_segments": self.num_segments,
+                "seg_size": max(1, math.ceil(nd / self.num_segments)),
+                "k1": 1.2,
+                "b": 0.75,
+                "format_version": FORMAT_VERSION,
+            }
+            with open(os.path.join(self.index_dir, "stats.json"), "w") as f:
+                json.dump(stats, f)
+            self.write_marker(
+                "docs", {"rows": nd, "seconds": time.time() - t0}
+            )
+            sort_cache = getattr(cached_docs, "_kbse_sort_cache", None)
+            if sort_cache is not None:
+                sort_cache.unpersist()  # raw-corpus copy, dead now
         else:
             with open(os.path.join(self.index_dir, "stats.json")) as f:
                 stats = json.load(f)
-            seg_size = stats["seg_size"]
+        seg_size = stats["seg_size"]
 
         docs_df = cached_docs
         if docs_df is None:
@@ -836,9 +657,9 @@ class IndexBuilder:
             else:
                 # store_text=False resume: re-derive the assigned frame
                 # from the corpus (doc_id = sort rank — deterministic)
-                docs, _, _ = build_docs(
+                docs, _ = build_docs(
                     corpus, key_cols, text_col, doc_id_col, self.num_segments,
-                    carry_tokens=True, keep_text=False,
+                    keep_text=False,
                 )
                 cached_docs = docs.persist()
                 docs_df = cached_docs
@@ -865,19 +686,13 @@ class IndexBuilder:
                 part, text_col, pre_partitioned=cached_docs is not None
             )
             # marker metrics observed DURING the write (one job instead of
-            # write + column-pruned re-read; exactly-once under the
-            # use_observe guard above)
-            obs = None
-            if use_observe:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                postings = postings.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum("df").alias("postings"),
-                )
-            postings.write.mode("overwrite").partitionBy("segment").parquet(
+            # write + re-read)
+            obs = Observation()
+            postings.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum("df").alias("postings"),
+            ).write.mode("overwrite").partitionBy("segment").parquet(
                 postings_path
             )
             if not any(
@@ -891,18 +706,7 @@ class IndexBuilder:
                 ).write.mode("overwrite").parquet(
                     os.path.join(postings_path, "segment=-1")
                 )
-            if obs is not None:
-                m = obs.get
-            else:
-                # fallback: column-pruned (segment, df) re-read — never
-                # re-decodes the posting payload bytes it just wrote
-                m = (
-                    spark.read.parquet(postings_path)
-                    .where(F.col("segment").isin([int(s) for s in segs]))
-                    .agg(F.count("*").alias("rows"),
-                         F.sum("df").alias("postings"))
-                    .collect()[0]
-                )
+            m = obs.get
             nbytes = 0
             for s in segs:
                 seg_dir = os.path.join(postings_path, f"segment={s}")
@@ -928,38 +732,19 @@ class IndexBuilder:
             for gi, segs in enumerate(groups)
             if not (resume and self.has_marker(f"group-{gi}"))
         ]
-        if max_groups is not None:
-            # fault-injection path (resume tests): serial, deterministic
-            if docs_write_task is not None:
-                stats = docs_write_task()
-                sc_cache = getattr(docs_df, "_kbse_sort_cache", None)
-                if sc_cache is not None:
-                    sc_cache.unpersist()
-            for built, (gi, segs) in enumerate(pending):
-                if built >= max_groups:
-                    raise RuntimeError("fault injection: killed mid-build")
-                build_group(gi, segs)
-        elif docs_write_task is not None or pending:
-            # docs write FIRST, serially: that pass materializes the shared
-            # persisted frame (one computation, no cold-cache race); the
-            # posting groups then run CONCURRENTLY over the warm cache.
-            if docs_write_task is not None:
-                stats = docs_write_task()
-                sort_cache = getattr(docs_df, "_kbse_sort_cache", None)
-                if sort_cache is not None:
-                    sort_cache.unpersist()  # raw-corpus copy, dead now
-            if len(pending) == 1:
-                build_group(*pending[0])
-            elif pending:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(len(pending), 8)
-                ) as ex:
-                    futures = [ex.submit(build_group, gi, segs)
-                               for gi, segs in pending]
-                    for f in futures:
-                        f.result()  # surface the first failure
+        # max_groups: commit only that many, then die like a killed build
+        cut = len(pending) if max_groups is None else max_groups
+        run = pending[:cut]
+        if len(run) == 1:
+            build_group(*run[0])
+        elif run:
+            with ThreadPoolExecutor(max_workers=min(len(run), 8)) as ex:
+                futures = [ex.submit(build_group, gi, segs)
+                           for gi, segs in run]
+                for f in futures:
+                    f.result()  # surface the first failure
+        if len(pending) > cut:
+            raise RuntimeError("fault injection: killed mid-build")
 
         if not (resume and self.has_marker("terms")):
             t0 = time.time()

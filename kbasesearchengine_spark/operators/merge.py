@@ -20,8 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.codec import delta_decode, encode_grouped, varint_decode
-from .indexer import BLOCK_SIZE, POSTING_SCHEMA
+from ..functions.codec import delta_decode, varint_decode
+from .indexer import POSTING_SCHEMA, posting_rows
 
 
 def merge_postings(
@@ -59,29 +59,11 @@ def merge_postings(
         tfs = np.concatenate([p[1] for p in parts]).astype(np.uint64)
         dls = np.concatenate([p[2] for p in parts]).astype(np.uint64)
         assert np.all(np.diff(ids.astype(np.int64)) > 0), "overlapping segments"
-        n = len(ids)
-        # re-encode through the SAME batch encoder the build uses — block
+        # re-encode through the SAME encoder the build flush uses — block
         # metadata AND lazy-decode byte offsets rebuilt consistently
-        enc = encode_grouped(
-            ids, tfs, dls,
-            np.array([0], dtype=np.int64), np.array([n], dtype=np.int64),
-            BLOCK_SIZE,
-        )
-        return pd.DataFrame(
-            {
-                "segment": [new_seg],
-                "term_hash": [term],
-                "df": [n],
-                "doc_ids": enc["doc_ids"],
-                "tfs": enc["tfs"],
-                "dls": enc["dls"],
-                "block_last": enc["block_last"],
-                "block_max_tf": enc["block_max_tf"],
-                "block_min_dl": enc["block_min_dl"],
-                "block_doc_off": enc["block_doc_off"],
-                "block_tf_off": enc["block_tf_off"],
-                "block_dl_off": enc["block_dl_off"],
-            }
+        return posting_rows(
+            np.array([new_seg]), np.array([term]), ids, tfs, dls,
+            np.array([0]), np.array([len(ids)]),
         )
 
     merged = remapped.groupBy("new_segment", "term_hash").applyInPandas(
@@ -114,7 +96,6 @@ def apply_merge(
     At 100 TB this is the Lucene background-merge analog: many small
     incremental segments -> few big ones, bounded I/O per merge round.
     """
-    import json
     import os
     import shutil
 

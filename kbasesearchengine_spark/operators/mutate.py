@@ -20,10 +20,10 @@ import hashlib
 import os
 import shutil
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexBuilder
+from .indexer import IndexBuilder, require_exactly_once_metrics
 
 
 def update_docs_fields(
@@ -38,6 +38,7 @@ def update_docs_fields(
     (null outside the match set); existing columns keep their old value
     outside the match set. Returns {updated_rows, updated_segments}.
     """
+    require_exactly_once_metrics(spark)
     docs_path = os.path.join(index_dir, "docs")
     docs = spark.read.parquet(docs_path)
 
@@ -65,20 +66,13 @@ def update_docs_fields(
             )
         else:
             new_cols[col] = F.when(predicate, expr).alias(col)
-    src = part
-    obs = None
-    if spark.conf.get("spark.speculation", "false").lower() != "true":
-        # matched-row count observed during the staging write — the
-        # former separate count job is pure overhead (same exactly-once
-        # guard as the index build's observe metrics)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        src = part.observe(
-            obs,
-            F.sum(F.when(predicate, 1).otherwise(0)).cast("bigint")
-            .alias("n"),
-        )
+    # matched-row count observed during the staging write — no separate
+    # count job (exactly-once under the same gate as the index build)
+    obs = Observation()
+    src = part.observe(
+        obs,
+        F.sum(F.when(predicate, 1).otherwise(0)).cast("bigint").alias("n"),
+    )
     updated = src.select(
         *[new_cols.pop(c) if c in new_cols else F.col(c)
           for c in part.columns],
@@ -94,7 +88,7 @@ def update_docs_fields(
     # mutation is idempotent either way.
     tmp = os.path.join(index_dir, "_update_tmp")
     updated.write.mode("overwrite").partitionBy("segment").parquet(tmp)
-    n = int(obs.get["n"] or 0) if obs is not None else None
+    n = int(obs.get["n"] or 0)
     for entry in os.scandir(tmp):
         if entry.is_dir() and entry.name.startswith("segment="):
             dst = os.path.join(docs_path, entry.name)
@@ -102,8 +96,6 @@ def update_docs_fields(
                 shutil.rmtree(dst)
             shutil.move(entry.path, dst)
     shutil.rmtree(tmp, ignore_errors=True)
-    if n is None:
-        n = part.where(predicate).count()
 
     # marker name must be stable ACROSS processes (idempotence protocol:
     # md5, not Python's per-process-salted hash()) yet UNIQUE per logical

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -114,38 +113,35 @@ class InvertedIndex:
         The ≤ terms×batches hits are summed driver-side. Falls back to
         the former exchange-free Spark scan when the directory is not
         readable through pyarrow (non-local index stores)."""
-        hashes = {term_hash(t): t for t in terms}
-        out: dict[str, int] = {}
-        try:
-            import pyarrow.dataset as pads
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
-            dset = pads.dataset(
+        hashes = {term_hash(t): t for t in terms}
+        try:
+            tbl = pads.dataset(
                 os.path.join(self.index_dir, "terms"),
                 format="parquet",
                 partitioning="hive",
-            )
-            tbl = dset.to_table(
+            ).to_table(
                 columns=["term_hash", "df"],
                 filter=pads.field("term_hash").isin(list(hashes)),
             )
-            for h, d in zip(
+            hits = zip(
                 tbl.column("term_hash").to_pylist(),
                 tbl.column("df").to_pylist(),
-            ):
-                t = hashes[h]
-                out[t] = out.get(t, 0) + int(d)
-            return out
-        except Exception:
-            out = {}
-        rows = (
-            self._tbl("terms")
-            .where(F.col("term_hash").isin(list(hashes)))
-            .select("term_hash", "df")
-            .collect()
-        )
-        for r in rows:
-            t = hashes[r["term_hash"]]
-            out[t] = out.get(t, 0) + int(r["df"])
+            )
+        except (OSError, pa.lib.ArrowInvalid):
+            rows = (
+                self._tbl("terms")
+                .where(F.col("term_hash").isin(list(hashes)))
+                .select("term_hash", "df")
+                .collect()
+            )
+            hits = ((r["term_hash"], r["df"]) for r in rows)
+        out: dict[str, int] = {}
+        for h, d in hits:
+            t = hashes[h]
+            out[t] = out.get(t, 0) + int(d)
         return out
 
     def field_index(self, field: str) -> "InvertedIndex":
@@ -374,6 +370,38 @@ def _segment_topk_kernel(
 FILTER_CANDIDATE_MAX = 2_000_000
 
 
+def _segment_scorer(
+    idfs: dict[int, float],
+    avgdl: float,
+    k: int | None,
+    mode: str,
+    scores: bool,
+    cogroup: bool = False,
+):
+    """The per-segment scoring closure every query plan ships to its
+    tasks. PySpark picks the call shape from the closure's arity, so it
+    comes in two: ``f(postings)`` for groupBy(segment).applyInPandas, and
+    with cogroup=True ``f(postings, allowed_docs)`` for the doc-filter
+    cogroup. The query state is a few dozen bytes and rides in the task
+    closure — a sc.broadcast here paid a driver round trip per query for
+    nothing."""
+    if not cogroup:
+        def score(pdf: pd.DataFrame) -> pd.DataFrame:
+            return _segment_topk_kernel(
+                pdf, idfs, avgdl, k, mode, scores=scores
+            )
+
+        return score
+
+    def score_allowed(pdf: pd.DataFrame, docs: pd.DataFrame) -> pd.DataFrame:
+        allowed = np.sort(docs["doc_id"].to_numpy(dtype=np.int64))
+        return _segment_topk_kernel(
+            pdf, idfs, avgdl, k, mode, allowed, scores=scores
+        )
+
+    return score_allowed
+
+
 def topk(
     index: InvertedIndex,
     query: str,
@@ -436,17 +464,11 @@ def topk(
             F.col("term_hash").isin(qhashes)
         ).select("segment", "term_hash", "doc_ids", "block_last",
                  "block_doc_off")
-        bc_value = (qhashes, k, mode)
-
-        def score_matchonly(pdf: pd.DataFrame) -> pd.DataFrame:
-            qh, k_, mode_ = bc_value
-            idfs_ = {h: 0.0 for h in qh}
-            return _segment_topk_kernel(
-                pdf, idfs_, 0.0, k_, mode_, scores=False
-            )
-
+        score = _segment_scorer(
+            {h: 0.0 for h in qhashes}, 0.0, k, mode, scores=False
+        )
         return postings_q.groupBy("segment").applyInPandas(
-            score_matchonly, schema=out_schema
+            score, schema=out_schema
         )
 
     # ---- scored and/or filtered path: idf needs the global df, and the
@@ -471,10 +493,6 @@ def topk(
         F.col("term_hash").isin(list(idfs.keys()))
     )
 
-    # a few dozen bytes of query state: ship it in the task closure —
-    # a sc.broadcast here paid a driver round trip per query for nothing
-    bc_value = (idfs, avgdl, k, mode, scores)
-
     if doc_filter is not None:
         # candidate bound from the term dictionary (already in hand — no
         # extra job): AND intersection ≤ the rarest term's df; OR union ≤
@@ -491,14 +509,9 @@ def topk(
             # predicate pushes to parquet; the only exchange is the
             # candidate broadcast — thousands of rows, never the ~10^11
             # docs a low-selectivity predicate passes.
-            def score_nofilter(pdf: pd.DataFrame) -> pd.DataFrame:
-                idfs_, avgdl_, _k, mode_, scores_ = bc_value
-                return _segment_topk_kernel(
-                    pdf, idfs_, avgdl_, None, mode_, scores=scores_
-                )
-
             cand = postings_q.groupBy("segment").applyInPandas(
-                score_nofilter, schema=out_schema
+                _segment_scorer(idfs, avgdl, None, mode, scores),
+                schema=out_schema,
             )
             scored = index.docs.where(doc_filter).select("doc_id").join(
                 F.broadcast(cand), "doc_id"
@@ -509,32 +522,18 @@ def topk(
             allowed_docs = index.docs.where(doc_filter).select(
                 "segment", "doc_id"
             )
-
-            def score_cogroup(
-                p_pdf: pd.DataFrame, d_pdf: pd.DataFrame
-            ) -> pd.DataFrame:
-                idfs_, avgdl_, k_, mode_, scores_ = bc_value
-                allowed = np.sort(d_pdf["doc_id"].to_numpy(dtype=np.int64))
-                return _segment_topk_kernel(
-                    p_pdf, idfs_, avgdl_, k_, mode_, allowed,
-                    scores=scores_,
-                )
-
             scored = (
                 postings_q.groupBy("segment")
                 .cogroup(allowed_docs.groupBy("segment"))
-                .applyInPandas(score_cogroup, schema=out_schema)
+                .applyInPandas(
+                    _segment_scorer(idfs, avgdl, k, mode, scores,
+                                    cogroup=True),
+                    schema=out_schema,
+                )
             )
     else:
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            idfs_, avgdl_, k_, mode_, scores_ = bc_value
-            return _segment_topk_kernel(
-                pdf, idfs_, avgdl_, k_, mode_, scores=scores_
-            )
-
         scored = postings_q.groupBy("segment").applyInPandas(
-            score_group, schema=out_schema
+            _segment_scorer(idfs, avgdl, k, mode, scores), schema=out_schema
         )
 
     if k is None:

@@ -10,7 +10,7 @@ from kbasesearchengine_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kbse-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("kbse-tests")
     yield s
 
 

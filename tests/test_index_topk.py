@@ -150,16 +150,18 @@ def test_doc_id_offsets_broadcast_path_identical(spark, monkeypatch):
 
 
 def test_tiny_flush_buffer_rank_identical(spark, monkeypatch, tmp_path):
-    """KBSE_FLUSH_PAIRS bounds the flush kernel's working set (sized for
+    """FLUSH_PAIRS bounds the flush kernel's working set (sized for
     the cache tier — see indexer.build_postings_from_docs). A tiny budget
     forces MANY flushes per partition, so every common term's posting
     splits into fragment rows; readers must merge them back to results
     identical to the shared (single-flush) index."""
+    from kbasesearchengine_spark.operators import indexer as ix
+
     corpus = generate_corpus(spark, 400, parallelism=4)
     # a flush can only trigger BETWEEN Arrow batches — shrink the batch
     # so each build partition spans several, then every batch overflows
     # the 100-pair budget and flushes
-    monkeypatch.setenv("KBSE_FLUSH_PAIRS", "100")
+    monkeypatch.setattr(ix, "FLUSH_PAIRS", 100)
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_batch = spark.conf.get(batch_key, None)
     spark.conf.set(batch_key, "4")
@@ -173,7 +175,7 @@ def test_tiny_flush_buffer_rank_identical(spark, monkeypatch, tmp_path):
             spark.conf.unset(batch_key)
         else:
             spark.conf.set(batch_key, old_batch)
-    monkeypatch.delenv("KBSE_FLUSH_PAIRS")
+    monkeypatch.undo()  # default budget for the reference build
     ref_dir = str(tmp_path / "ref_idx")
     IndexBuilder(spark, ref_dir, num_segments=4, segments_per_commit=4).build(
         corpus, key_cols=["repo", "path", "commit"]

@@ -7,7 +7,11 @@ import os
 import pytest
 
 from kbasesearchengine_spark.corpus import generate_corpus
-from kbasesearchengine_spark.operators.indexer import IndexBuilder
+from kbasesearchengine_spark.operators.indexer import (
+    IndexBuilder,
+    require_exactly_once_metrics,
+)
+from kbasesearchengine_spark.operators.mutate import update_docs_fields
 from kbasesearchengine_spark.operators.topk import InvertedIndex
 
 N_ROWS = 400
@@ -102,3 +106,33 @@ def test_lineage_metrics_recorded(spark, tmp_path):
         assert m["postings"] > 0
     docs_m = json.load(open(os.path.join(lineage, "docs.json")))
     assert docs_m["rows"] == 200
+
+
+class _StubSpark:
+    """Just enough session for the gate: spark.speculation cannot be
+    changed on a running session, so the conf is a dict."""
+
+    def __init__(self, conf):
+        self._conf = conf
+        self.conf = self
+
+    def get(self, key, default=None):
+        return self._conf.get(key, default)
+
+
+def test_speculation_gate(tmp_path):
+    """observe() metrics (build markers, stats.json, mutation counts) are
+    exactly-once only without speculative task duplicates: the build and
+    update-by-query refuse to run with speculation on, before any I/O."""
+    for on in ("true", "TRUE"):
+        with pytest.raises(ValueError, match="spark.speculation"):
+            require_exactly_once_metrics(_StubSpark({"spark.speculation": on}))
+    require_exactly_once_metrics(_StubSpark({}))
+    require_exactly_once_metrics(_StubSpark({"spark.speculation": "false"}))
+
+    on = _StubSpark({"spark.speculation": "true"})
+    with pytest.raises(ValueError, match="spark.speculation"):
+        IndexBuilder(on, str(tmp_path / "idx")).build(None, ["doc_id"])
+    with pytest.raises(ValueError, match="spark.speculation"):
+        update_docs_fields(on, str(tmp_path / "idx"), None, {"x": 1})
+    assert not os.listdir(tmp_path)

@@ -5,6 +5,7 @@ hash-sorted so row-group statistics can prune the point lookup."""
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from kbasesearchengine_spark.corpus import generate_corpus
@@ -65,3 +66,30 @@ def test_terms_files_hash_sorted(shared_index_dir):
             assert col == sorted(col)
             checked += 1
     assert checked > 0
+
+
+def test_spark_fallback_matches_pyarrow(spark, shared_index_dir, monkeypatch):
+    """A terms store pyarrow cannot open (OSError) takes the Spark scan,
+    which must return the same dfs; any other error in the pyarrow
+    lookup is a defect and must surface, not fall back."""
+    import pyarrow.dataset as pads
+
+    index = InvertedIndex(spark, shared_index_dir)
+    terms = ["parser", "http", "license", "rfah", "no_such_token_xyz"]
+    want = index.term_dfs(terms)
+    calls = []
+
+    def unreadable(*args, **kwargs):
+        calls.append(args)
+        raise OSError("terms store not readable through pyarrow")
+
+    monkeypatch.setattr(pads, "dataset", unreadable)
+    assert index.term_dfs(terms) == want
+    assert calls  # the pyarrow path was tried first
+
+    def broken(*args, **kwargs):
+        raise TypeError("defect in the lookup")
+
+    monkeypatch.setattr(pads, "dataset", broken)
+    with pytest.raises(TypeError):
+        index.term_dfs(terms)
