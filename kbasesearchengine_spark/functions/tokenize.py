@@ -12,11 +12,10 @@ word characters on lowered text, suited to code-like corpora.
 Exposed four ways:
  - ``tokenize_py``      pure-Python (oracle + unit tests)
  - ``tokenize_expr`` /
-   ``hash_tokens_expr`` /
-   ``token_count_expr`` JVM Catalyst expressions (regexp_extract_all /
-                        regexp_count — the hot path: whole-stage codegen,
-                        no Python worker; equivalence with tokenize_py
-                        asserted in pytest)
+   ``hash_tokens_expr`` JVM Catalyst expressions (regexp_extract_all —
+                        the hot path: whole-stage codegen, no Python
+                        worker; equivalence with tokenize_py asserted in
+                        pytest)
  - ``tokenize_udf``     scalar pandas UDF -> array<string> (legacy/interop)
  - ``SQL_TOKENIZE``     the equivalent DuckDB/ANSI expression (oracle SQL)
 """
@@ -69,16 +68,6 @@ def hash_tokens_expr(col) -> "F.Column":
     bottleneck). Query terms are hashed driver-side with the compatible
     pure-Python XXH64 (functions/hashing.py)."""
     return F.transform(tokenize_expr(col), lambda t: F.xxhash64(t))
-
-
-def token_count_expr(col) -> "F.Column":
-    """JVM-side doc length (dl): regexp_count of the token pattern — no
-    array materialization at all (0.7s vs 31s for size(split(...)) on the
-    same 177 MB)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(
-        F.lower(F.coalesce(c, F.lit(""))), F.lit(TOKEN_PATTERN)
-    ).cast("int")
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))

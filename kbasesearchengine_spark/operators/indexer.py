@@ -8,10 +8,11 @@ single batch DAG, per SURVEY.md §3.2).
 
 Physical design (built for 100 TB):
 
-  corpus ──assign_doc_ids──► docs(doc_id, keys…, lang, sha256, dl, segment)
-          (dense, partition-invariant: doc_id = rank over sorted keys)
-  docs ──observe(count, sum dl, max doc_id) during the write──►
-         stats(N, avgdl)                              [tiny, broadcast]
+  corpus ──build_docs──► docs(doc_id, keys…, lang, sha256, dl, _toks)
+          (dense, partition-invariant: doc_id = rank over sorted keys;
+           tokenized and hashed once, inside the persisted sort)
+  docs ──write_docs: + segment, observe(count, sum dl, max doc_id)
+         during the write──► docs/, stats(N, avgdl)   [tiny, broadcast]
   docs ──mapInArrow(JVM tokenize+xxhash64 → int64 tf-aggregate + sort +
          compress)──► postings(segment, term_hash, df, doc_ids␣Δvarint,
          tfs␣varint, dls␣varint, block_last/block_max_tf/block_min_dl)
@@ -19,7 +20,8 @@ Physical design (built for 100 TB):
            RAM-buffer pass per doc-range partition, the Lucene flush
            model; memory bound = FLUSH_PAIRS, consolidated later by the
            merge stage]
-  postings ──groupBy(term_hash).agg(sum df)──► terms(term_hash, df)
+  postings ──write_terms: groupBy(term_hash).agg(sum df)──►
+         terms(term_hash, df), one batch partition per write
 
 Skew: postings are sharded by `segment`, a bounded doc-range bucket — a
 stopword's postings split across every segment (the salt role of the north
@@ -27,15 +29,18 @@ rule's "salted repartitioning by term-hash"); no single task ever holds
 more than one doc-range of one term. tf is pre-aggregated inside the Arrow
 batch (map-side combine) before anything shuffles.
 
+The incremental add runs the same docs phase and the same docs and terms
+writers, on doc ids offset past the committed ones.
+
 Resume: segments are built in groups; each group is committed with a
 dynamic-partition-overwrite (idempotent) followed by a lineage marker with
 metrics. A killed build reruns only unmarked groups (north rule:
-per-partition lineage + metrics checkpoints).
+per-partition lineage + metrics checkpoints). The on-disk layout, stats
+and markers are read and written through operators/store.py.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import time
@@ -47,7 +52,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import encode_grouped
-from ..functions.tokenize import hash_tokens_expr, token_count_expr
+from ..functions.tokenize import hash_tokens_expr
+from . import store
 
 BLOCK_SIZE = 128  # postings per block-max block
 _OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
@@ -94,9 +100,8 @@ def assign_doc_ids(
     df: DataFrame,
     key_cols: list[str],
     num_partitions: int | None = None,
-    compute_dl: str | None = None,
     post_shuffle=None,
-) -> tuple[DataFrame, int, int | None]:
+) -> tuple[DataFrame, int, DataFrame]:
     """Dense doc_id = rank of row under ORDER BY key_cols (unique keys).
 
     Partition-count-invariant (FIXTURES.md §1): the id is the global sort
@@ -107,9 +112,10 @@ def assign_doc_ids(
     within-partition sequence (lower 33 bits — rows flow in sorted order,
     so the sequence IS the partition-local rank). No Arrow crossing, no
     per-row Python, no driver collect of data rows. Returns
-    (df_with_doc_id, n_rows, total_dl) — count and (with compute_dl or a
-    post_shuffle hook that adds a ``dl`` column) total token count fall
-    out of the offset pass.
+    (df_with_doc_id, n_rows, sort_cache): the count falls out of the
+    offset pass; sort_cache is the persisted sorted frame the result
+    reads from, for the caller to unpersist once its own frame is
+    materialized (it is a full raw-corpus copy in executor memory).
 
     post_shuffle: optional DataFrame->DataFrame hook applied AFTER the
     range shuffle and INSIDE the persisted frame — expensive derived
@@ -125,20 +131,9 @@ def assign_doc_ids(
     )
     if post_shuffle is not None:
         sorted_df = post_shuffle(sorted_df)
-    elif compute_dl:
-        # dl computed AFTER the range shuffle (see post_shuffle note).
-        # JVM regexp_count (codegen) — no Python worker in this pass.
-        sorted_df = sorted_df.withColumn("dl", token_count_expr(compute_dl))
-    want_dl = bool(compute_dl) or (
-        post_shuffle is not None and "dl" in sorted_df.columns
-    )
     sorted_df = sorted_df.withColumn("_pid", F.spark_partition_id()).persist()
-    aggs = [F.count("*").alias("cnt")]
-    if want_dl:
-        aggs.append(F.sum("dl").alias("sdl"))
-    rows = sorted_df.groupBy("_pid").agg(*aggs).collect()
+    rows = sorted_df.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     counts = {r["_pid"]: r["cnt"] for r in rows}
-    total_dl = sum(int(r["sdl"] or 0) for r in rows) if want_dl else None
     offsets, acc = {}, 0
     for pid in range(max(counts) + 1 if counts else 0):
         offsets[pid] = acc
@@ -186,11 +181,7 @@ def assign_doc_ids(
             sorted_df.join(F.broadcast(off_df), "_pid")
             .select(*keep, (F.col("_off") + seq).alias("doc_id"))
         )
-    # expose the persisted sort cache so the caller can unpersist it once
-    # the downstream frame is materialized (it's a full raw-corpus copy in
-    # executor memory — dead weight after the first pass)
-    result._kbse_sort_cache = sorted_df
-    return result, acc, total_dl
+    return result, acc, sorted_df
 
 
 # ---------------------------------------------------------------- docs/stats
@@ -201,14 +192,14 @@ def build_docs(
     key_cols: list[str],
     text_col: str = "content",
     doc_id_col: str | None = None,
-    num_segments: int = 16,
     keep_text: bool = True,
-) -> tuple[DataFrame, int]:
-    """docs table: doc_id, keys, metadata, sha256(content), dl, segment.
+) -> tuple[DataFrame, int, DataFrame | None]:
+    """docs frame: doc_id, keys, metadata, sha256(content), dl, _toks.
 
     sha256 is the per-row invariant carried through the engine (reference
     analog: the md5 system field, ElasticIndexingStorage.java:404-410).
-    Returns (docs, n_docs). The segment is a contiguous doc_id range bucket.
+    Returns (docs, n_docs, sort_cache): the sort cache (None when
+    doc_id_col supplies the ids) is for write_docs to release.
 
     The frame also carries a ``_toks`` column (hash_tokens_expr — the
     hashed token array) computed ONCE inside the post-shuffle persisted
@@ -227,25 +218,64 @@ def build_docs(
             sdf = sdf.withColumn("sha256", F.sha2(F.col(text_col), 256))
             return sdf if keep_text else sdf.drop(text_col)
 
-        with_ids, n_docs, _ = assign_doc_ids(
-            corpus, key_cols, post_shuffle=_prep
-        )
-    else:
-        with_ids = corpus.withColumn(
-            "doc_id", F.col(doc_id_col).cast("bigint")
-        ).withColumn(
-            "_toks", hash_tokens_expr(text_col)
-        ).withColumn("dl", F.size("_toks").cast("int"))
-        n_docs = with_ids.count()
-    seg_size = max(1, math.ceil(n_docs / num_segments))
-    docs = with_ids
-    if "sha256" not in docs.columns:
-        docs = docs.withColumn("sha256", F.sha2(F.col(text_col), 256))
-    docs = docs.withColumn(
+        return assign_doc_ids(corpus, key_cols, post_shuffle=_prep)
+    # given ids still need the doc-range partitioning the posting build
+    # relies on (an input read from many files arrives in file order)
+    docs = corpus.withColumn(
+        "doc_id", F.col(doc_id_col).cast("bigint")
+    ).repartitionByRange(
+        corpus.sparkSession.sparkContext.defaultParallelism, "doc_id"
+    ).sortWithinPartitions("doc_id").withColumn(
+        "_toks", hash_tokens_expr(text_col)
+    ).withColumn(
+        "dl", F.size("_toks").cast("int")
+    ).withColumn("sha256", F.sha2(F.col(text_col), 256))
+    return docs, corpus.count(), None
+
+
+def _with_segment(docs: DataFrame, seg_size: int) -> DataFrame:
+    return docs.withColumn(
         "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
     )
-    docs._kbse_sort_cache = getattr(with_ids, "_kbse_sort_cache", None)
-    return docs, n_docs
+
+
+def write_docs(
+    index_dir: str, docs: DataFrame, seg_size: int, sort_cache
+) -> tuple[DataFrame, dict]:
+    """The one docs writer (full build and incremental add): segment a
+    build_docs frame by seg_size doc ids, persist it, and write it minus
+    ``_toks`` to docs/ by segment, observing (n_docs, total_dl,
+    max_doc_id) during the write — no separate aggregation job. The
+    write materializes the frame, so the sort cache is released here.
+    Returns (persisted frame, metrics); the posting build runs on the
+    frame as-is (token arrays and doc-range partitioning included).
+    """
+    cached = _with_segment(docs, seg_size).persist()
+    base = [
+        c for c in cached.columns
+        if c not in ("_toks", "doc_id", "sha256", "segment")
+    ]
+    obs = Observation()
+    to_store = cached.select(*base, "doc_id", "sha256", "segment").observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").alias("total_dl"),
+        F.max("doc_id").alias("max_doc_id"),
+    )
+    cached.sparkSession.sparkContext.setJobDescription("index build: docs table")
+    to_store.write.mode("overwrite").partitionBy("segment").parquet(
+        os.path.join(index_dir, "docs")
+    )
+    m = obs.get
+    if not m["n_docs"]:
+        store.write_empty(to_store.drop("segment"), index_dir, "docs",
+                          "segment=-1")
+    if sort_cache is not None:
+        sort_cache.unpersist()
+    max_id = m["max_doc_id"]
+    return cached, {"n_docs": int(m["n_docs"] or 0),
+                    "total_dl": int(m["total_dl"] or 0),
+                    "max_doc_id": -1 if max_id is None else int(max_id)}
 
 
 # ---------------------------------------------------------------- postings
@@ -314,19 +344,17 @@ def posting_rows(
 
 
 def build_postings_from_docs(
-    docs: DataFrame,
-    text_col: str = "content",
-    pre_partitioned: bool = False,
+    docs: DataFrame, text_col: str = "content"
 ) -> DataFrame:
     """One-shuffle posting build (the Lucene RAM-buffer flush model).
 
     Raw docs are range-partitioned on (segment, doc_id) — each partition a
     contiguous doc range — then ONE mapInArrow stage tf-aggregates,
-    groups and compresses. A frame from build_docs already carries the
-    hashed-token arrays (``_toks``) and its doc-range partitioning, so it
-    is consumed as-is; any other frame (a stored docs table on resume, an
-    incremental add) is tokenized JVM-side from text_col after the
-    optional range shuffle (pre_partitioned=True skips it).
+    groups and compresses. A write_docs frame (full build or incremental
+    add) already carries the hashed-token arrays (``_toks``) and its
+    doc-range partitioning, so it is consumed as-is; the stored docs
+    table a resume re-reads is range-shuffled and then tokenized
+    JVM-side from text_col.
 
     Memory: one partition's uncompressed postings (bounded by the doc-range
     budget — at scale, size partitions/segments so this fits the worker;
@@ -340,12 +368,10 @@ def build_postings_from_docs(
     else:
         src = docs.select(
             "doc_id", "segment", "dl", F.col(text_col).alias("_text")
-        )
-        if not pre_partitioned:
-            src = src.repartitionByRange(
-                docs.sparkSession.sparkContext.defaultParallelism,
-                "segment", "doc_id",
-            ).sortWithinPartitions("segment", "doc_id")
+        ).repartitionByRange(
+            docs.sparkSession.sparkContext.defaultParallelism,
+            "segment", "doc_id",
+        ).sortWithinPartitions("segment", "doc_id")
         # tokenize AND hash JVM-side (codegen'd regexp + xxhash64
         # transform) AFTER the shuffle — raw text moves over the exchange,
         # not token arrays; the Arrow boundary then carries int64 hash
@@ -478,17 +504,35 @@ def build_postings_from_docs(
     return src.mapInArrow(build, schema=POSTING_SCHEMA)
 
 
-def build_terms(postings: DataFrame) -> DataFrame:
-    """Global term-hash dictionary: df per term_hash (collection frequency
-    is derivable). groupBy with a pre-aggregated input (one row per
-    (segment, term)) — partial aggregation makes stopwords harmless here.
+def write_terms(spark: SparkSession, index_dir: str, batch: int) -> None:
+    """The one terms writer: the term-hash dictionary (df per term_hash)
+    of postings segments >= batch, to terms/batch=<batch>. The build
+    writes batch 0; an incremental add writes the batch named by its
+    first new segment (O(new); readers sum df across batches,
+    InvertedIndex.terms). The groupBy input is pre-aggregated (one row
+    per (segment, term)), so partial aggregation makes stopwords harmless.
+
+    sortWithinPartitions("batch", "term_hash") is the ordering the
+    partitioned writer requires, so Spark adds no sort of its own and no
+    exchange (the groupBy already hash-partitioned the dictionary). Each
+    file is hash-ordered by construction, so parquet row-group min/max
+    stats prune a query-term lookup to ~1 row group per file.
 
     Strings are intentionally absent (v4): BM25 only needs (hash -> df);
-    query terms are hashed driver-side (functions/hashing.py). A
-    human-readable vocab table can be derived offline with one JVM pass
-    (explode(array_distinct(tokens)) + groupBy) when term browsing is
-    needed — it is not on the build or query hot path."""
-    return postings.groupBy("term_hash").agg(F.sum("df").alias("df"))
+    query terms are hashed driver-side (functions/hashing.py).
+    """
+    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    terms = postings.where(F.col("segment") >= batch).groupBy(
+        "term_hash"
+    ).agg(F.sum("df").alias("df"))
+    obs = Observation()
+    terms.withColumn("batch", F.lit(int(batch))).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    ).sortWithinPartitions("batch", "term_hash").write.mode(
+        "overwrite"
+    ).partitionBy("batch").parquet(os.path.join(index_dir, "terms"))
+    if not obs.get["rows"]:
+        store.write_empty(terms, index_dir, "terms", f"batch={batch}")
 
 
 # ---------------------------------------------------------------- full build
@@ -510,14 +554,7 @@ def require_exactly_once_metrics(spark: SparkSession) -> None:
 
 class IndexBuilder:
     """End-to-end builder with per-segment-group lineage + resume.
-
-    Layout under index_dir/:
-      docs/        parquet
-      postings/    parquet, partitioned by segment
-      terms/       parquet (term, df)
-      stats.json   {n_docs, avgdl, num_segments, seg_size, k1, b}
-      _lineage/    docs.json + group-<i>.json markers with metrics
-    """
+    The layout it writes under index_dir is described in store.py."""
 
     def __init__(
         self,
@@ -530,29 +567,7 @@ class IndexBuilder:
         self.index_dir = index_dir
         self.num_segments = num_segments
         self.segments_per_commit = segments_per_commit
-        self.lineage_dir = os.path.join(index_dir, "_lineage")
 
-    # -- lineage helpers ---------------------------------------------------
-    def _marker_path(self, name: str) -> str:
-        return os.path.join(self.lineage_dir, f"{name}.json")
-
-    def has_marker(self, name: str) -> bool:
-        return os.path.exists(self._marker_path(name))
-
-    def write_marker(self, name: str, payload: dict) -> None:
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        tmp = self._marker_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._marker_path(name))  # atomic
-
-    def read_marker(self, name: str) -> dict | None:
-        if not self.has_marker(name):
-            return None
-        with open(self._marker_path(name)) as f:
-            return json.load(f)
-
-    # -- build -------------------------------------------------------------
     def build(
         self,
         corpus: DataFrame,
@@ -576,92 +591,53 @@ class IndexBuilder:
         corpus instead of re-reading stored docs (deterministic ids).
         """
         spark = self.spark
+        index_dir = self.index_dir
         require_exactly_once_metrics(spark)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         t_all = time.time()
 
-        docs_path = os.path.join(self.index_dir, "docs")
-        cached_docs = None
-        if not (resume and self.has_marker("docs")):
+        def done(name: str) -> bool:
+            return resume and store.has_marker(index_dir, name)
+
+        cached_docs = sort_cache = None
+        if not done("docs"):
             t0 = time.time()
-            docs, n_docs = build_docs(
-                corpus, key_cols, text_col, doc_id_col, self.num_segments,
-                keep_text=store_text,
+            docs, n_docs, cache = build_docs(
+                corpus, key_cols, text_col, doc_id_col, keep_text=store_text
             )
-            # keep the assigned frame: it is already range-partitioned in
-            # doc_id order AND carries the hashed-token arrays, so the
-            # posting build runs on it directly — no docs re-read, no
-            # second shuffle, and no second tokenizer pass over the text
-            cached_docs = docs.persist()
-            base = [
-                c for c in cached_docs.columns
-                if c not in ("_toks", "doc_id", "sha256", "segment")
-            ]
-            # stats fall out of the docs write itself — no separate
-            # aggregation job (guide §1.2: don't compute things twice)
-            doc_obs = Observation()
-            to_store = cached_docs.select(
-                *base, "doc_id", "sha256", "segment"
-            ).observe(
-                doc_obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("total_dl"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
+            seg_size = max(1, math.ceil(n_docs / self.num_segments))
             # docs write FIRST, serially: that pass materializes the
-            # shared persisted frame (one computation, no cold-cache
-            # race); the posting groups then run over the warm cache
-            spark.sparkContext.setJobDescription("index build: docs table")
-            to_store.write.mode("overwrite").partitionBy("segment").parquet(
-                docs_path
+            # persisted frame (one computation, no cold-cache race); it
+            # is already range-partitioned in doc_id order AND carries the
+            # hashed-token arrays, so the posting groups then run over the
+            # warm cache — no docs re-read, no second shuffle, and no
+            # second tokenizer pass over the text
+            cached_docs, m = write_docs(index_dir, docs, seg_size, cache)
+            nd = m["n_docs"]
+            stats = {"n_docs": nd, "avgdl": m["total_dl"] / nd if nd else 0.0,
+                     "total_dl": m["total_dl"], "max_doc_id": m["max_doc_id"],
+                     "num_segments": self.num_segments, "seg_size": seg_size,
+                     "k1": 1.2, "b": 0.75, "format_version": FORMAT_VERSION}
+            store.commit_stats(index_dir, stats)
+            store.write_marker(
+                index_dir, "docs", {"rows": nd, "seconds": time.time() - t0}
             )
-            if n_docs == 0:
-                # a zero-row partitionBy write emits NO files — leave a
-                # schema-bearing empty partition so every reader (and
-                # the first incremental add) still infers the layout
-                to_store.drop("segment").limit(0).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(docs_path, "segment=-1"))
-            m = doc_obs.get
-            nd = int(m["n_docs"] or 0)
-            stats = {
-                "n_docs": nd,
-                "avgdl": (m["total_dl"] or 0) / nd if nd else 0.0,
-                "total_dl": int(m["total_dl"] or 0),
-                "max_doc_id": int(m["max_doc_id"])
-                if m["max_doc_id"] is not None else -1,
-                "num_segments": self.num_segments,
-                "seg_size": max(1, math.ceil(nd / self.num_segments)),
-                "k1": 1.2,
-                "b": 0.75,
-                "format_version": FORMAT_VERSION,
-            }
-            with open(os.path.join(self.index_dir, "stats.json"), "w") as f:
-                json.dump(stats, f)
-            self.write_marker(
-                "docs", {"rows": nd, "seconds": time.time() - t0}
-            )
-            sort_cache = getattr(cached_docs, "_kbse_sort_cache", None)
-            if sort_cache is not None:
-                sort_cache.unpersist()  # raw-corpus copy, dead now
         else:
-            with open(os.path.join(self.index_dir, "stats.json")) as f:
-                stats = json.load(f)
-        seg_size = stats["seg_size"]
+            stats = store.read_stats(index_dir)
+            seg_size = stats["seg_size"]
 
         docs_df = cached_docs
         if docs_df is None:
-            stored = spark.read.parquet(docs_path)
+            stored = spark.read.parquet(os.path.join(index_dir, "docs"))
             if text_col in stored.columns:
                 docs_df = stored
             else:
                 # store_text=False resume: re-derive the assigned frame
                 # from the corpus (doc_id = sort rank — deterministic)
-                docs, _ = build_docs(
-                    corpus, key_cols, text_col, doc_id_col, self.num_segments,
-                    keep_text=False,
+                docs, _, sort_cache = build_docs(
+                    corpus, key_cols, text_col, doc_id_col, keep_text=False
                 )
-                cached_docs = docs.persist()
+                cached_docs = _with_segment(docs, seg_size).persist()
                 docs_df = cached_docs
         n_segments = max(1, math.ceil(stats["n_docs"] / seg_size))
 
@@ -669,7 +645,6 @@ class IndexBuilder:
             list(range(g, min(g + self.segments_per_commit, n_segments)))
             for g in range(0, n_segments, self.segments_per_commit)
         ]
-        postings_path = os.path.join(self.index_dir, "postings")
 
         def build_group(gi: int, segs: list[int]) -> None:
             t0 = time.time()
@@ -678,13 +653,7 @@ class IndexBuilder:
             )
             lo, hi = segs[0] * seg_size, (segs[-1] + 1) * seg_size
             part = docs_df.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            # the freshly-assigned cached frame is already partitioned by
-            # contiguous doc ranges (range partition on the sort key whose
-            # rank IS the doc_id) — no shuffle needed; the parquet re-read
-            # path (resume) re-partitions explicitly
-            postings = build_postings_from_docs(
-                part, text_col, pre_partitioned=cached_docs is not None
-            )
+            postings = build_postings_from_docs(part, text_col)
             # marker metrics observed DURING the write (one job instead of
             # write + re-read)
             obs = Observation()
@@ -693,44 +662,23 @@ class IndexBuilder:
                 F.count(F.lit(1)).alias("rows"),
                 F.sum("df").alias("postings"),
             ).write.mode("overwrite").partitionBy("segment").parquet(
-                postings_path
+                os.path.join(index_dir, "postings")
             )
-            if not any(
-                e.name.startswith("segment=")
-                for e in os.scandir(postings_path)
-                if e.is_dir()
-            ):
-                # empty corpus: leave a schema-bearing empty partition
-                spark.createDataFrame(
-                    [], POSTING_SCHEMA.replace("segment int, ", "")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(postings_path, "segment=-1")
-                )
             m = obs.get
-            nbytes = 0
-            for s in segs:
-                seg_dir = os.path.join(postings_path, f"segment={s}")
-                if os.path.isdir(seg_dir):
-                    nbytes += sum(
-                        e.stat().st_size
-                        for e in os.scandir(seg_dir)
-                        if e.is_file() and not e.name.startswith((".", "_"))
-                    )
-            self.write_marker(
-                f"group-{gi}",
-                {
-                    "segments": segs,
-                    "rows": int(m["rows"] or 0),
-                    "postings": int(m["postings"] or 0),
-                    "bytes": nbytes,
-                    "seconds": time.time() - t0,
-                },
-            )
+            if not m["rows"]:  # empty corpus
+                store.write_empty(postings.drop("segment"), index_dir,
+                                  "postings", "segment=-1")
+            store.write_marker(index_dir, f"group-{gi}", {
+                "segments": segs,
+                "rows": int(m["rows"] or 0),
+                "postings": int(m["postings"] or 0),
+                "bytes": store.segment_bytes(index_dir, "postings", segs),
+                "seconds": time.time() - t0,
+            })
 
         pending = [
-            (gi, segs)
-            for gi, segs in enumerate(groups)
-            if not (resume and self.has_marker(f"group-{gi}"))
+            (gi, segs) for gi, segs in enumerate(groups)
+            if not done(f"group-{gi}")
         ]
         # max_groups: commit only that many, then die like a killed build
         cut = len(pending) if max_groups is None else max_groups
@@ -746,36 +694,14 @@ class IndexBuilder:
         if len(pending) > cut:
             raise RuntimeError("fault injection: killed mid-build")
 
-        if not (resume and self.has_marker("terms")):
+        if not done("terms"):
             t0 = time.time()
-            postings = spark.read.parquet(postings_path)
-            # batch=0 partition: incremental adds later contribute their own
-            # batch partitions (O(new) increments); readers aggregate df
-            # across batches lazily (InvertedIndex.terms)
-            # sortWithinPartitions(term_hash): zero extra exchange (the
-            # groupBy already hash-partitioned the dictionary), but each
-            # output file becomes hash-ordered, so parquet row-group
-            # min/max stats prune point lookups — a query-term lookup
-            # reads ~1 row group per file instead of every row group
-            # (guide §6: sort order on write makes stats effective)
-            terms = (
-                build_terms(postings)
-                .sortWithinPartitions("term_hash")
-                .withColumn("batch", F.lit(0))
-            )
-            terms.write.mode("overwrite").partitionBy("batch").parquet(
-                os.path.join(self.index_dir, "terms")
-            )
-            if stats["n_docs"] == 0:
-                spark.createDataFrame(
-                    [], "term_hash bigint, df bigint"
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self.index_dir, "terms", "batch=0")
-                )
-            self.write_marker("terms", {"seconds": time.time() - t0})
+            write_terms(spark, index_dir, 0)
+            store.write_marker(index_dir, "terms", {"seconds": time.time() - t0})
 
-        if cached_docs is not None:
-            cached_docs.unpersist()
+        for frame in (cached_docs, sort_cache):
+            if frame is not None:
+                frame.unpersist()
         stats["build_seconds"] = time.time() - t_all
         return stats
 
@@ -802,8 +728,7 @@ def build_field_index(
     The sub-docs table keeps metadata columns (doc_filter predicates work
     field-scoped) but drops the primary text payload.
     """
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        primary = json.load(f)
+    primary = store.read_stats(index_dir)
     docs = spark.read.parquet(os.path.join(index_dir, "docs")).drop(
         "dl", "sha256", "segment", *drop_cols
     )
@@ -992,6 +917,8 @@ def add_documents(
     """Incremental add (M6 / NEW_VERSION events): index new docs as NEW
     segments appended after the committed max doc_id.
 
+    Runs the build's docs phase (build_docs: one tokenizer pass) and its
+    docs and terms writers on doc ids offset past the committed ones.
     O(new) by construction — existing postings/docs/terms files are never
     re-read or rewritten:
       docs     -> dynamic-overwrite of the NEW segment partitions only
@@ -999,7 +926,8 @@ def add_documents(
       terms    -> this add's df contribution written to its own
                   terms/batch=<first_new_seg> partition (readers aggregate
                   lazily); no global term-dictionary rebuild
-      stats    -> arithmetic update from (n_new, total_dl_new)
+      stats    -> arithmetic update from (n_new, total_dl_new), both
+                  observed during the docs write
 
     Crash safety: every data write is an idempotent dynamic partition
     overwrite keyed off the COMMITTED stats (start_id), so re-running a
@@ -1014,19 +942,9 @@ def add_documents(
     design (same as ES refresh semantics). The merge stage
     (operators/merge.py) consolidates small incremental segments later.
     """
-    def _load_stats() -> dict:
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            return json.load(f)
-
-    def _commit_stats(stats: dict) -> None:
-        tmp = os.path.join(index_dir, "stats.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(stats, f)
-        os.replace(tmp, os.path.join(index_dir, "stats.json"))
-
-    stats = _load_stats()
+    require_exactly_once_metrics(spark)
+    stats = store.read_stats(index_dir)
     seg_size = stats["seg_size"]
-    lineage = IndexBuilder(spark, index_dir)
 
     def _finish(marker: dict) -> dict:
         # data committed by a previous (or this) run; roll the stats forward
@@ -1035,7 +953,7 @@ def add_documents(
             stats["total_dl"] = stats.get("total_dl", 0) + marker["total_dl_new"]
             stats["avgdl"] = stats["total_dl"] / stats["n_docs"]
             stats["max_doc_id"] = marker["max_doc_id"]
-            _commit_stats(stats)
+            store.commit_stats(index_dir, stats)
         return {"added": marker["n_new"],
                 "first_segment": marker["first_segment"],
                 "n_docs": stats["n_docs"], "avgdl": stats["avgdl"]}
@@ -1045,7 +963,7 @@ def add_documents(
     first_new_seg = math.ceil((stats.get("max_doc_id", -1) + 1) / seg_size)
     start_id = first_new_seg * seg_size
     marker_name = f"add-{batch_id or start_id}"
-    prev = lineage.read_marker(marker_name)
+    prev = store.read_marker(index_dir, marker_name)
     if prev is not None:
         out = _finish(prev)
         if batch_id is not None:
@@ -1056,43 +974,29 @@ def add_documents(
         start_id = first_new_seg * seg_size
         marker_name = f"add-{start_id}"
 
-    with_ids, n_new, total_dl_new = assign_doc_ids(
-        new_corpus, key_cols, compute_dl=text_col
-    )
+    docs, n_new, sort_cache = build_docs(new_corpus, key_cols, text_col)
     if n_new == 0:
+        sort_cache.unpersist()
         return {"added": 0, "first_segment": first_new_seg,
                 "n_docs": stats["n_docs"], "avgdl": stats.get("avgdl", 0.0)}
-    docs = (
-        with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(start_id))
-        .withColumn("sha256", F.sha2(F.col(text_col), 256))
-        .withColumn("segment", (F.col("doc_id") / F.lit(seg_size)).cast("int"))
-    ).persist()
-
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    docs.write.mode("overwrite").partitionBy("segment").parquet(
-        os.path.join(index_dir, "docs")
+    docs, m = write_docs(
+        index_dir,
+        docs.withColumn("doc_id", F.col("doc_id") + F.lit(start_id)),
+        seg_size,
+        sort_cache,
     )
-    postings = build_postings_from_docs(docs, text_col, pre_partitioned=True)
-    postings.write.mode("overwrite").partitionBy("segment").parquet(
-        os.path.join(index_dir, "postings")
-    )
-    new_terms = build_terms(
-        spark.read.parquet(os.path.join(index_dir, "postings")).where(
-            F.col("segment") >= first_new_seg
-        )
-    ).sortWithinPartitions("term_hash").withColumn(
-        "batch", F.lit(int(first_new_seg))
-    )
-    new_terms.write.mode("overwrite").partitionBy("batch").parquet(
-        os.path.join(index_dir, "terms")
-    )
+    build_postings_from_docs(docs, text_col).write.mode(
+        "overwrite"
+    ).partitionBy("segment").parquet(os.path.join(index_dir, "postings"))
     docs.unpersist()
+    write_terms(spark, index_dir, first_new_seg)
 
     marker = {
-        "n_new": n_new,
-        "total_dl_new": int(total_dl_new or 0),
+        "n_new": m["n_docs"],
+        "total_dl_new": m["total_dl"],
         "first_segment": first_new_seg,
-        "max_doc_id": start_id + n_new - 1,
+        "max_doc_id": m["max_doc_id"],
     }
-    lineage.write_marker(marker_name, marker)
+    store.write_marker(index_dir, marker_name, marker)
     return _finish(marker)

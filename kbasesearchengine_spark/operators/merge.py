@@ -13,6 +13,7 @@ bounded groups (total postings of the merged segments per term).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Mapping
 
 import numpy as np
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.codec import delta_decode, varint_decode
+from . import store
 from .indexer import POSTING_SCHEMA, posting_rows
 
 
@@ -32,7 +34,6 @@ def merge_postings(
     Segments not in seg_map pass through unchanged (narrow filter); the
     merged ones shuffle once on (new_segment, term).
     """
-    spark = postings.sparkSession
     keep = postings.where(~F.col("segment").isin([int(s) for s in seg_map]))
     to_merge = postings.where(F.col("segment").isin([int(s) for s in seg_map]))
     map_expr = F.create_map(
@@ -92,57 +93,32 @@ def apply_merge(
     partitions, and record the mapping in lineage.
 
     Only partitions named in seg_map are read (partition pruning) or
-    written (dynamic overwrite) — cost is O(merged segments), not O(index).
-    At 100 TB this is the Lucene background-merge analog: many small
-    incremental segments -> few big ones, bounded I/O per merge round.
+    written (one staged write per table, store.replace_segments) — cost is
+    O(merged segments), not O(index). At 100 TB this is the Lucene
+    background-merge analog: many small incremental segments -> few big
+    ones, bounded I/O per merge round.
     """
-    import os
-    import shutil
-
-    from .indexer import IndexBuilder
-
     seg_map = {int(k): int(v) for k, v in seg_map.items()}
     sources = [s for s, t in seg_map.items() if s != t]
     targets = sorted({t for t in seg_map.values()})
     if not sources:
         return {"merged": 0, "targets": []}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    postings_path = os.path.join(index_dir, "postings")
-    docs_path = os.path.join(index_dir, "docs")
     affected = sorted(seg_map)
-
-    # Spark refuses to overwrite a path it is reading from — stage the
-    # rewritten partitions through a scratch dir, then dynamic-overwrite
-    tmp = os.path.join(index_dir, "_merge_tmp")
-
-    postings = spark.read.parquet(postings_path).where(
+    postings = spark.read.parquet(os.path.join(index_dir, "postings")).where(
         F.col("segment").isin(affected)
     )
-    merged = merge_postings(postings, seg_map)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "postings"))
-    spark.read.parquet(os.path.join(tmp, "postings")).write.mode(
-        "overwrite"
-    ).partitionBy("segment").parquet(postings_path)
-
-    docs = spark.read.parquet(docs_path).where(F.col("segment").isin(affected))
-    merge_docs(docs, seg_map).write.mode("overwrite").parquet(
-        os.path.join(tmp, "docs")
+    store.replace_segments(
+        spark, index_dir, "postings", merge_postings(postings, seg_map),
+        drop=sources,
     )
-    spark.read.parquet(os.path.join(tmp, "docs")).write.mode(
-        "overwrite"
-    ).partitionBy("segment").parquet(docs_path)
-
-    # drop emptied source partitions (at scale: a metastore/Iceberg
-    # drop-partition; local fs here)
-    for base in (postings_path, docs_path):
-        for s in sources:
-            d = os.path.join(base, f"segment={s}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    IndexBuilder(spark, index_dir).write_marker(
+    docs = spark.read.parquet(os.path.join(index_dir, "docs")).where(
+        F.col("segment").isin(affected)
+    )
+    store.replace_segments(
+        spark, index_dir, "docs", merge_docs(docs, seg_map), drop=sources
+    )
+    store.write_marker(
+        index_dir,
         f"merge-{min(sources)}-{max(sources)}",
         {"seg_map": {str(k): v for k, v in seg_map.items()},
          "sources": sources, "targets": targets},

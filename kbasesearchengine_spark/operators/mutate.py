@@ -5,7 +5,7 @@ share/unshare (M2/M3, ElasticIndexingStorage.java:666-763), publish/
 unpublish (M4/M5, :765-835), set field / set flags (M6/M7, :837-915).
 Spark-first disposition: immutable files + partition-scoped rewrite —
 find the segments containing matches (one pruned pre-scan), rewrite ONLY
-those partitions through a staging dir and a dynamic partition overwrite.
+those partitions through a staging dir (store.replace_segments).
 Cost is O(matched segments), never O(index). On a lakehouse catalog this
 is exactly `MERGE INTO docs USING ... WHEN MATCHED THEN UPDATE`.
 
@@ -18,12 +18,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexBuilder, require_exactly_once_metrics
+from . import store
+from .indexer import require_exactly_once_metrics
 
 
 def update_docs_fields(
@@ -39,8 +39,7 @@ def update_docs_fields(
     outside the match set. Returns {updated_rows, updated_segments}.
     """
     require_exactly_once_metrics(spark)
-    docs_path = os.path.join(index_dir, "docs")
-    docs = spark.read.parquet(docs_path)
+    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
 
     segs = [
         int(r["segment"])
@@ -79,23 +78,8 @@ def update_docs_fields(
         *new_cols.values(),
     )
 
-    # stage the rewritten partitions PARTITIONED in a scratch dir (Spark
-    # refuses to overwrite a path it is reading from), then move each
-    # segment directory into place — one data write instead of the former
-    # write + re-read + second partitioned write. The per-partition swap
-    # has the same (non-atomic-across-partitions) crash semantics as the
-    # dynamic partition overwrite it replaces; a re-run of the same
-    # mutation is idempotent either way.
-    tmp = os.path.join(index_dir, "_update_tmp")
-    updated.write.mode("overwrite").partitionBy("segment").parquet(tmp)
+    store.replace_segments(spark, index_dir, "docs", updated)
     n = int(obs.get["n"] or 0)
-    for entry in os.scandir(tmp):
-        if entry.is_dir() and entry.name.startswith("segment="):
-            dst = os.path.join(docs_path, entry.name)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            shutil.move(entry.path, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
 
     # marker name must be stable ACROSS processes (idempotence protocol:
     # md5, not Python's per-process-salted hash()) yet UNIQUE per logical
@@ -111,7 +95,8 @@ def update_docs_fields(
             )
         )).encode()
     ).hexdigest()[:8]
-    IndexBuilder(spark, index_dir).write_marker(
+    store.write_marker(
+        index_dir,
         f"update-{min(segs)}-{max(segs)}-{field_tag}",
         {"updated_rows": int(n), "updated_segments": sorted(segs),
          "fields": sorted(str(k) for k in assignments)},

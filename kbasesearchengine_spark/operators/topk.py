@@ -22,7 +22,6 @@ bit-identical at any parallelism.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -35,6 +34,7 @@ from ..functions.bm25 import tf_norm
 from ..functions.codec import delta_decode, varint_decode
 from ..functions.hashing import term_hash
 from ..functions.tokenize import tokenize_py, tokenize_udf
+from . import store
 
 
 # ------------------------------------------------------------ index handle
@@ -51,8 +51,7 @@ class InvertedIndex:
         self.spark = spark
         self.index_dir = index_dir
         self._dfs: dict[str, DataFrame] = {}
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        self.stats = store.read_stats(index_dir)
         # fail FAST on a layout mismatch — a pre-v4 index lacks the
         # term_hash key and the block byte offsets the lazy WAND decode
         # needs, and would otherwise die deep inside query execution
@@ -76,8 +75,7 @@ class InvertedIndex:
 
     def refresh(self) -> None:
         self._dfs.clear()
-        with open(os.path.join(self.index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        self.stats = store.read_stats(self.index_dir)
 
     @property
     def docs(self) -> DataFrame:
@@ -158,9 +156,7 @@ class InvertedIndex:
         return self._dfs[key]
 
     def has_sub_index(self) -> bool:
-        return os.path.exists(
-            os.path.join(self.index_dir, "sub", "stats.json")
-        )
+        return store.is_index(os.path.join(self.index_dir, "sub"))
 
     def sub_index(self) -> "InvertedIndex":
         """The physical `*_sub` child index (U2; ElasticIndexingStorage.

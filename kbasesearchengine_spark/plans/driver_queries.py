@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import ann, dedup, textstats
+from ..operators import ann, dedup, store, textstats
 from ..operators.indexer import FORMAT_VERSION, IndexBuilder
 from ..operators.topk import InvertedIndex, topk
 from .search import search_objects as search_objects_facade
@@ -778,7 +778,7 @@ def xf_version_union(spark, sf_dir):
         base = os.path.join(
             tempfile.gettempdir(), f"kbse_verspec_v{FORMAT_VERSION}_{tag}"
         )
-        if not os.path.exists(os.path.join(base, "v2", "stats.json")):
+        if not store.is_index(os.path.join(base, "v2")):
             spec = parse_spec_file(
                 os.path.join(
                     os.path.dirname(__file__), "..", "specs",
@@ -1301,7 +1301,6 @@ def idx_resume_rebuild(spark, sf_dir):
     rebuild, and the resumed index's stats + summed postings equal the
     raw-corpus truth (reference: IndexerWorker restart semantics over
     the event store, main/IndexerWorker.java)."""
-    import json as _json
     import shutil
 
     sub = _docs(spark, sf_dir).where(F.col("doc_id") < 400)
@@ -1312,7 +1311,7 @@ def idx_resume_rebuild(spark, sf_dir):
         tempfile.gettempdir(), f"kbse_resume_v{FORMAT_VERSION}_{tag}"
     )
     b = IndexBuilder(spark, idx_dir, num_segments=4, segments_per_commit=2)
-    if not b.has_marker("terms"):
+    if not store.has_marker(idx_dir, "terms"):
         shutil.rmtree(idx_dir, ignore_errors=True)
         killed = False
         try:
@@ -1321,11 +1320,11 @@ def idx_resume_rebuild(spark, sf_dir):
         except RuntimeError:
             killed = True
         assert killed, "fault injection must kill the first build"
-        assert b.has_marker("group-0") and not b.has_marker("group-1")
+        assert store.has_marker(idx_dir, "group-0")
+        assert not store.has_marker(idx_dir, "group-1")
         b.build(sub, key_cols=["doc_id"], text_col="text",
                 doc_id_col="doc_id", resume=True)
-    with open(os.path.join(idx_dir, "stats.json")) as f:
-        stats = _json.load(f)
+    stats = store.read_stats(idx_dir)
     total_postings = (
         spark.read.parquet(os.path.join(idx_dir, "postings"))
         .agg(F.sum("df")).collect()[0][0]
@@ -2050,7 +2049,7 @@ def ft_sub_search(spark, sf_dir):
         idx_dir = os.path.join(
             tempfile.gettempdir(), f"kbse_subspec_v{FORMAT_VERSION}_{tag}"
         )
-        if not os.path.exists(os.path.join(idx_dir, "sub", "stats.json")):
+        if not store.is_index(os.path.join(idx_dir, "sub")):
             spec = parse_spec_file(
                 os.path.join(os.path.dirname(__file__), "..", "specs",
                              "documents_sub.yaml")

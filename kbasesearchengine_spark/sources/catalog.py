@@ -11,11 +11,12 @@ the same layout and the gap is import-gated, not papered over.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators import store
 
 CORPUS_SCHEMA = (
     "repo string, path string, commit string, lang string, content string"
@@ -88,11 +89,9 @@ def list_indexes(base_dir: str) -> list[dict]:
     if not os.path.isdir(base_dir):
         return out
     for name in sorted(os.listdir(base_dir)):
-        stats_path = os.path.join(base_dir, name, "stats.json")
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                st = json.load(f)
-            out.append({"name": name, **st})
+        index_dir = os.path.join(base_dir, name)
+        if store.is_index(index_dir):
+            out.append({"name": name, **store.read_stats(index_dir)})
     return out
 
 
@@ -112,4 +111,4 @@ def refresh_index(spark: SparkSession, index_dir: str) -> None:
 
 
 def index_exists(index_dir: str) -> bool:
-    return os.path.exists(os.path.join(index_dir, "stats.json"))
+    return store.is_index(index_dir)

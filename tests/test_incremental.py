@@ -12,6 +12,7 @@ from kbasesearchengine_spark.corpus import generate_corpus, generate_corpus_pand
 from kbasesearchengine_spark.operators.indexer import IndexBuilder, add_documents
 from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
 from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
+from test_term_dfs_lookup import assert_terms_hash_sorted
 
 
 def _partition_snapshot(root: str) -> dict:
@@ -108,6 +109,7 @@ def test_add_is_o_new_and_idempotent(spark, tmp_path):
         if d.startswith("batch=")
     )
     assert len(tdirs) == 2 and tdirs[0] == "batch=0"
+    assert_terms_hash_sorted(idx_dir)  # both batches, one writer
 
     # exactly-once: same batch_id retries without duplicating anything
     stats_before = InvertedIndex(spark, idx_dir).stats
@@ -133,3 +135,27 @@ def test_add_to_empty_index(spark, tmp_path):
     info = add_documents(spark, idx_dir, extra, key_cols=["repo", "path", "commit"])
     assert info["added"] == 50
     assert InvertedIndex(spark, idx_dir).stats["n_docs"] == 50
+
+
+def test_add_releases_its_caches(spark, tmp_path):
+    """Each add persists its sort and docs frames only for its own
+    duration: three adds leave the session's persisted RDDs as they
+    found them."""
+    idx_dir = str(tmp_path / "cache")
+    pdf = generate_corpus_pandas(160)
+    IndexBuilder(spark, idx_dir, num_segments=2, segments_per_commit=2).build(
+        spark.createDataFrame(pdf.iloc[:100]), key_cols=["repo", "path", "commit"]
+    )
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    for lo in (100, 120, 140):
+        info = add_documents(
+            spark, idx_dir, spark.createDataFrame(pdf.iloc[lo:lo + 20]),
+            key_cols=["repo", "path", "commit"],
+        )
+        assert info["added"] == 20
+    assert persisted() == before
+    assert InvertedIndex(spark, idx_dir).stats["n_docs"] == 160

@@ -138,13 +138,15 @@ def test_doc_id_offsets_broadcast_path_identical(spark, monkeypatch):
         [("r%03d" % (i % 37), "p%03d" % i, "c", "x y z") for i in range(200)],
         "repo string, path string, commit string, content string",
     )
-    lit_ids, _, _ = ix.assign_doc_ids(df, ["repo", "path"], num_partitions=8,
-                                      compute_dl="content")
+    lit_ids, _, lit_cache = ix.assign_doc_ids(df, ["repo", "path"],
+                                              num_partitions=8)
     a = {(r["repo"], r["path"]): r["doc_id"] for r in lit_ids.collect()}
+    lit_cache.unpersist()
     monkeypatch.setattr(ix, "_OFFSETS_LITERAL_MAX", 2)
-    bj_ids, _, _ = ix.assign_doc_ids(df, ["repo", "path"], num_partitions=8,
-                                     compute_dl="content")
+    bj_ids, _, bj_cache = ix.assign_doc_ids(df, ["repo", "path"],
+                                            num_partitions=8)
     b = {(r["repo"], r["path"]): r["doc_id"] for r in bj_ids.collect()}
+    bj_cache.unpersist()
     assert a == b
     assert sorted(a.values()) == list(range(200))
 
@@ -189,3 +191,25 @@ def test_tiny_flush_buffer_rank_identical(spark, monkeypatch, tmp_path):
         b = [(r["doc_id"], round(r["score"], 9))
              for r in topk(ref, q, k=10, mode=mode, hydrate=False).collect()]
         assert a == b, q
+
+
+def test_given_doc_ids_postings_sorted(spark, shared_index_dir, tmp_path):
+    """A doc_id_col build (the field-index input) must not depend on the
+    input's row order — a docs table read back from parquet arrives in
+    file order. Every posting's doc list is strictly increasing, as the
+    block-max metadata and the segment merge require."""
+    import os
+
+    from kbasesearchengine_spark.functions.codec import delta_decode
+
+    docs = spark.read.parquet(os.path.join(shared_index_dir, "docs"))
+    idx_dir = str(tmp_path / "given_ids")
+    IndexBuilder(spark, idx_dir, num_segments=3, segments_per_commit=3).build(
+        docs.orderBy(F.col("doc_id").desc()), key_cols=["doc_id"],
+        doc_id_col="doc_id",
+    )
+    rows = InvertedIndex(spark, idx_dir).postings.select("doc_ids").collect()
+    assert rows
+    for r in rows:
+        ids = delta_decode(bytes(r["doc_ids"])).astype(np.int64)
+        assert np.all(np.diff(ids) > 0)

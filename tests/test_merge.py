@@ -1,5 +1,7 @@
 """Segment-merge stage: merged index must answer queries identically."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -111,6 +113,7 @@ def test_apply_merge_keeps_doc_filter_consistent(spark, tmp_path):
         int(r["segment"]) for r in index.docs.select("segment").distinct().collect()
     )
     assert segs_p == [0, 4] and segs_d == [0, 4]  # both moved together
+    assert not {"_staging", "_merge_tmp"} & set(os.listdir(idx_dir))
 
     after = topk(index, "parser http", k=10, mode="and",
                  doc_filter=flt, hydrate=False).collect()

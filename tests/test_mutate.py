@@ -3,6 +3,7 @@ updates; untouched partitions stay byte-identical; queries see the new
 metadata immediately."""
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -43,11 +44,17 @@ def test_update_by_query_partition_scoped(spark, tmp_path):
     )
 
     before = _mtimes(os.path.join(idx_dir, "docs"))
+    # a staged partition left behind by a killed mutation must not be
+    # swapped into docs/ by the next one
+    shutil.copytree(os.path.join(idx_dir, "docs", "segment=7"),
+                    os.path.join(idx_dir, "_staging", "docs", "segment=99"))
     out = update_docs_fields(
         spark, idx_dir, F.col("doc_id") < 60, {"reviewed": True, "stars": 5}
     )
     assert out["updated_rows"] == n_target
     assert out["updated_segments"] == segs_target
+    assert "segment=99" not in os.listdir(os.path.join(idx_dir, "docs"))
+    assert not os.path.exists(os.path.join(idx_dir, "_staging"))
 
     after = _mtimes(os.path.join(idx_dir, "docs"))
     for seg, files in before.items():

@@ -7,8 +7,10 @@ import os
 import pytest
 
 from kbasesearchengine_spark.corpus import generate_corpus
+from kbasesearchengine_spark.operators import store
 from kbasesearchengine_spark.operators.indexer import (
     IndexBuilder,
+    add_documents,
     require_exactly_once_metrics,
 )
 from kbasesearchengine_spark.operators.mutate import update_docs_fields
@@ -135,4 +137,24 @@ def test_speculation_gate(tmp_path):
         IndexBuilder(on, str(tmp_path / "idx")).build(None, ["doc_id"])
     with pytest.raises(ValueError, match="spark.speculation"):
         update_docs_fields(on, str(tmp_path / "idx"), None, {"x": 1})
+    with pytest.raises(ValueError, match="spark.speculation"):
+        add_documents(on, str(tmp_path / "idx"), None, ["doc_id"])
     assert not os.listdir(tmp_path)
+
+
+def test_commit_stats_failure_keeps_previous(tmp_path, monkeypatch):
+    """A stats commit that dies mid-write leaves the previous stats.json
+    complete and loadable (write to a temp file, then rename)."""
+    idx_dir = str(tmp_path)
+    old = {"n_docs": 10, "avgdl": 5.0, "seg_size": 4}
+    store.commit_stats(idx_dir, old)
+
+    def torn_dump(obj, f, **kwargs):
+        f.write('{"n_docs": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(store.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        store.commit_stats(idx_dir, {"n_docs": 20, "avgdl": 6.0, "seg_size": 4})
+    monkeypatch.undo()
+    assert store.read_stats(idx_dir) == old

@@ -53,8 +53,9 @@ def test_pyarrow_lookup_sums_across_batches(spark, tmp_path):
     assert index.term_dfs(terms) == _spark_dfs(index, terms)
 
 
-def test_terms_files_hash_sorted(shared_index_dir):
-    terms_dir = os.path.join(shared_index_dir, "terms")
+def assert_terms_hash_sorted(index_dir):
+    """Every terms file (of every batch) is term_hash-sorted."""
+    terms_dir = os.path.join(index_dir, "terms")
     checked = 0
     for root, _dirs, files in os.walk(terms_dir):
         for f in files:
@@ -66,6 +67,10 @@ def test_terms_files_hash_sorted(shared_index_dir):
             assert col == sorted(col)
             checked += 1
     assert checked > 0
+
+
+def test_terms_files_hash_sorted(shared_index_dir):
+    assert_terms_hash_sorted(shared_index_dir)
 
 
 def test_spark_fallback_matches_pyarrow(spark, shared_index_dir, monkeypatch):
