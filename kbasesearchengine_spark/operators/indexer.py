@@ -54,21 +54,10 @@ from pyspark.sql import functions as F
 from ..functions.codec import encode_grouped
 from ..functions.tokenize import hash_tokens_expr
 from . import store
+from .store import FORMAT_VERSION
 
 BLOCK_SIZE = 128  # postings per block-max block
 _OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
-FORMAT_VERSION = 4  # bump on any index layout/schema change
-# v3: docs/ partitioned by segment (partition-pruned reads; idempotent
-#     incremental adds + merge write-back), terms/ partitioned by batch
-#     (each add contributes its own partition — O(new) increments, global
-#     df aggregated lazily at read time), stats carries max_doc_id/total_dl
-# v4: postings + terms keyed by term_hash (bigint, Spark xxhash64 of the
-#     token, hashed JVM-side inside the tokenize transform) instead of the
-#     term string. The Arrow boundary ships array<bigint> — no per-token
-#     Python strings anywhere in the build; parquet pushdown on int64 is
-#     cheaper than string at query time; query terms are hashed
-#     driver-side by the compatible pure-Python XXH64
-#     (functions/hashing.py; collision bound documented there).
 
 # RAM-buffer budget per posting flush, in (doc,term) pairs. Sized for
 # the CACHE tier, not for RAM: the flush kernel is argsort + 5-lane

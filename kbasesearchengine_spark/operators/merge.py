@@ -74,10 +74,9 @@ def merge_postings(
 
 
 def merge_docs(docs: DataFrame, seg_map: Mapping[int, int]) -> DataFrame:
-    """Rewrite the docs table's segment column under the same remapping —
-    postings and docs MUST move together or the per-segment cogroup in
-    topk (doc_filter path) pairs postings with empty allowed lists and
-    filtered results silently vanish."""
+    """Rewrite the docs table's segment column under the same remapping,
+    so docs and postings stay partitioned alike: a segment number names
+    the same doc range in both tables."""
     map_expr = F.create_map(*[F.lit(x) for kv in seg_map.items() for x in kv])
     return docs.withColumn(
         "segment",

@@ -1,11 +1,26 @@
-"""Block-max WAND: top-k pruning over compressed postings — lazy decode.
+"""The per-segment query kernels: AND and OR top-k over the block directory.
 
-The reference gets this from Lucene inside Elasticsearch (per-shard top-k
-heaps + WAND-style skipping — implicit, no reference code; SURVEY §4).
-Here it is from scratch, shaped for vectorized execution:
+The reference hands conjunctive `match` and top-k to Lucene inside
+Elasticsearch, which runs skip-list intersection and block-max WAND over
+one block-encoded postings format (ElasticIndexingStorage.java:1364-1375;
+SURVEY §4). Here both are from scratch, and they are the engine's only
+scorers: topk.py ships every segment's query postings to
+``and_topk_segment`` (mode "and") or ``wand_topk_segment`` (mode "or"),
+scored or match-only, ranked or exhaustive.
 
-Instead of the classic one-doc-at-a-time WAND loop (pointer-chasing —
-hostile to numpy), we run a *block-interval sweep*:
+Block directory. Posting blobs stay raw bytes; the per-block byte
+offsets stored at encode time (codec.encode_grouped block_*_off) locate
+each 128-posting block's slice, and a block is varint-decoded only when
+a kernel touches it (the Lucene skip-list analog). Absolute doc ids of
+block j recover from block_last[j-1] + cumsum(gaps) — no prefix decode.
+Both kernels count decoded and total bytes and blocks in ``stats``.
+
+AND: the rarest term is decoded in full and becomes the candidate list;
+every other term decodes only the blocks a surviving candidate can fall
+in (searchsorted over block_last).
+
+OR with a k: a *block-interval sweep* instead of the classic
+one-doc-at-a-time WAND loop (pointer-chasing — hostile to numpy):
 
  1. Every posting block contributes an interval [start_doc, last_doc]
     with upper bound ub = idf(t) * block_max_tf_norm (stored at build
@@ -14,24 +29,22 @@ hostile to numpy), we run a *block-interval sweep*:
     each interval's total upper bound = Σ_t ub of the overlapping block
     of t (0 if t has no block there).
  3. Intervals are processed in DESCENDING total-ub order; each interval's
-    docs are exactly scored (vectorized OR-accumulation over decoded
-    block slices) and pushed into a bounded k-heap. As soon as the next
-    interval's ub ≤ current θ (k-th best score), everything left is
-    provably below the heap floor — stop.
+    docs are exactly scored and merged into a tie-aware top-k. As soon as
+    the next interval's ub is below the current θ (k-th best score),
+    everything left is provably below the floor — stop.
 
-Decode is LAZY per block (the Lucene skip-list analog): posting blobs
-stay raw bytes; the per-block byte offsets stored at encode time
-(codec.encode_grouped block_*_off) locate each 128-posting block's slice,
-and a block is varint-decoded only when the sweep actually scores an
-interval inside it. Absolute doc ids of block j recover from
-block_last[j-1] + cumsum(gaps) — no prefix decode needed. Pruning
-therefore skips BYTES, not just FLOPs: on a stopword OR query most of
-the stopword's blocks are never decoded (decoded-bytes counter asserted
-in tests/test_wand.py).
+This is the block-max WAND guarantee (never skips a doc that could enter
+the top-k) with batch-friendly inner loops, and it skips BYTES: on a
+stopword OR query most of the stopword's blocks are never decoded. OR
+without a k (every match scored) or without scores (the match set only)
+decodes every block.
 
-This is the same pruning guarantee as block-max WAND (never skips a doc
-that could enter the top-k) with batch-friendly inner loops. Equality
-with the exhaustive scorer is asserted in tests on every fixture query.
+Score contract: idfs is keyed by term_hash and its insertion order is
+the sorted-term order of the query; every per-doc sum is reduced in that
+order, so scores are bit-identical at any parallelism. The eager
+full-decode scorer these kernels replaced is kept as the reference in
+tests/kernel_reference.py: tests assert AND bit-identical to it and OR
+within 1e-9.
 """
 
 from __future__ import annotations
@@ -144,173 +157,175 @@ class _LazyTermPostings:
         self._cache[b] = out
         return out
 
+    def decode(self, blocks=None):
+        """(ids, tfs, dls) over the given ascending blocks (all when None),
+        concatenated — blocks are doc-ordered, so ids stay sorted. tfs and
+        dls are None without the payload."""
+        if blocks is None:
+            blocks = range(self.n_blocks)
+        parts = [self.decode_block(int(b)) for b in blocks]
+        ids = np.concatenate([p[0] for p in parts])
+        if not self.need_payload:
+            return ids, None, None
+        return (ids, np.concatenate([p[1] for p in parts]),
+                np.concatenate([p[2] for p in parts]))
+
+
+# ---------------------------------------------------------- shared steps
+
+
+def _empty(scores: bool) -> pd.DataFrame:
+    cols = {"doc_id": pd.Series([], dtype="int64")}
+    if scores:
+        cols["score"] = pd.Series([], dtype="float64")
+    return pd.DataFrame(cols)
+
+
+def _lazy_terms(
+    pdf: pd.DataFrame,
+    idfs: dict[int, float],
+    avgdl: float,
+    stats: dict | None,
+    need_payload: bool,
+) -> tuple[dict[int, _LazyTermPostings], dict]:
+    """The query terms present in this segment, in idfs order, each over
+    its posting rows (a (segment, term) posting can be split across build
+    partitions, so one term may carry several rows), plus the stats dict
+    with its counters initialized."""
+    if stats is None:
+        stats = {}
+    for key in ("decoded_bytes", "total_bytes", "decoded_blocks",
+                "total_blocks"):
+        stats.setdefault(key, 0)
+    by_term: dict[int, list] = {}
+    for _, row in pdf.iterrows():
+        if len(row["block_last"]):
+            by_term.setdefault(row["term_hash"], []).append(row)
+    lazy = {
+        t: _LazyTermPostings(by_term[t], avgdl, idfs[t], stats, need_payload)
+        for t in idfs if t in by_term
+    }
+    return lazy, stats
+
+
+def _or_sum(
+    ids: list[np.ndarray], contribs: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc sums of the terms' contributions. The lists are in idfs
+    order and the stable argsort keeps that order within a doc, so each
+    sum is reduced in sorted-term order."""
+    cat = np.concatenate(ids)
+    con = np.concatenate(contribs)
+    o = np.argsort(cat, kind="stable")
+    cat, con = cat[o], con[o]
+    starts = np.flatnonzero(np.concatenate(([True], cat[1:] != cat[:-1])))
+    return cat[starts], np.add.reduceat(con, starts)
+
+
+def _tie_cut(
+    docs: np.ndarray, scores: np.ndarray, k: int | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The k best scores plus every doc tied with the k-th: a tied doc
+    dropped here could be the deterministic (doc_id asc) winner of the
+    k-th slot."""
+    if k is None or docs.size <= k:
+        return docs, scores
+    part = np.argpartition(-scores, k - 1)
+    keep = scores >= scores[part[k - 1]]
+    return docs[keep], scores[keep]
+
+
+def _ranked(docs: np.ndarray, scores: np.ndarray, k: int | None) -> pd.DataFrame:
+    """≤k (doc_id, score) rows, score desc / doc_id asc (all when k is
+    None)."""
+    docs, scores = _tie_cut(docs, scores, k)
+    o = np.lexsort((docs, -scores))[:k]
+    return pd.DataFrame({"doc_id": docs[o], "score": scores[o]})
+
+
+# --------------------------------------------------------------- kernels
+
 
 def and_topk_segment(
     pdf: pd.DataFrame,
     idfs: dict[int, float],
     avgdl: float,
     k: int | None,
-    allowed: np.ndarray | None = None,
     scores: bool = True,
     stats: dict | None = None,
 ) -> pd.DataFrame:
     """Conjunctive (AND) match with block-granularity skipping — the
-    skip-list intersection Lucene runs for ``operator:"and"`` queries
-    (implicit in the reference's ES hand-off, ElasticIndexingStorage.
-    java:1364-1375; SURVEY §4).
+    skip-list intersection Lucene runs for ``operator:"and"`` queries.
 
-    The rarest term's postings are decoded in full and become the
+    The rarest term (fewest blocks) is decoded in full and becomes the
     candidate list; every OTHER term then decodes ONLY the blocks a
-    surviving candidate can fall in (searchsorted over block_last — the
-    block directory is the skip list). A stopword AND a rare term decodes
-    the rare list plus a handful of the stopword's blocks instead of the
-    stopword's entire postings — pruning skips BYTES (decoded-bytes
-    counter shared with the OR-path WAND, asserted in tests/test_wand.py).
+    surviving candidate can fall in. A stopword AND a rare term decodes
+    the rare list plus a handful of the stopword's blocks.
 
-    scores=False (intersection-only: non-relevance pages, counts) skips
-    the tf/dl streams entirely and returns just the doc_id column.
-    Score reduction runs in idfs insertion order (= sorted-term order)
-    over the final candidate set — bit-identical to the exhaustive
-    kernel's contract.
+    k=None returns every match, ranked. scores=False (match-only:
+    non-relevance pages, counts) skips the tf/dl streams entirely and
+    returns just the doc_id column.
     """
-    if stats is None:
-        stats = {}
-    for key in ("decoded_bytes", "total_bytes", "decoded_blocks",
-                "total_blocks"):
-        stats.setdefault(key, 0)
-    if scores:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
+    lazy, stats = _lazy_terms(pdf, idfs, avgdl, stats, scores)
+    if len(lazy) < len(idfs):
+        return _empty(scores)  # a query term absent from this segment
 
-    by_term: dict[int, list] = {}
-    for _, row in pdf.iterrows():
-        if len(row["block_last"]) == 0:
-            continue
-        by_term.setdefault(row["term_hash"], []).append(row)
-    if any(t not in by_term for t in idfs):
-        return empty  # conjunctive: a term absent from this segment
-    lazy = {
-        t: _LazyTermPostings(by_term[t], avgdl, idfs[t], stats,
-                             need_payload=scores)
-        for t in idfs
-    }
-
-    # rarest-first: fewest blocks ≈ smallest df drives the intersection
     order_terms = sorted(lazy, key=lambda t: lazy[t].n_blocks)
-    t0 = lazy[order_terms[0]]
-    cand = np.concatenate(
-        [t0.decode_block(b)[0] for b in range(t0.n_blocks)]
-    )
-    if allowed is not None:
-        # applying the filter FIRST shrinks the candidate set before any
-        # other term decodes — fewer blocks touched downstream
-        if len(allowed):
-            pos = np.searchsorted(allowed, cand)
-            pos = np.minimum(pos, len(allowed) - 1)
-            cand = cand[allowed[pos] == cand]
-        else:
-            cand = cand[:0]
-    if cand.size == 0:
-        return empty
-
-    decoded: dict[int, tuple] = {}
+    decoded = {order_terms[0]: lazy[order_terms[0]].decode()}
+    cand = decoded[order_terms[0]][0]
     for t in order_terms[1:]:
         tp = lazy[t]
         bi = np.searchsorted(tp.block_last, cand)
         needed = np.unique(bi[bi < tp.n_blocks])
         if needed.size == 0:
-            return empty
-        parts = [tp.decode_block(int(b)) for b in needed]
-        # blocks are doc-ordered (rows sorted by first block_last,
-        # disjoint ranges) — concatenation stays sorted for searchsorted
-        ids = np.concatenate([p[0] for p in parts])
-        pos = np.searchsorted(ids, cand)
-        pos = np.minimum(pos, len(ids) - 1)
+            return _empty(scores)
+        decoded[t] = tp.decode(needed)
+        ids = decoded[t][0]
+        pos = np.minimum(np.searchsorted(ids, cand), len(ids) - 1)
         cand = cand[ids[pos] == cand]
         if cand.size == 0:
-            return empty
-        if scores:
-            decoded[t] = (
-                ids,
-                np.concatenate([p[1] for p in parts]),
-                np.concatenate([p[2] for p in parts]),
-            )
+            return _empty(scores)
 
     if not scores:
         return pd.DataFrame({"doc_id": cand})
-
     score = np.zeros(cand.size, dtype=np.float64)
     for t in idfs:  # idfs order = sorted-term order (score contract)
-        if t in decoded:
-            ids, tfs, dls = decoded[t]
-        else:  # the rarest term: gather from its (memoized) full decode
-            tp = lazy[t]
-            parts = [tp.decode_block(b) for b in range(tp.n_blocks)]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
+        ids, tfs, dls = decoded[t]
         pos = np.searchsorted(ids, cand)
         score += idfs[t] * tf_norm(tfs[pos], dls[pos], avgdl)
-
-    if k is not None and cand.size > k:
-        # tie-aware selection (same contract as the exhaustive kernel)
-        part = np.argpartition(-score, k - 1)
-        kth = score[part[k - 1]]
-        keep = score >= kth
-        cand, score = cand[keep], score[keep]
-    order = np.lexsort((cand, -score))
-    if k is not None:
-        order = order[:k]
-    return pd.DataFrame({"doc_id": cand[order], "score": score[order]})
+    return _ranked(cand, score, k)
 
 
 def wand_topk_segment(
     pdf: pd.DataFrame,
     idfs: dict[int, float],
     avgdl: float,
-    k: int,
+    k: int | None,
     stats: dict | None = None,
+    scores: bool = True,
 ) -> pd.DataFrame:
-    """Disjunctive (OR) block-max top-k for one segment's query postings.
+    """Disjunctive (OR) match for one segment's query postings.
 
-    pdf: posting rows (term_hash, doc_ids, tfs, dls, block_*). idfs is
-    keyed by term_hash; its insertion order is the term-lexicographic
-    query order, which pins the float reduction order (bit-identical to
-    the exhaustive kernel). stats (optional dict) accumulates
-    decoded/total bytes+blocks — the lazy-decode evidence. Returns ≤k
-    (doc_id, score) rows, score desc / doc_id asc.
+    With a k, the block-max sweep returns ≤k (doc_id, score) rows, score
+    desc / doc_id asc. k=None (every match, ranked) and scores=False (the
+    match set's doc_ids only, tf/dl never read) decode every block.
     """
-    if stats is None:
-        stats = {}
-    for key in ("decoded_bytes", "total_bytes", "decoded_blocks",
-                "total_blocks"):
-        stats.setdefault(key, 0)
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-    if len(pdf) == 0:
-        return empty
+    lazy, stats = _lazy_terms(pdf, idfs, avgdl, stats, scores)
+    if not lazy:
+        return _empty(scores)
+    terms = [(tp, idfs[t]) for t, tp in lazy.items()]
 
-    by_term: dict[int, list] = {}
-    for _, row in pdf.iterrows():
-        if len(row["block_last"]) == 0:
-            continue
-        by_term.setdefault(row["term_hash"], []).append(row)
-    # idfs-order iteration (= sorted-term order) pins the float reduction
-    # order so WAND and the exhaustive kernel produce bit-identical scores
-    terms: list[tuple[_LazyTermPostings, float]] = []
-    for t in idfs:
-        rows = by_term.get(t)
-        if rows:
-            terms.append((_LazyTermPostings(rows, avgdl, idfs[t], stats),
-                          idfs[t]))
-    if not terms:
-        return empty
+    if k is None or not scores:
+        full = [(tp.decode(), idf) for tp, idf in terms]
+        if not scores:
+            return pd.DataFrame(
+                {"doc_id": np.unique(np.concatenate([d[0] for d, _ in full]))}
+            )
+        docs, score = _or_sum(
+            [d[0] for d, _ in full],
+            [idf * tf_norm(d[1], d[2], avgdl) for d, idf in full],
+        )
+        return _ranked(docs, score, None)
 
     # elementary intervals: cut doc space at every block boundary
     cuts = np.unique(
@@ -359,29 +374,15 @@ def wand_topk_segment(
                 contrib_all.append(idf * tf_norm(tfs[s:e], dls[s:e], avgdl))
         if not ids_all:
             continue
-        cat = np.concatenate(ids_all)
-        con = np.concatenate(contrib_all)
-        o = np.argsort(cat, kind="stable")
-        cat, con = cat[o], con[o]
-        starts_ = np.flatnonzero(np.concatenate(([True], cat[1:] != cat[:-1])))
-        docs = cat[starts_]
-        scores = np.add.reduceat(con, starts_)
-
-        top_docs = np.concatenate([top_docs, docs])
-        top_scores = np.concatenate([top_scores, scores])
-        if len(top_docs) > k:
-            # tie-aware prune: keep every doc tied with the k-th score —
-            # a tied doc dropped here could be the deterministic (doc_id
-            # asc) winner of the k-th slot
-            part = np.argpartition(-top_scores, k - 1)
-            kth = float(top_scores[part[k - 1]])
-            keep = top_scores >= kth
-            top_docs, top_scores = top_docs[keep], top_scores[keep]
-            theta = kth
-        elif len(top_docs) == k:
-            theta = float(np.min(top_scores))
+        docs, score = _or_sum(ids_all, contrib_all)
+        top_docs, top_scores = _tie_cut(
+            np.concatenate([top_docs, docs]),
+            np.concatenate([top_scores, score]),
+            k,
+        )
+        if len(top_docs) >= k:
+            theta = float(top_scores.min())
 
     if top_docs.size == 0:
-        return empty
-    o = np.lexsort((top_docs, -top_scores))[:k]
-    return pd.DataFrame({"doc_id": top_docs[o], "score": top_scores[o]})
+        return _empty(scores)
+    return _ranked(top_docs, top_scores, k)

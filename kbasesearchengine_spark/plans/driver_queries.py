@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import ann, dedup, store, textstats
-from ..operators.indexer import FORMAT_VERSION, IndexBuilder
+from ..operators.indexer import IndexBuilder
+from ..operators.store import FORMAT_VERSION
 from ..operators.topk import InvertedIndex, topk
 from .search import search_objects as search_objects_facade
 from ..functions.tokenize import tokenize_py

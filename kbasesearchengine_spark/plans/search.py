@@ -225,6 +225,18 @@ class PostProcessing:
     highlight_fields: list | None = None
 
 
+def _range(col: str, lo, hi) -> Column | None:
+    """P3 range, ends inclusive; either end may be None (unbounded), and
+    a range with neither end constrains nothing."""
+    if lo is not None and hi is not None:
+        return F.col(col).between(lo, hi)
+    if lo is not None:
+        return F.col(col) >= lo
+    if hi is not None:
+        return F.col(col) <= hi
+    return None
+
+
 def _predicate(mf: MatchFilter) -> Column | None:
     preds: list[Column] = []
     for k, v in mf.term_eq.items():
@@ -234,25 +246,18 @@ def _predicate(mf: MatchFilter) -> Column | None:
     for k, vs in mf.term_not_in.items():
         preds.append(~F.col(k).isin(vs))
     for k, (lo, hi) in mf.ranges.items():
-        if lo is not None and hi is not None:
-            preds.append(F.col(k).between(lo, hi))  # ends inclusive (P3)
-        elif lo is not None:
-            preds.append(F.col(k) >= lo)
-        elif hi is not None:
-            preds.append(F.col(k) <= hi)
+        r = _range(k, lo, hi)
+        if r is not None:
+            preds.append(r)
     if mf.should:
         clauses = []
         for clause in mf.should:
             cp = None
             for k, v in clause.items():
                 if isinstance(v, tuple) and len(v) == 2:
-                    lo, hi = v  # range clause (either end None)
-                    if lo is not None and hi is not None:
-                        term = F.col(k).between(lo, hi)
-                    elif lo is not None:
-                        term = F.col(k) >= lo
-                    else:
-                        term = F.col(k) <= hi
+                    term = _range(k, *v)
+                    if term is None:
+                        continue
                 elif isinstance(v, list):
                     term = F.col(k).isin(v)
                 else:
@@ -385,62 +390,59 @@ def _apply_post(
     """P10/T13 post-processing over an ordered page."""
     if post.ids_only:
         return page.select("doc_id")  # _source: [guid] analog (P10)
-    if post.highlight and match.full_text:
-        # ONE highlight semantics engine-wide (pinned by the driver oracle
-        # and the reference's ES highlighter, which marks ANALYZED-TOKEN
-        # matches, not raw substrings — `dup` must not light up inside
-        # `dedup`; ElasticIndexingStorageTest.java:1488-1535): one
-        # case-insensitive whole-token pass. \b is the [A-Za-z0-9_]
-        # boundary in BOTH Java regex and DuckDB's RE2 — exactly the
-        # analyzer's token alphabet — and a single alternation pass can't
-        # re-match inside the <em> tags it inserts (a per-term chain
-        # could, e.g. for the query term "em").
-        from ..functions.tokenize import tokenize_py
-
-        terms = sorted(set(tokenize_py(match.full_text)))
-        if terms:  # a term-less pattern '\b()\b' would mark EVERY boundary
-            payload = next(
-                (c for c in ("text", "content", "sub_value")
-                 if c in page.columns), None
-            )
-            if payload is None:
-                # e.g. a store_text=False index — fail with the cause
-                # instead of an unresolvable-column AnalysisException
-                # deep inside plan analysis (ADVICE r4)
-                raise ValueError(
-                    "highlight requested but the index stores no text "
-                    "payload column (looked for text/content/sub_value "
-                    f"in {page.columns})"
-                )
-            hl = F.col(payload)
-            pat = r"(?i)\b(" + "|".join(terms) + r")\b"
-            page = page.withColumn(
-                "highlight", F.regexp_replace(hl, pat, "<em>$1</em>")
-            )
-    if post.highlight_fields and match.full_text:
-        # per-field highlight map (T13 extended): one alternation pass
-        # per requested field; NULL where the field has no token match —
-        # the RPC layer folds highlight_<f> columns into the reference's
-        # {field: [fragments]} shape (require_field_match: false)
+    # ONE highlight semantics engine-wide (pinned by the driver oracle
+    # and the reference's ES highlighter, which marks ANALYZED-TOKEN
+    # matches, not raw substrings — `dup` must not light up inside
+    # `dedup`; ElasticIndexingStorageTest.java:1488-1535): one
+    # case-insensitive whole-token pass. \b is the [A-Za-z0-9_]
+    # boundary in BOTH Java regex and DuckDB's RE2 — exactly the
+    # analyzer's token alphabet — and a single alternation pass can't
+    # re-match inside the <em> tags it inserts (a per-term chain could,
+    # e.g. for the query term "em"). A term-less pattern '\b()\b' would
+    # mark EVERY boundary, so no query terms means no highlight.
+    pat = None
+    if (post.highlight or post.highlight_fields) and match.full_text:
         from ..functions.tokenize import tokenize_py
 
         terms = sorted(set(tokenize_py(match.full_text)))
         if terms:
             pat = r"(?i)\b(" + "|".join(terms) + r")\b"
-            for f_name in post.highlight_fields:
-                if f_name not in page.columns:
-                    raise ValueError(
-                        f"highlight field {f_name!r} is not a column of "
-                        f"this index ({page.columns})"
-                    )
-                src = F.col(f_name).cast("string")
-                page = page.withColumn(
-                    f"highlight_{f_name}",
-                    F.when(
-                        src.rlike(pat),
-                        F.regexp_replace(src, pat, "<em>$1</em>"),
-                    ),
+    if post.highlight and pat:
+        payload = next(
+            (c for c in ("text", "content", "sub_value")
+             if c in page.columns), None
+        )
+        if payload is None:
+            # e.g. a store_text=False index — fail with the cause instead
+            # of an unresolvable-column AnalysisException deep inside plan
+            # analysis (ADVICE r4)
+            raise ValueError(
+                "highlight requested but the index stores no text "
+                "payload column (looked for text/content/sub_value "
+                f"in {page.columns})"
+            )
+        page = page.withColumn(
+            "highlight", F.regexp_replace(F.col(payload), pat, "<em>$1</em>")
+        )
+    if post.highlight_fields and pat:
+        # per-field highlight map (T13 extended): one alternation pass
+        # per requested field; NULL where the field has no token match —
+        # the RPC layer folds highlight_<f> columns into the reference's
+        # {field: [fragments]} shape (require_field_match: false)
+        for f_name in post.highlight_fields:
+            if f_name not in page.columns:
+                raise ValueError(
+                    f"highlight field {f_name!r} is not a column of "
+                    f"this index ({page.columns})"
                 )
+            src = F.col(f_name).cast("string")
+            page = page.withColumn(
+                f"highlight_{f_name}",
+                F.when(
+                    src.rlike(pat),
+                    F.regexp_replace(src, pat, "<em>$1</em>"),
+                ),
+            )
     if post.skip_keys or post.select_keys is not None:
         keep_keys = set(post.select_keys or ())
         drop = [

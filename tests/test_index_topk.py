@@ -116,6 +116,56 @@ def test_doc_filter_applied_before_ranking(spark, built):
     assert {r["doc_id"] for r in res} != set() and len(res) == 10 or len(unfiltered) < 10
 
 
+OR_QUERIES = ["license import", "parser http cache", "rfah quorum"]
+
+
+@pytest.mark.parametrize("query", OR_QUERIES)
+def test_or_every_match_scored_matches_oracle(spark, built, oracle_idx, query):
+    """topk(mode="or", k=None): the exhaustive OR kernel scores every
+    match, each with the oracle's score."""
+    idx_dir, _ = built
+    oidx, _ = oracle_idx
+    got = topk(InvertedIndex(spark, idx_dir), query, k=None, mode="or",
+               hydrate=False).collect()
+    exp = dict(oracle_topk(oidx, query, k=N_ROWS, mode="or"))
+    got = {r["doc_id"]: r["score"] for r in got}
+    assert exp and sorted(got) == sorted(exp)
+    np.testing.assert_allclose(
+        [got[d] for d in sorted(exp)], [exp[d] for d in sorted(exp)],
+        atol=1e-9,
+    )
+
+
+@pytest.mark.parametrize("query", OR_QUERIES)
+def test_or_match_only_matches_oracle(spark, built, oracle_idx, query):
+    """scores=False OR returns exactly the oracle's match set."""
+    idx_dir, _ = built
+    oidx, _ = oracle_idx
+    got = topk(InvertedIndex(spark, idx_dir), query, k=None, mode="or",
+               hydrate=False, scores=False)
+    assert got.columns == ["doc_id"]
+    exp = {d for d, _ in oracle_topk(oidx, query, k=N_ROWS, mode="or")}
+    assert exp and sorted(r["doc_id"] for r in got.collect()) == sorted(exp)
+
+
+@pytest.mark.parametrize("query", OR_QUERIES)
+def test_or_doc_filter_matches_oracle(spark, built, oracle_idx, query):
+    """OR with a doc_filter ranks among the filtered docs only: the
+    top-10 is the oracle's ranking over all docs restricted to them."""
+    idx_dir, _ = built
+    oidx, pdf = oracle_idx
+    got = topk(InvertedIndex(spark, idx_dir), query, k=10, mode="or",
+               doc_filter=F.col("lang") == "python", hydrate=False).collect()
+    python_ids = set(pdf.index[pdf["lang"] == "python"])
+    exp = [(d, s) for d, s in oracle_topk(oidx, query, k=N_ROWS, mode="or")
+           if d in python_ids][:10]
+    assert exp
+    assert [r["doc_id"] for r in got] == [d for d, _ in exp]
+    np.testing.assert_allclose(
+        [r["score"] for r in got], [s for _, s in exp], atol=1e-9
+    )
+
+
 def test_doc_id_assignment_is_sorted_rank(spark, built, oracle_idx):
     idx_dir, _ = built
     _, pdf = oracle_idx

@@ -11,17 +11,15 @@ from pyspark.sql import functions as F
 
 from kbasesearchengine_spark.functions.bm25 import idf as bm25_idf
 from kbasesearchengine_spark.functions.hashing import term_hash
-from kbasesearchengine_spark.operators.topk import (
-    InvertedIndex,
-    _segment_topk_kernel,
-    topk,
-)
+from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
+from kbasesearchengine_spark.operators.wand import and_topk_segment
 from kbasesearchengine_spark.plans.search import (
     MatchFilter,
     Pagination,
     SortingRule,
     search_objects,
 )
+from kernel_reference import eager_segment_topk
 
 
 @pytest.fixture(scope="module")
@@ -54,13 +52,12 @@ AND_QUERIES = [
 
 @pytest.mark.parametrize("query", AND_QUERIES)
 def test_and_lazy_equals_eager(spark, index, query):
-    """Block-skipping AND kernel is bit-identical to the eager one."""
+    """Block-skipping AND kernel is bit-identical to the eager
+    reference."""
     postings, idfs, avgdl = _kernel_inputs(index, query)
     for seg, pdf in postings.groupby("segment"):
-        lazy = _segment_topk_kernel(pdf, idfs, avgdl, 10, "and",
-                                    use_wand=True)
-        eager = _segment_topk_kernel(pdf, idfs, avgdl, 10, "and",
-                                     use_wand=False)
+        lazy = and_topk_segment(pdf, idfs, avgdl, 10)
+        eager = eager_segment_topk(pdf, idfs, avgdl, 10, "and")
         assert list(lazy["doc_id"]) == list(eager["doc_id"]), f"seg {seg}"
         np.testing.assert_array_equal(
             lazy["score"].to_numpy(), eager["score"].to_numpy()
@@ -89,17 +86,15 @@ def test_and_skips_common_term_blocks(spark, tmp_path):
     postings, idfs, avgdl = _kernel_inputs(bidx, "needle the")
     stats = {}
     for seg, pdf in postings.groupby("segment"):
-        _segment_topk_kernel(pdf, idfs, avgdl, 10, "and", stats=stats)
+        and_topk_segment(pdf, idfs, avgdl, 10, stats=stats)
     assert stats["total_blocks"] >= 30
     # the two candidate docs live in 2 blocks of 'the' + 1 of 'needle'
     assert stats["decoded_blocks"] <= 4
     assert stats["decoded_bytes"] < stats["total_bytes"] / 4
-    # correctness on the same index: lazy == eager
+    # correctness on the same index: lazy == eager reference
     for seg, pdf in postings.groupby("segment"):
-        lazy = _segment_topk_kernel(pdf, idfs, avgdl, 10, "and",
-                                    use_wand=True)
-        eager = _segment_topk_kernel(pdf, idfs, avgdl, 10, "and",
-                                     use_wand=False)
+        lazy = and_topk_segment(pdf, idfs, avgdl, 10)
+        eager = eager_segment_topk(pdf, idfs, avgdl, 10, "and")
         assert list(lazy["doc_id"]) == list(eager["doc_id"]) == [10, 3900]
     assert stats["decoded_bytes"] < stats["total_bytes"]
 
@@ -120,9 +115,8 @@ def test_match_only_same_doc_set_and_no_payload_decode(spark, index):
     postings, idfs, avgdl = _kernel_inputs(index, "license import")
     s_scores, s_plain = {}, {}
     for seg, pdf in postings.groupby("segment"):
-        _segment_topk_kernel(pdf, idfs, avgdl, None, "and", stats=s_scores)
-        _segment_topk_kernel(pdf, idfs, avgdl, None, "and", stats=s_plain,
-                             scores=False)
+        and_topk_segment(pdf, idfs, avgdl, None, stats=s_scores)
+        and_topk_segment(pdf, idfs, avgdl, None, stats=s_plain, scores=False)
     assert s_plain["decoded_bytes"] < s_scores["decoded_bytes"]
 
 

@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from kbasesearchengine_spark.corpus import generate_corpus
 from kbasesearchengine_spark.operators.indexer import IndexBuilder
 from kbasesearchengine_spark.operators.merge import merge_postings, plan_merges
-from kbasesearchengine_spark.operators.topk import InvertedIndex, _segment_topk_kernel
+from kbasesearchengine_spark.operators.topk import InvertedIndex
 from kbasesearchengine_spark.functions.bm25 import idf as bm25_idf
 from kbasesearchengine_spark.functions.hashing import term_hash
+from kernel_reference import eager_segment_topk
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +24,7 @@ def _kernel_topk(postings_pdf, idfs, avgdl, mode):
     outs = []
     for _, pdf in postings_pdf.groupby("segment"):
         outs.append(
-            _segment_topk_kernel(pdf, idfs, avgdl, 10, mode, use_wand=False)
+            eager_segment_topk(pdf, idfs, avgdl, 10, mode)
         )
     import pandas as pd
 
@@ -80,7 +81,7 @@ def test_plan_merges_greedy():
 
 def test_apply_merge_keeps_doc_filter_consistent(spark, tmp_path):
     """apply_merge rewrites postings AND docs partitions together: a
-    filtered (cogrouped) query after the on-disk merge must return exactly
+    filtered query after the on-disk merge must return exactly
     what it returned before (the silent-vanish bug class: postings
     remapped without docs.segment)."""
     import shutil
@@ -99,7 +100,7 @@ def test_apply_merge_keeps_doc_filter_consistent(spark, tmp_path):
                   doc_filter=flt, hydrate=False).collect()
     before_or = topk(index, "license import", k=10, mode="or",
                      doc_filter=flt, hydrate=False).collect()
-    assert len(before) > 0  # the scenario must actually exercise the cogroup
+    assert len(before) > 0  # the scenario must actually exercise the filter
 
     seg_map = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 4}
     out = apply_merge(spark, idx_dir, seg_map)

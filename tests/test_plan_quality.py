@@ -5,6 +5,7 @@ parquet, column pruning, broadcast joins for dims, partition pruning on
 the segment directory layout.
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,10 +122,13 @@ def test_filtered_topk_broadcasts_candidates_not_docs(index):
     to the predicate-pruned docs scan — NOT the full filtered doc list
     into a per-segment cogroup (at 10^12 docs a lang='en'-style predicate
     passes ~10^11 rows; candidates are bounded by the rarest term's df).
-    The stopword fallback (candidate estimate above FILTER_CANDIDATE_MAX)
-    keeps the cogroup."""
-    from kbasesearchengine_spark.operators import topk as topk_mod
+    And it must rank among the filtered docs only: the top-10 equals the
+    oracle's ranking over all docs restricted to the filter."""
+    from kbasesearchengine_spark.corpus import generate_corpus_pandas
     from kbasesearchengine_spark.operators.topk import topk
+    from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
+
+    from conftest import SHARED_ROWS
 
     df = topk(index, "license import", k=10, mode="and",
               doc_filter=F.col("lang") == "python", hydrate=False)
@@ -132,21 +136,22 @@ def test_filtered_topk_broadcasts_candidates_not_docs(index):
     full = _full_plan(df)
     # the candidate set is the broadcast side of a hash join
     assert "BroadcastHashJoin" in plan
-    # no cogroup on the selective path
+    # no cogroup anywhere in the plan
     assert "FlatMapCoGroupsInPandas" not in plan
     # the doc predicate reaches the parquet scan
     pushed = full.split("PushedFilters:")
     assert any("lang" in p.splitlines()[0] for p in pushed[1:])
-    # results identical to the cogroup fallback (force it via the bound)
-    rows_fast = [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
-    orig = topk_mod.FILTER_CANDIDATE_MAX
-    topk_mod.FILTER_CANDIDATE_MAX = 0
-    try:
-        df_slow = topk(index, "license import", k=10, mode="and",
-                       doc_filter=F.col("lang") == "python", hydrate=False)
-        assert "FlatMapCoGroupsInPandas" in _plan(df_slow)
-        rows_slow = [(r["doc_id"], round(r["score"], 9))
-                     for r in df_slow.collect()]
-    finally:
-        topk_mod.FILTER_CANDIDATE_MAX = orig
-    assert rows_fast == rows_slow and len(rows_fast) > 0
+
+    pdf = generate_corpus_pandas(SHARED_ROWS)
+    pdf = pdf.sort_values(["repo", "path", "commit"]).reset_index(drop=True)
+    oidx = build_oracle_index(list(zip(range(len(pdf)), pdf["content"])))
+    python_ids = set(pdf.index[pdf["lang"] == "python"])
+    exp = [(d, s) for d, s in
+           oracle_topk(oidx, "license import", k=SHARED_ROWS, mode="and")
+           if d in python_ids][:10]
+    got = df.collect()
+    assert len(exp) == 10
+    assert [r["doc_id"] for r in got] == [d for d, _ in exp]
+    np.testing.assert_allclose(
+        [r["score"] for r in got], [s for _, s in exp], atol=1e-9
+    )

@@ -2,18 +2,16 @@
 north-rule proof obligation: pruning must be rank-identical)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kbasesearchengine_spark.corpus import generate_corpus
-from kbasesearchengine_spark.operators.indexer import IndexBuilder
-from kbasesearchengine_spark.operators.topk import (
-    InvertedIndex,
-    _segment_topk_kernel,
-    topk,
-)
+from kbasesearchengine_spark.functions.codec import encode_grouped
+from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
+from kbasesearchengine_spark.operators.wand import wand_topk_segment
 from kbasesearchengine_spark.functions.bm25 import idf as bm25_idf
 from kbasesearchengine_spark.functions.hashing import term_hash
+from kernel_reference import eager_segment_topk
 
 
 @pytest.fixture(scope="module")
@@ -42,8 +40,8 @@ def test_wand_equals_exhaustive_per_segment(spark, built, query):
         F.col("term_hash").isin(list(idfs))
     ).toPandas()
     for seg, pdf in postings.groupby("segment"):
-        wand = _segment_topk_kernel(pdf, idfs, avgdl, 10, "or", use_wand=True)
-        exact = _segment_topk_kernel(pdf, idfs, avgdl, 10, "or", use_wand=False)
+        wand = wand_topk_segment(pdf, idfs, avgdl, 10)
+        exact = eager_segment_topk(pdf, idfs, avgdl, 10, "or")
         assert list(wand["doc_id"]) == list(exact["doc_id"]), f"seg {seg}"
         np.testing.assert_allclose(wand["score"], exact["score"], atol=1e-9)
 
@@ -60,19 +58,13 @@ def test_wand_end_to_end_matches_naive(spark, built):
     )
 
 
-def test_wand_skips_decoding_bytes():
-    """Lazy decode is real: on a stopword-heavy OR query the sweep stops
-    before touching most of the stopword's blocks — decoded BYTES (not
-    just scored FLOPs) are a fraction of the postings' total bytes, and
-    results still equal the exhaustive kernel. Kernel-level with a
-    synthetic 5000-doc segment (the shared fixture's ~100-doc segments
-    fit in one 128-posting block — nothing to skip there)."""
-    import pandas as pd
-
-    from kbasesearchengine_spark.functions.codec import encode_grouped
-    from kbasesearchengine_spark.functions.bm25 import idf as _idf
-    from kbasesearchengine_spark.operators.wand import wand_topk_segment
-
+def _synthetic_segment():
+    """One 5000-doc segment (the shared fixture's ~100-doc segments fit
+    in one 128-posting block — nothing to skip there): a stopword in
+    every doc (tf 1, dl 100 -> ~39 blocks, tiny ub) and a rare term in
+    50 CLUSTERED docs (one doc-id region -> its single block's upper
+    bound covers only the intervals there) with huge tf and small dl,
+    which dominates the top-10. Returns (pdf, idfs, avgdl)."""
     n = 5000
     rng = np.random.default_rng(7)
 
@@ -86,25 +78,52 @@ def test_wand_skips_decoding_bytes():
         return {"term_hash": th, "df": len(ids),
                 **{k: v[0] for k, v in enc.items()}}
 
-    # stopword: every doc, tf 1, dl 100 -> ~39 blocks, tiny ub
     common = row(1, np.arange(n), np.ones(n), np.full(n, 100))
-    # rare: 50 CLUSTERED docs (one doc-id region -> its single block's
-    # upper bound covers only the intervals there), huge tf, small dl ->
-    # dominates top-10; everywhere else only the stopword's negligible
-    # upper bound remains and the sweep stops without decoding
     rare_ids = np.arange(1000, 1050)
     rare = row(2, rare_ids, rng.integers(5, 21, 50), np.full(50, 50))
     pdf = pd.DataFrame([common, rare])
+    idfs = {1: float(bm25_idf(n, n)), 2: float(bm25_idf(50, n))}
+    return pdf, idfs, 100.0
 
-    avgdl = 100.0
-    idfs = {1: float(_idf(n, n)), 2: float(_idf(50, n))}
-    agg = {"decoded_bytes": 0, "total_bytes": 0,
-           "decoded_blocks": 0, "total_blocks": 0}
+
+def test_wand_skips_decoding_bytes():
+    """Lazy decode is real: on a stopword-heavy OR query the sweep stops
+    before touching most of the stopword's blocks — decoded BYTES (not
+    just scored FLOPs) are a fraction of the postings' total bytes, and
+    results still equal the exhaustive reference. Away from the rare
+    term's block only the stopword's negligible upper bound remains, and
+    the sweep stops without decoding."""
+    pdf, idfs, avgdl = _synthetic_segment()
+    agg = {}
     wand = wand_topk_segment(pdf, idfs, avgdl, 10, stats=agg)
-    exact = _segment_topk_kernel(pdf, idfs, avgdl, 10, "or", use_wand=False)
+    exact = eager_segment_topk(pdf, idfs, avgdl, 10, "or")
     assert list(wand["doc_id"]) == list(exact["doc_id"])
     np.testing.assert_allclose(wand["score"], exact["score"], atol=1e-9)
     assert agg["total_blocks"] > 35  # ~40 common + 1 rare
     # the pruning skips MOST of the stopword's blocks, by bytes
     assert agg["decoded_blocks"] < agg["total_blocks"] * 0.6, agg
     assert agg["decoded_bytes"] < agg["total_bytes"] * 0.6, agg
+
+
+def test_exhaustive_or_decodes_every_block():
+    """k=None (every match, ranked) and scores=False (the match set)
+    have nothing to prune: every block is decoded and counted. The
+    match-only pass reads only the doc-id stream."""
+    pdf, idfs, avgdl = _synthetic_segment()
+    agg = {}
+    got = wand_topk_segment(pdf, idfs, avgdl, None, stats=agg)
+    exact = eager_segment_topk(pdf, idfs, avgdl, None, "or")
+    assert len(got) == 5000
+    assert list(got["doc_id"]) == list(exact["doc_id"])
+    np.testing.assert_allclose(got["score"], exact["score"], atol=1e-9)
+    assert agg["total_bytes"] > 0
+    assert agg["decoded_bytes"] == agg["total_bytes"], agg
+    assert agg["decoded_blocks"] == agg["total_blocks"] > 35, agg
+
+    plain = {}
+    ids = wand_topk_segment(pdf, idfs, avgdl, None, stats=plain, scores=False)
+    assert list(ids.columns) == ["doc_id"]
+    assert list(ids["doc_id"]) == list(range(5000))
+    doc_bytes = sum(len(r["doc_ids"]) for _, r in pdf.iterrows())
+    assert plain["decoded_bytes"] == doc_bytes < plain["total_bytes"], plain
+    assert plain["decoded_blocks"] == plain["total_blocks"], plain
