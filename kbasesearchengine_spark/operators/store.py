@@ -1,7 +1,7 @@
 """Index store: the on-disk layout and how a write is committed (the
 part the reference leaves to Elasticsearch). Build, incremental add,
 update-by-query and merge commit stats, markers and segment swaps here,
-and readers load stats here.
+and readers load stats and open driver-side snapshots here.
 
 Layout under index_dir/:
   docs/        parquet, partitioned by segment: keys, metadata, dl,
@@ -63,6 +63,18 @@ def commit_stats(index_dir: str, stats: dict) -> None:
 
 def is_index(index_dir: str) -> bool:
     return os.path.exists(os.path.join(index_dir, _STATS))
+
+
+def open_dataset(index_dir: str, table: str):
+    """A pyarrow dataset over one table's files as they are listed now: a
+    snapshot, so files committed later are not read through it. Raises
+    OSError (or pyarrow's ArrowInvalid) when the store is not readable
+    through pyarrow; readers then fall back to Spark."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(
+        os.path.join(index_dir, table), format="parquet", partitioning="hive"
+    )
 
 
 # ---------------------------------------------------------------- lineage

@@ -7,32 +7,50 @@ Semantics pinned by the reference:
    ElasticIndexingStorage.java:1364-1375; testMultiwordSearch)
  - top-k by BM25 desc; deterministic tie-break doc_id asc (SURVEY §2.7 O5)
 
-Physical plan (scales by segment — the per-doc-range shard analog), one
-flow for every query:
+Every query starts with a driver-side pyarrow point lookup of its terms'
+global df (the term dictionary). The df sum is the query's posting
+volume, and it picks one of two tiers. Both run the same per-segment
+kernels (wand.py: AND skip-list intersection or OR block-max WAND over
+the block directory, lazy block decode) through one closure,
+``_segment_scorer``, and apply the same global cut (score desc, doc_id
+asc):
 
-  term dictionary ──driver-side pyarrow point lookup──► idfs
-      (skipped for match-only queries, which need term presence only)
-  postings parquet ──filter term_hash ∈ query (parquet pushdown;
-      match-only scans project the doc-id payload and its skip
-      directory only)──►
-  groupBy(segment) applyInPandas   [wand.py: AND skip-list intersection
-      or OR block-max WAND over the block directory, lazy block decode]
+Driver-local tier (posting volume ≤ LOCAL_POSTINGS_MAX) — Lucene answers
+a selective match in-process on the shard that holds the postings:
+  postings snapshot ──pyarrow read, filter term_hash ∈ query (match-only
+      queries read the doc-id payload and its skip directory only)──►
+  per-segment kernels in-process ──► global cut
+  ──► ONE docs scan: segment- and doc_id-pruned to the candidates, the
+      doc_filter in the same scan, scores as a literal map column
+  No postings shuffle, no applyInPandas, no Python worker: one Spark job.
+
+Fan-out tier (larger volumes, or a store pyarrow cannot open):
+  postings parquet ──filter term_hash ∈ query (parquet pushdown; same
+      column pruning)──► groupBy(segment) applyInPandas [kernels]
   ──► with a doc_filter: broadcast join of the segments' matches to the
       predicate-pruned docs scan
   ──► global orderBy(score desc, doc_id).limit(k)   [TakeOrderedAndProject]
   ──► left join to docs for hydration
 
+A handle scores one snapshot: stats, the term dictionary and the
+postings are opened together in ``InvertedIndex.refresh()``.
+
 Scores are computed per (term, doc) from scalars and summed over ≤ a few
 query terms — reduction order is fixed (sorted term order), so scores are
-bit-identical at any parallelism. The eager full-decode scorer that tests
-compare the kernels against lives in tests/kernel_reference.py.
+bit-identical at any parallelism and on either tier. The eager
+full-decode scorer that tests compare the kernels against lives in
+tests/kernel_reference.py.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,8 +58,41 @@ from ..functions.bm25 import idf as bm25_idf
 from ..functions.hashing import term_hash
 from ..functions.tokenize import tokenize_py, tokenize_udf
 from . import store
+from .indexer import POSTING_SCHEMA
 from .store import FORMAT_VERSION
 from .wand import and_topk_segment, wand_topk_segment
+
+log = logging.getLogger(__name__)
+
+# Largest posting volume (summed global df of the query terms) scored by
+# the driver-local tier; larger queries fan out over Spark. Crossover
+# sweep on a 4-core host (local[4]): 20,000-row code-corpus index in 16
+# segments, single-term queries, median of 5 interleaved reads per
+# point (ms):
+#             every match (k=None,      top 10, scored,
+#   df sum    match-only): local/fan-out  hydrated: local/fan-out
+#       60        121 /  354               305 / 1083
+#      512        156 /  371               228 / 1003
+#     1024        175 /  385               261 / 1021
+#     2053        212 /  319               275 /  992
+#     4094        314 /  374               233 /  956
+#     8246        467 /  332               275 / 1041
+#    16444       1074 /  382               267 / 1029
+# When every match is wanted, every match is a candidate and the docs
+# scan's literal doc_id list (and score map) grows with it: that shape
+# crosses over between 4k and 8k postings. A top-k query keeps ≤ k
+# candidates and does not cross over in this range.
+LOCAL_POSTINGS_MAX = 4096
+
+# the postings' Spark schema: the written columns, then the partition
+# column. Given, not inferred — inference runs a Spark job per handle.
+_POSTINGS_READ_SCHEMA = ", ".join(
+    [c for c in POSTING_SCHEMA.split(", ") if not c.startswith("segment ")]
+    + ["segment int"]
+)
+# what a match-only scan reads: the doc-id payload and its skip directory
+_MATCH_ONLY_COLS = ["segment", "term_hash", "doc_ids", "block_last",
+                    "block_doc_off"]
 
 
 # ------------------------------------------------------------ index handle
@@ -50,37 +101,81 @@ from .wand import and_topk_segment, wand_topk_segment
 class InvertedIndex:
     """Read handle over an index directory written by IndexBuilder.
 
-    DataFrame handles are memoized — repeated queries reuse the analyzed
-    relation (file listing cached JVM-side); call ``refresh()`` after a
-    new segment commit (the reference's refreshIndex, S6)."""
+    A handle scores one snapshot of the index: stats.json, the pyarrow
+    datasets of terms/postings and the Spark postings handle (its file
+    listing) are opened together, in ``__init__`` and ``refresh()``.
+    Segments committed afterwards are not seen, on either query tier,
+    until ``refresh()`` (the reference's refreshIndex, S6)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._dfs: dict[str, DataFrame] = {}
-        self.stats = store.read_stats(index_dir)
+        self._logged: set[str] = set()
+        self.refresh()
+
+    def refresh(self) -> None:
+        stats = store.read_stats(self.index_dir)
         # fail FAST on a layout mismatch — a pre-v4 index lacks the
         # term_hash key and the block byte offsets the lazy WAND decode
         # needs, and would otherwise die deep inside query execution
         # with an opaque KeyError
-        got = self.stats.get("format_version")
+        got = stats.get("format_version")
         if got != FORMAT_VERSION:
             raise ValueError(
-                f"index at {index_dir!r} has format_version={got!r}; this "
-                f"reader needs {FORMAT_VERSION}. Rebuild the index "
+                f"index at {self.index_dir!r} has format_version={got!r}; "
+                f"this reader needs {FORMAT_VERSION}. Rebuild the index "
                 "(IndexBuilder.build) — on-disk layouts are not migrated."
             )
+        self.stats = stats
+        self._dfs: dict = {}
+        self._datasets = {t: self._open(t) for t in ("terms", "postings")}
+        # a Spark handle lists its files when it is made: make the
+        # postings' now, so the fan-out scores this snapshot too (and the
+        # terms' when the Spark scan replaces the pyarrow lookup). Docs
+        # are always read by matched doc id, so a docs handle made later
+        # returns the same rows.
+        self._tbl("postings")
+        if self._datasets["terms"] is None:
+            self._tbl("terms")
 
     def _tbl(self, name: str) -> DataFrame:
         if name not in self._dfs:
-            self._dfs[name] = self.spark.read.parquet(
+            reader = self.spark.read
+            if name == "postings":
+                reader = reader.schema(_POSTINGS_READ_SCHEMA)
+            self._dfs[name] = reader.parquet(
                 os.path.join(self.index_dir, name)
             )
         return self._dfs[name]
 
-    def refresh(self) -> None:
-        self._dfs.clear()
-        self.stats = store.read_stats(self.index_dir)
+    def _fallback(self, table: str, err: Exception) -> None:
+        """Record (once per handle and table) that pyarrow cannot read a
+        table and Spark answers instead."""
+        if table not in self._logged:
+            self._logged.add(table)
+            log.info("pyarrow cannot read %s/%s (%s); reading it with Spark",
+                     self.index_dir, table, err)
+
+    def _open(self, table: str):
+        try:
+            return store.open_dataset(self.index_dir, table)
+        except (OSError, pa.lib.ArrowInvalid) as err:
+            self._fallback(table, err)
+            return None
+
+    def _read(self, table: str, hashes: list[int], columns=None):
+        """The snapshot's rows of `table` for these term hashes, or None
+        when pyarrow cannot read the table (the caller uses Spark)."""
+        ds = self._datasets[table]
+        if ds is None:
+            return None
+        try:
+            return ds.to_table(
+                columns=columns, filter=pads.field("term_hash").isin(hashes)
+            )
+        except (OSError, pa.lib.ArrowInvalid) as err:
+            self._fallback(table, err)
+            return None
 
     @property
     def docs(self) -> DataFrame:
@@ -107,32 +202,22 @@ class InvertedIndex:
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df for a handful of query terms.
 
-        Driver-side pyarrow point lookup — no Spark job at all (the
-        Lucene analog reads its term dictionary locally too). The terms
-        files are written hash-sorted (indexer sortWithinPartitions), so
-        parquet row-group min/max statistics prune the read to ~1 row
-        group per file, and only the (term_hash, df) columns are decoded.
-        The ≤ terms×batches hits are summed driver-side. Falls back to
-        the former exchange-free Spark scan when the directory is not
-        readable through pyarrow (non-local index stores)."""
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
+        Driver-side pyarrow point lookup over the terms snapshot — no
+        Spark job at all (the Lucene analog reads its term dictionary
+        locally too). The terms files are written hash-sorted (indexer
+        sortWithinPartitions), so parquet row-group min/max statistics
+        prune the read to ~1 row group per file, and only the
+        (term_hash, df) columns are decoded. The ≤ terms×batches hits are
+        summed driver-side. When pyarrow cannot read the store, the same
+        snapshot's Spark scan answers (and the fallback is logged)."""
         hashes = {term_hash(t): t for t in terms}
-        try:
-            tbl = pads.dataset(
-                os.path.join(self.index_dir, "terms"),
-                format="parquet",
-                partitioning="hive",
-            ).to_table(
-                columns=["term_hash", "df"],
-                filter=pads.field("term_hash").isin(list(hashes)),
-            )
+        tbl = self._read("terms", list(hashes), ["term_hash", "df"])
+        if tbl is not None:
             hits = zip(
                 tbl.column("term_hash").to_pylist(),
                 tbl.column("df").to_pylist(),
             )
-        except (OSError, pa.lib.ArrowInvalid):
+        else:
             rows = (
                 self._tbl("terms")
                 .where(F.col("term_hash").isin(list(hashes)))
@@ -187,16 +272,76 @@ def _segment_scorer(
     mode: str,
     scores: bool,
 ):
-    """The per-segment closure for groupBy(segment).applyInPandas: AND
-    goes to the skip-list intersection, OR to block-max WAND. The query
-    state is a few dozen bytes and rides in the task closure — a
-    sc.broadcast here paid a driver round trip per query for nothing."""
+    """The per-segment closure both tiers run: AND goes to the skip-list
+    intersection, OR to block-max WAND. On the fan-out tier it is the
+    applyInPandas function; the query state is a few dozen bytes and
+    rides in the task closure — a sc.broadcast here paid a driver round
+    trip per query for nothing."""
     kernel = and_topk_segment if mode == "and" else wand_topk_segment
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         return kernel(pdf, idfs, avgdl, k, scores=scores)
 
     return score
+
+
+def _local_hits(
+    index: InvertedIndex,
+    idfs: dict[int, float],
+    avgdl: float,
+    k: int | None,
+    mode: str,
+    scores: bool,
+) -> pd.DataFrame | None:
+    """The driver-local tier's matches — (doc_id, segment[, score]),
+    cut to the global top k when k is given — or None when pyarrow
+    cannot read the postings snapshot."""
+    tbl = index._read("postings", list(idfs),
+                      None if scores else _MATCH_ONLY_COLS)
+    if tbl is None:
+        return None
+    score = _segment_scorer(idfs, avgdl, k, mode, scores)
+    parts = [score(pdf).assign(segment=seg)
+             for seg, pdf in tbl.to_pandas().groupby("segment")]
+    hits = (pd.concat(parts) if parts
+            else pd.DataFrame(columns=["doc_id", "score", "segment"]))
+    if scores and k is not None:
+        o = np.lexsort((hits["doc_id"].to_numpy(), -hits["score"].to_numpy()))
+        hits = hits.iloc[o[:k]]
+    return hits
+
+
+def _local_frame(
+    docs: DataFrame,
+    hits: pd.DataFrame,
+    prune_segments: bool,
+    doc_filter,
+    k: int | None,
+    scores: bool,
+) -> DataFrame:
+    """One docs scan pruned to the hits (their segments, when `docs` is
+    the scoring index's own table, and their doc_ids), with the
+    doc_filter in the same scan and the scores as a literal map column;
+    ranked and cut to k when scored. The literals go to the JVM as one
+    SQL expression each: a Column per literal costs a py4j round trip."""
+    ids = hits["doc_id"].tolist()
+    frame = docs.where(F.expr(f"doc_id IN ({', '.join(map(str, ids))})"))
+    if prune_segments:
+        frame = frame.where(
+            F.col("segment").isin(sorted(set(hits["segment"].tolist())))
+        )
+    if doc_filter is not None:
+        frame = frame.where(doc_filter)
+    if not scores:
+        return frame
+    pairs = ", ".join(
+        f"{d}L, {s!r}D" for d, s in zip(ids, hits["score"].tolist())
+    )
+    return (
+        frame.withColumn("score", F.expr(f"map({pairs})")[F.col("doc_id")])
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(len(ids) if k is None else k)
+    )
 
 
 def topk(
@@ -207,13 +352,14 @@ def topk(
     doc_filter=None,
     hydrate: bool = True,
     scores: bool = True,
+    join_to: InvertedIndex | None = None,
 ) -> DataFrame:
     """BM25 top-k over the inverted index.
 
     doc_filter: optional Column predicate over the docs table (the
     reference's non-scoring filter context, ElasticIndexingStorage.java:
     1321-1325); applied BEFORE ranking — the segments return every match
-    and the rank cut runs after the join to the filtered docs.
+    and the rank cut runs after the predicate.
     k=None returns ALL matching docs scored (match-only mode, no ranking
     cut) — used for counts/aggregations over the match set.
     scores=False (requires k=None, hydrate=False): return matching
@@ -221,56 +367,88 @@ def topk(
     byte streams are never read. This is the plan for the reference's
     default non-relevance page order and for hits.total counts
     (ElasticIndexingStorage.java:1498-1501 — score unused there).
+    join_to (with hydrate=False): return the matches as rows of this
+    index's docs table — every column, plus `score` when scored,
+    unordered; the doc_filter then applies to those rows on the local
+    tier. match_frame passes its index (also when scoring one of its
+    field indexes), so the matches are read with the docs once.
     """
     if not scores and (k is not None or hydrate):
         raise ValueError(
             "scores=False is match-only: requires k=None and hydrate=False"
         )
+    if join_to is not None and hydrate:
+        raise ValueError("join_to returns docs rows: requires hydrate=False")
     spark = index.spark
     terms = sorted(set(tokenize_py(query)))
     n, avgdl = index.stats["n_docs"], index.stats["avgdl"]
     out_schema = "doc_id bigint, score double" if scores else "doc_id bigint"
 
-    # the empty frame costs a py4j round trip — build it lazily, only on
-    # the early-return paths
+    def joined(top: DataFrame) -> DataFrame:
+        return top if join_to is None else join_to.docs.join(top, "doc_id")
+
+    # the empty answer, built only on the early-return paths: a filter
+    # Catalyst folds to an empty relation, so collecting it runs no job
+    # (a frame made from a Python list runs one, on Python workers)
     def empty():
-        return spark.createDataFrame([], out_schema)
+        cols = [F.lit(None).cast("bigint").alias("doc_id")]
+        if scores:
+            cols.append(F.lit(None).cast("double").alias("score"))
+        return joined(spark.range(1).select(*cols).where(F.lit(False)))
 
     if not terms:
         return empty()
-
+    # the global df of every term: the idfs of a scored query, and the
+    # posting volume that picks the tier
+    dfs = index.term_dfs(terms)
+    if mode == "and" and any(t not in dfs for t in terms):
+        return empty()  # conjunctive: a term with no postings
     # idfs is keyed by term_hash; its insertion order is the sorted-term
     # order (terms is sorted above), the order the kernels reduce in
-    # (score contract)
+    # (score contract). Match-only queries need term presence only: a
+    # globally absent term simply has no posting rows.
     if scores:
-        # idf needs the global df: an exchange-free driver-side point
-        # lookup (plans/r06/term_dfs_after.txt)
-        dfs = index.term_dfs(terms)
-        if mode == "and" and any(t not in dfs for t in terms):
-            return empty()  # conjunctive: a term with no postings
         idfs = {term_hash(t): float(bm25_idf(dfs[t], n))
                 for t in terms if t in dfs}
         if not idfs:
             return empty()
-        postings_q = index.postings.where(F.col("term_hash").isin(list(idfs)))
     else:
-        # match-only (non-relevance pages / hits.total / type aggs): the
-        # kernels need term PRESENCE only, so no term dictionary lookup —
-        # a globally absent term simply has no posting rows. The scan is
-        # column-pruned to the doc-id payload and its skip directory:
-        # applyInPandas ships every column it is given, and the tf/dl
-        # streams and their block metadata are most of the index bytes.
         idfs = {term_hash(t): 0.0 for t in terms}
-        postings_q = index.postings.where(
-            F.col("term_hash").isin(list(idfs))
-        ).select("segment", "term_hash", "doc_ids", "block_last",
-                 "block_doc_off")
-
     # with a doc_filter the rank cut must come after the predicate, so
     # the segments return every match (k=None)
+    seg_k = k if doc_filter is None else None
+
+    if sum(dfs.values()) <= LOCAL_POSTINGS_MAX:
+        hits = _local_hits(index, idfs, avgdl, seg_k, mode, scores)
+        if hits is not None:
+            if hits.empty:
+                return empty()
+            docs = (join_to or index).docs
+            frame = _local_frame(docs, hits, join_to in (None, index),
+                                 doc_filter, k, scores)
+            score_col = ["score"] if scores else []
+            if join_to is not None:
+                return frame.select(
+                    "doc_id", *[c for c in docs.columns if c != "doc_id"],
+                    *score_col,
+                )
+            if not hydrate:
+                return frame.select("doc_id", *score_col)
+            return frame.select(
+                "doc_id", "score",
+                *[c for c in docs.columns if c not in ("doc_id", "dl")],
+            )
+
+    if scores:
+        postings_q = index.postings.where(F.col("term_hash").isin(list(idfs)))
+    else:
+        # applyInPandas ships every column it is given, and the tf/dl
+        # streams and their block metadata are most of the index bytes
+        postings_q = index.postings.where(
+            F.col("term_hash").isin(list(idfs))
+        ).select(*_MATCH_ONLY_COLS)
     scored = postings_q.groupBy("segment").applyInPandas(
-        _segment_scorer(idfs, avgdl, k if doc_filter is None else None,
-                        mode, scores),
+        _segment_scorer(idfs, avgdl, seg_k, mode, scores),
         schema=out_schema,
     )
     if doc_filter is not None:
@@ -288,7 +466,7 @@ def topk(
     else:
         top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     if not hydrate:
-        return top
+        return joined(top)
     docs = index.docs.drop("dl")
     return (
         top.join(docs, "doc_id", "left")

@@ -313,8 +313,11 @@ def match_frame(
         return empty.withColumn("score", F.lit(0.0)) if scores else empty
     pred = _combined_predicate(index, match, access)
     if match.full_text:
+        # topk returns the matches as this index's docs rows: the docs
+        # are read once, by the local tier's pruned scan or the fan-out's
+        # join
         scoring = index.field_index(match.field) if match.field else index
-        scored = topk(
+        return topk(
             scoring,
             match.full_text,
             k=k if scores else None,
@@ -322,8 +325,8 @@ def match_frame(
             doc_filter=pred,
             hydrate=False,
             scores=scores,
+            join_to=index,
         )
-        return index.docs.join(scored, "doc_id")
     docs = index.docs
     if pred is not None:
         docs = docs.where(pred)

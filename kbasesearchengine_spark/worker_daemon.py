@@ -14,6 +14,14 @@ Selected via ``spark.python.daemon.module`` (session.get_spark sets it;
 ``KBSE_DAEMON_PRELOAD=0`` opts out). The module must be importable by
 the worker Python — get_spark prepends the repo root to PYTHONPATH
 before the JVM gateway launches so the forked interpreter finds it.
+
+Forking after these imports relies on each library being fork-safe:
+pyarrow re-creates its CPU/IO thread pools in a forked child (since
+4.0) and numpy's bundled OpenBLAS stops its threads at fork. The
+minimums are the ones the pandas/Arrow paths of pyspark 4.1 already
+require, pyarrow >= 15.0 and numpy >= 1.22 (run with pyarrow 16.1 and
+numpy 1.26). With an older or custom-built BLAS/Arrow, opt out with
+``KBSE_DAEMON_PRELOAD=0``.
 """
 
 if __name__ == "__main__":
@@ -21,7 +29,7 @@ if __name__ == "__main__":
         import numpy  # noqa: F401
         import pandas  # noqa: F401
         import pyarrow  # noqa: F401
-    except Exception:
+    except ImportError:
         pass
     import pyspark.daemon
 

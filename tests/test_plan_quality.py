@@ -77,10 +77,13 @@ def test_small_dim_join_broadcasts(spark, index):
     assert "BroadcastHashJoin" in _plan(j)
 
 
-def test_topk_final_sort_is_bounded(index):
-    """Global top-k must be TakeOrdered (k-row heap merge), not a full sort."""
+def test_topk_final_sort_is_bounded(index, monkeypatch):
+    """Global top-k must be TakeOrdered (k-row heap merge), not a full sort
+    (the fan-out plan: the local-tier bound is pinned to 0)."""
+    from kbasesearchengine_spark.operators import topk as topk_mod
     from kbasesearchengine_spark.operators.topk import topk
 
+    monkeypatch.setattr(topk_mod, "LOCAL_POSTINGS_MAX", 0)
     df = topk(index, "license import", k=10, mode="and", hydrate=False)
     assert "TakeOrderedAndProject" in _plan(df)
 
@@ -117,18 +120,22 @@ def test_ann_bucketed_partition_pruning(spark, tmp_path):
     assert got[0][0] == 0  # the query vector itself is its own top-1
 
 
-def test_filtered_topk_broadcasts_candidates_not_docs(index):
+def test_filtered_topk_broadcasts_candidates_not_docs(index, monkeypatch):
     """Conjunctive filtered BM25 must ship the (df-bounded) CANDIDATE set
     to the predicate-pruned docs scan — NOT the full filtered doc list
     into a per-segment cogroup (at 10^12 docs a lang='en'-style predicate
     passes ~10^11 rows; candidates are bounded by the rarest term's df).
     And it must rank among the filtered docs only: the top-10 equals the
-    oracle's ranking over all docs restricted to the filter."""
+    oracle's ranking over all docs restricted to the filter. (The fan-out
+    plan: the local-tier bound is pinned to 0.)"""
     from kbasesearchengine_spark.corpus import generate_corpus_pandas
+    from kbasesearchengine_spark.operators import topk as topk_mod
     from kbasesearchengine_spark.operators.topk import topk
     from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
 
     from conftest import SHARED_ROWS
+
+    monkeypatch.setattr(topk_mod, "LOCAL_POSTINGS_MAX", 0)
 
     df = topk(index, "license import", k=10, mode="and",
               doc_filter=F.col("lang") == "python", hydrate=False)

@@ -76,7 +76,8 @@ def test_terms_files_hash_sorted(shared_index_dir):
 def test_spark_fallback_matches_pyarrow(spark, shared_index_dir, monkeypatch):
     """A terms store pyarrow cannot open (OSError) takes the Spark scan,
     which must return the same dfs; any other error in the pyarrow
-    lookup is a defect and must surface, not fall back."""
+    lookup is a defect and must surface, not fall back. The handle opens
+    its pyarrow snapshot in refresh(), so each case reopens it."""
     import pyarrow.dataset as pads
 
     index = InvertedIndex(spark, shared_index_dir)
@@ -89,6 +90,7 @@ def test_spark_fallback_matches_pyarrow(spark, shared_index_dir, monkeypatch):
         raise OSError("terms store not readable through pyarrow")
 
     monkeypatch.setattr(pads, "dataset", unreadable)
+    index.refresh()
     assert index.term_dfs(terms) == want
     assert calls  # the pyarrow path was tried first
 
@@ -97,4 +99,4 @@ def test_spark_fallback_matches_pyarrow(spark, shared_index_dir, monkeypatch):
 
     monkeypatch.setattr(pads, "dataset", broken)
     with pytest.raises(TypeError):
-        index.term_dfs(terms)
+        index.refresh()
