@@ -30,20 +30,25 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.topk import InvertedIndex
+# _apply_post and search_objects are not called here; perfbench/ traces
+# the search layer under these rpc-module names
 from ..plans.search import (
     AccessFilter,
     MatchFilter,
     Pagination,
     PostProcessing,
     SortingRule,
-    _apply_post,
-    _order_exprs,
+    _apply_post,  # noqa: F401
+    _by_relevance,
+    _page,
     get_objects,
     match_frame,
-    search_objects,
+    search_objects,  # noqa: F401
     search_types,
 )
 
@@ -159,6 +164,37 @@ def _object_data(row: dict) -> dict:
     return out
 
 
+def _page_and_total(
+    frame: DataFrame,
+    match: MatchFilter,
+    sorting: list[SortingRule] | None,
+    pagination: Pagination,
+    post: PostProcessing,
+) -> tuple[list[dict], int]:
+    """A page and hits.total, the full match-set size (spec
+    KBaseSearchEngine.spec:262,281), from one pass: the total is counted
+    while the page's own scan pulls every match through (the reference
+    reads both from one ES response, ElasticIndexingStorage.java:1557).
+    The page's sort-and-limit merges per-partition top rows on the
+    driver, so no exchange sits above the count: it runs in the result
+    stage, whose task metrics Spark applies once per partition, and a
+    speculative duplicate task cannot count twice."""
+    obs = Observation()
+    observed = frame.observe(obs, F.count(F.lit(1)).alias("n"))
+    page = _page(observed, match, sorting, pagination, post)
+    rows = [r.asDict(recursive=True) for r in page.collect()]
+    try:
+        return rows, int(obs.get["n"])
+    except Py4JJavaError:
+        # no metrics: Catalyst folded the observed plan to an empty
+        # relation, so the observation never ran. An empty first page
+        # then has no match at all; a past-the-end or count-0 page may
+        # have folded for its own bounds, so it counts.
+        if not rows and pagination.start == 0 < pagination.count:
+            return rows, 0
+        return rows, frame.count()
+
+
 class RpcService:
     """The four reference endpoints over one index.
 
@@ -190,47 +226,13 @@ class RpcService:
             int(pag.get("start", 0)), int(pag.get("count", 50))
         )
         post = _to_post(params.get("post_processing"))
-        # total = hits.total: the FULL match-set size, not the page size
-        # (spec KBaseSearchEngine.spec:262,281; ES hits.total via
-        # ElasticIndexingStorage.java:1557 — the reference reads page AND
-        # total from ONE response). Plan:
-        #  - first page: run the bounded fast path ONE ROW OVER the page
-        #    size; <= count rows back already IS the whole match set
-        #    (total = len, zero extra jobs — including a match set of
-        #    exactly `count` rows, which previously discarded the page
-        #    and recomputed everything); count+1 rows back means a full
-        #    pass was unavoidable anyway
-        #  - otherwise ONE full match pass, persisted, yields the page
-        #    and the count together — never the old bounded-query-plus-
-        #    full-count double computation
-        rows = None
-        if pagination.start == 0:
-            page = search_objects(
-                self.index, mf, sorting=sorting,
-                pagination=Pagination(0, pagination.count + 1),
-                post=post, access=access,
-            )
-            rows = [r.asDict(recursive=True) for r in page.collect()]
-            if len(rows) <= pagination.count:
-                total = len(rows)
-            else:
-                rows = None  # over-full probe: fall through to one-pass plan
-        if rows is None:
-            relevance = bool(sorting) and sorting[0].key == "relevance"
-            frame = match_frame(
-                self.index, mf, access=access, scores=relevance
-            ).persist()
-            try:
-                total = frame.count()
-                page = _apply_post(
-                    frame.orderBy(*_order_exprs(sorting, relevance))
-                    .offset(pagination.start)
-                    .limit(pagination.count),
-                    mf, post,
-                )
-                rows = [r.asDict(recursive=True) for r in page.collect()]
-            finally:
-                frame.unpersist()
+        relevance = _by_relevance(sorting)
+        frame = match_frame(self.index, mf, access=access, scores=relevance)
+        if frame is self.index.no_matches(relevance, rows=True):
+            # known empty before any job: A5, or topk found no candidate
+            rows, total = [], 0
+        else:
+            rows, total = _page_and_total(frame, mf, sorting, pagination, post)
         if post.ids_only:
             objects = [{"guid": r["doc_id"]} for r in rows]
         else:

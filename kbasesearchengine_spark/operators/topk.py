@@ -185,6 +185,22 @@ class InvertedIndex:
     def postings(self) -> DataFrame:
         return self._tbl("postings")
 
+    def no_matches(self, scores: bool, rows: bool) -> DataFrame:
+        """The empty answer: (doc_id[, score]), or with `rows` this
+        index's docs rows (+ `score` when scored). Its filter folds to an
+        empty relation, so collecting it runs no Spark job (a frame made
+        from a Python list runs one, on Python workers). The handle keeps
+        one frame per shape, so a caller can tell an answer known to be
+        empty before any job by identity."""
+        key = f"empty:{scores}:{rows}"
+        if key not in self._dfs:
+            cols = [F.lit(None).cast("bigint").alias("doc_id")]
+            if scores:
+                cols.append(F.lit(None).cast("double").alias("score"))
+            none = self.spark.range(1).select(*cols).where(F.lit(False))
+            self._dfs[key] = self.docs.join(none, "doc_id") if rows else none
+        return self._dfs[key]
+
     @property
     def terms(self) -> DataFrame:
         """Global term dictionary (term_hash, df). Each incremental add
@@ -322,8 +338,9 @@ def _local_frame(
     """One docs scan pruned to the hits (their segments, when `docs` is
     the scoring index's own table, and their doc_ids), with the
     doc_filter in the same scan and the scores as a literal map column;
-    ranked and cut to k when scored. The literals go to the JVM as one
-    SQL expression each: a Column per literal costs a py4j round trip."""
+    ranked and cut to k when scored with a k. The literals go to the JVM
+    as one SQL expression each: a Column per literal costs a py4j round
+    trip."""
     ids = hits["doc_id"].tolist()
     frame = docs.where(F.expr(f"doc_id IN ({', '.join(map(str, ids))})"))
     if prune_segments:
@@ -337,11 +354,13 @@ def _local_frame(
     pairs = ", ".join(
         f"{d}L, {s!r}D" for d, s in zip(ids, hits["score"].tolist())
     )
-    return (
-        frame.withColumn("score", F.expr(f"map({pairs})")[F.col("doc_id")])
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(len(ids) if k is None else k)
-    )
+    frame = frame.withColumn("score", F.expr(f"map({pairs})")[F.col("doc_id")])
+    if k is None:
+        # unordered, like the fan-out's: a ranked cut here would let a
+        # caller's page limit stop the scan before a count observed on
+        # this frame has seen every row
+        return frame
+    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def topk(
@@ -360,8 +379,8 @@ def topk(
     reference's non-scoring filter context, ElasticIndexingStorage.java:
     1321-1325); applied BEFORE ranking — the segments return every match
     and the rank cut runs after the predicate.
-    k=None returns ALL matching docs scored (match-only mode, no ranking
-    cut) — used for counts/aggregations over the match set.
+    k=None returns ALL matching docs scored, unordered (match-only mode,
+    no ranking cut) — used for counts/aggregations over the match set.
     scores=False (requires k=None, hydrate=False): return matching
     doc_ids WITHOUT computing BM25 — no idf math, and the tf/dl posting
     byte streams are never read. This is the plan for the reference's
@@ -372,6 +391,9 @@ def topk(
     unordered; the doc_filter then applies to those rows on the local
     tier. match_frame passes its index (also when scoring one of its
     field indexes), so the matches are read with the docs once.
+    An answer known to be empty before any Spark job (no query terms, an
+    absent AND term, no local-tier candidate) is the `no_matches` frame
+    of the handle whose rows it would carry.
     """
     if not scores and (k is not None or hydrate):
         raise ValueError(
@@ -379,7 +401,6 @@ def topk(
         )
     if join_to is not None and hydrate:
         raise ValueError("join_to returns docs rows: requires hydrate=False")
-    spark = index.spark
     terms = sorted(set(tokenize_py(query)))
     n, avgdl = index.stats["n_docs"], index.stats["avgdl"]
     out_schema = "doc_id bigint, score double" if scores else "doc_id bigint"
@@ -387,14 +408,10 @@ def topk(
     def joined(top: DataFrame) -> DataFrame:
         return top if join_to is None else join_to.docs.join(top, "doc_id")
 
-    # the empty answer, built only on the early-return paths: a filter
-    # Catalyst folds to an empty relation, so collecting it runs no job
-    # (a frame made from a Python list runs one, on Python workers)
-    def empty():
-        cols = [F.lit(None).cast("bigint").alias("doc_id")]
-        if scores:
-            cols.append(F.lit(None).cast("double").alias("score"))
-        return joined(spark.range(1).select(*cols).where(F.lit(False)))
+    def empty() -> DataFrame:
+        if join_to is None:
+            return index.no_matches(scores, rows=False)
+        return join_to.no_matches(scores, rows=True)
 
     if not terms:
         return empty()

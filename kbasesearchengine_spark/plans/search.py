@@ -299,9 +299,11 @@ def match_frame(
     """The FULL filtered match frame (docs columns, + `score` when
     requested) with no ordering/pagination applied — the one computation
     behind pages, hits.total and type aggregations. The RPC layer
-    persists this to produce a page and its total from a single pass
-    (the reference gets both from one ES response,
-    ElasticIndexingStorage.java:1557).
+    observes its row count during the page's own scan, so a page and its
+    total come from one Spark job (the reference gets both from one ES
+    response, ElasticIndexingStorage.java:1557). An answer known to be
+    empty before any job (A5, or topk's early returns) is
+    `index.no_matches(scores, rows=True)`.
 
     scores=False skips ALL BM25 work (no idf math, tf/dl streams never
     decoded) — the reference's default page order is NOT relevance
@@ -309,8 +311,7 @@ def match_frame(
     per-segment candidates (relevance paging only — k implies scores)."""
     if access is not None and access.is_empty():
         # A5 short-circuit: the empty shape without touching the index
-        empty = index.docs.limit(0)
-        return empty.withColumn("score", F.lit(0.0)) if scores else empty
+        return index.no_matches(scores, rows=True)
     pred = _combined_predicate(index, match, access)
     if match.full_text:
         # topk returns the matches as this index's docs rows: the docs
@@ -333,10 +334,12 @@ def match_frame(
     return docs.withColumn("score", F.lit(0.0)) if scores else docs
 
 
-def _order_exprs(
-    sorting: list[SortingRule] | None, relevance: bool
-) -> list[Column]:
-    if relevance:
+def _by_relevance(sorting: list[SortingRule] | None) -> bool:
+    return bool(sorting) and sorting[0].key == "relevance"
+
+
+def _order_exprs(sorting: list[SortingRule] | None) -> list[Column]:
+    if _by_relevance(sorting):
         order = [F.desc("score"), F.asc("doc_id")]
         order += [
             (F.asc(s.key) if s.ascending else F.desc(s.key)) for s in sorting[1:]
@@ -373,14 +376,25 @@ def search_objects(
     if include_subobjects:
         index = index.sub_index()
     pagination = pagination or Pagination()
-    post = post or PostProcessing()
-    relevance = bool(sorting) and sorting[0].key == "relevance"
+    relevance = _by_relevance(sorting)
     frame = match_frame(
         index, match, access=access, scores=relevance,
         k=pagination.start + pagination.count if relevance else None,
     )
+    return _page(frame, match, sorting, pagination, post or PostProcessing())
+
+
+def _page(
+    frame: DataFrame,
+    match: MatchFilter,
+    sorting: list[SortingRule] | None,
+    pagination: Pagination,
+    post: PostProcessing,
+) -> DataFrame:
+    """One page of a match frame: sort order, offset, limit, then
+    post-processing — the facade's page and the RPC's."""
     page = (
-        frame.orderBy(*_order_exprs(sorting, relevance))
+        frame.orderBy(*_order_exprs(sorting))
         .offset(pagination.start)
         .limit(pagination.count)
     )

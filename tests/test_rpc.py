@@ -2,6 +2,8 @@
 param translation SearchMethods.java:102-194): every endpoint through the
 envelope, results equal to direct facade calls."""
 
+import itertools
+
 import pytest
 
 from kbasesearchengine_spark.api.rpc import RpcService, serve
@@ -13,6 +15,8 @@ from kbasesearchengine_spark.plans.search import (
     SortingRule,
     search_objects,
 )
+
+_groups = itertools.count()
 
 
 @pytest.fixture(scope="module")
@@ -32,8 +36,12 @@ versions:
         full-text: true
 """
     )
+    index = InvertedIndex(spark, shared_index_dir)
+    # a handle's docs frame infers its schema with a job when first made:
+    # make it here, so the job-counting tests count only their own jobs
+    index.docs
     return RpcService(
-        InvertedIndex(spark, shared_index_dir),
+        index,
         type_col="lang",
         specs={"TestObj": spec},
         groups_for=lambda user: {"alice": [7], "bob": []}.get(user, []),
@@ -205,45 +213,53 @@ def test_total_is_match_set_size_not_page_size(svc):
     assert one["total"] == len(one["objects"]) == 0
 
 
-def test_deep_page_total_is_one_pass(svc, monkeypatch):
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"test-rpc-{next(_groups)}"
+    sc.setJobGroup(group, "rpc job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _frame_jobs(spark, svc, mf, relevance=False):
+    """Spark jobs of one collect of the full match frame: one pass."""
+    from kbasesearchengine_spark.plans.search import match_frame
+
+    return _jobs(spark, lambda: match_frame(
+        svc.index, mf, scores=relevance).collect())[1]
+
+
+def test_deep_page_total_is_one_pass(spark, svc):
     """G3 without a second query (ElasticIndexingStorage.java:1557 reads
-    page AND total from ONE response): a deep page must build the match
-    frame ONCE — total comes from the persisted frame, not a separate
-    count_objects job. Probe: count topk invocations (one per match-
-    frame construction)."""
-    from kbasesearchengine_spark.plans import search as search_mod
-
-    calls = {"n": 0}
-    real_topk = search_mod.topk
-
-    def probe(*a, **kw):
-        calls["n"] += 1
-        return real_topk(*a, **kw)
-
-    monkeypatch.setattr(search_mod, "topk", probe)
-    out = _call(svc, "search_objects", {
+    page AND total from ONE response): a deep page and its total come
+    from one pass over the match frame — no more Spark jobs than one
+    collect of that frame, not a separate count_objects job."""
+    mf = MatchFilter(full_text="license import")
+    one_pass = _frame_jobs(spark, svc, mf)
+    out, jobs = _jobs(spark, lambda: _call(svc, "search_objects", {
         "match_filter": {"full_text_in_all": "license import"},
         "pagination": {"start": 5, "count": 5},
-    })
-    assert calls["n"] == 1
+    }))
+    assert jobs <= one_pass
     from kbasesearchengine_spark.plans.search import count_objects
 
-    assert out["total"] == count_objects(
-        svc.index, MatchFilter(full_text="license import")
-    )
+    assert out["total"] == count_objects(svc.index, mf)
     assert len(out["objects"]) == 5
     # deep RELEVANCE page: also one pass, scores still correct order
-    calls["n"] = 0
-    rel = _call(svc, "search_objects", {
+    one_pass = _frame_jobs(spark, svc, mf, relevance=True)
+    rel, jobs = _jobs(spark, lambda: _call(svc, "search_objects", {
         "match_filter": {"full_text_in_all": "license import"},
         "sorting_rules": [{"property": "relevance"}],
         "pagination": {"start": 5, "count": 5},
-    })
-    assert calls["n"] == 1
+    }))
+    assert jobs <= one_pass
     assert rel["total"] == out["total"]
     direct = search_objects(
-        svc.index, MatchFilter(full_text="license import"),
-        sorting=[SortingRule("relevance")],
+        svc.index, mf, sorting=[SortingRule("relevance")],
     ).offset(5).limit(5).collect()
     assert [o["guid"] for o in rel["objects"]] == [
         r["doc_id"] for r in direct
@@ -272,29 +288,43 @@ def test_per_field_highlight_map(svc):
         assert "_all" in hl  # legacy single-payload fragment rides along
 
 
-def test_exactly_full_first_page_is_one_pass(svc, monkeypatch):
-    """An exactly-count match set must learn its total from the bounded
-    fast path (which probes count+1 rows) WITHOUT falling back to the
-    full persisted pass — one underlying query, not two (r6: the former
-    fast path discarded an exactly-full page and recomputed everything)."""
-    from kbasesearchengine_spark.plans import search as search_mod
+def test_exactly_full_first_page_is_one_pass(spark, svc):
+    """An exactly-count match set learns its total from the page's own
+    pass — no more Spark jobs than one collect of the match frame (r6:
+    a former fast path discarded an exactly-full page and recomputed
+    everything)."""
     from kbasesearchengine_spark.plans.search import count_objects
 
-    n_match = count_objects(svc.index, MatchFilter(full_text="license import"))
+    mf = MatchFilter(full_text="license import")
+    n_match = count_objects(svc.index, mf)
     assert n_match > 0
-
-    calls = {"n": 0}
-    real_topk = search_mod.topk
-
-    def probe(*a, **kw):
-        calls["n"] += 1
-        return real_topk(*a, **kw)
-
-    monkeypatch.setattr(search_mod, "topk", probe)
-    out = _call(svc, "search_objects", {
+    one_pass = _frame_jobs(spark, svc, mf)
+    out, jobs = _jobs(spark, lambda: _call(svc, "search_objects", {
         "match_filter": {"full_text_in_all": "license import"},
         "pagination": {"start": 0, "count": n_match},
-    })
-    assert calls["n"] == 1
+    }))
+    assert jobs <= one_pass
     assert out["total"] == n_match
     assert len(out["objects"]) == n_match
+
+
+def test_total_when_the_page_plan_folds(svc):
+    """When Catalyst folds a page's plan to an empty relation the count
+    observation never runs, so the total comes another way: a count-0
+    page (hits.total only) counts the match frame, and a frame that is
+    provably empty (here: a caller's groups on an index that records no
+    grants) has total 0 on a first page and on a deep one."""
+    n_all = _call(svc, "search_objects", {
+        "match_filter": {}, "pagination": {"start": 0, "count": 1},
+    })["total"]
+    none = _call(svc, "search_objects", {
+        "match_filter": {}, "pagination": {"start": 0, "count": 0},
+    })
+    assert none["objects"] == [] and none["total"] == n_all > 0
+    for start in (0, 10):
+        out = _call(svc, "search_objects", {
+            "match_filter": {"full_text_in_all": "license"},
+            "access_filter": {"with_private": 1},
+            "pagination": {"start": start, "count": 5},
+        }, user="alice")
+        assert out["objects"] == [] and out["total"] == 0

@@ -1,0 +1,190 @@
+"""RpcService.search_objects pages: the page and hits.total come from one
+pass over the match frame (the reference reads both from one ES
+response, ElasticIndexingStorage.java:1557). Every case runs on both
+query tiers (topk.LOCAL_POSTINGS_MAX forced to 0 and to sys.maxsize) and
+must equal the brute-force oracle, in total and in guids, within a
+Spark-job budget read from the status tracker."""
+
+import itertools
+import shutil
+import sys
+
+import pytest
+from pyspark.sql import functions as F
+
+from kbasesearchengine_spark.api import rpc
+from kbasesearchengine_spark.corpus import generate_corpus_pandas
+from kbasesearchengine_spark.operators import topk as T
+from kbasesearchengine_spark.operators.mutate import share_with_group
+from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
+from kbasesearchengine_spark.plans.search import (
+    AccessFilter,
+    MatchFilter,
+    match_frame,
+)
+
+from conftest import SHARED_ROWS
+
+KEYS = ["repo", "path", "commit"]
+GROUP = 7
+MID_PAIR = "stream_946bac heap_1be0d7"  # AND: a few dozen docs
+HEAD = "license"  # most docs
+RARE_PAIR = "rfah quorum"  # AND: no doc has both
+ABSENT = "rfah zz_absent_token"
+TIERS = {"fanout": 0, "local": sys.maxsize}
+_groups = itertools.count()
+
+
+@pytest.fixture(scope="module")
+def svc(spark, shared_index_dir, tmp_path_factory):
+    """The shared index with every third doc shared with GROUP."""
+    d = str(tmp_path_factory.mktemp("rpc_pages") / "idx")
+    shutil.copytree(shared_index_dir, d)
+    share_with_group(spark, d, F.col("doc_id") % 3 == 0, GROUP)
+    index = T.InvertedIndex(spark, d)
+    # a handle's docs frame infers its schema with a job when first made:
+    # make it here, so each case counts only its own jobs
+    index.docs
+    return rpc.RpcService(
+        index, groups_for=lambda user: {"alice": [GROUP]}.get(user, []),
+    )
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    pdf = generate_corpus_pandas(SHARED_ROWS)
+    pdf = pdf.sort_values(KEYS).reset_index(drop=True)
+    ids = range(len(pdf))
+    return {
+        "index": build_oracle_index(list(zip(ids, pdf["content"]))),
+        "lang": dict(zip(ids, pdf["lang"])),
+    }
+
+
+# id -> (query, relevance, start, count, lang, user); a count of None is
+# the match-set size (an exactly full first page) and a start of None is
+# past it
+CASES = {
+    "first_fits": (MID_PAIR, False, 0, 200, None, None),
+    "first_overflows": (MID_PAIR, True, 0, 5, None, None),
+    "first_exactly_full": (MID_PAIR, False, 0, None, None, None),
+    "first_exactly_full_relevance": (MID_PAIR, True, 0, None, None, None),
+    "deep_ids": (MID_PAIR, False, 10, 10, None, None),
+    "deep_relevance": (MID_PAIR, True, 10, 10, None, None),
+    "past_the_end": (MID_PAIR, False, None, 10, None, None),
+    "past_the_end_relevance": (MID_PAIR, True, None, 10, None, None),
+    "count_zero": (MID_PAIR, False, 0, 0, None, None),
+    "lang_deep_ids": (HEAD, False, 50, 20, "python", None),
+    "lang_deep_relevance": (HEAD, True, 50, 10, "python", None),
+    "access_relevance": (MID_PAIR, True, 0, 8, None, "alice"),
+    "access_deep_ids": (HEAD, False, 40, 10, None, "alice"),
+    "no_full_text_lang": (None, False, 100, 10, "go", None),
+    "empty_intersection": (RARE_PAIR, True, 0, 10, None, None),
+    "absent_term": (ABSENT, False, 0, 10, None, None),
+    "a5_no_groups": (MID_PAIR, True, 0, 10, None, "bob"),
+}
+# answers known empty before any job on every tier; the empty
+# intersection is known empty only once the local tier's kernels ran
+KNOWN_EMPTY = {"absent_term", "a5_no_groups"}
+
+
+def _params(query, relevance, start, count, lang, user):
+    mf: dict = {}
+    if query is not None:
+        mf["full_text_in_all"] = query
+    if lang is not None:
+        mf["lookup_in_keys"] = {"lang": {"value": lang}}
+    params = {"match_filter": mf,
+              "pagination": {"start": start, "count": count},
+              "post_processing": {"ids_only": 1}}
+    if relevance:
+        params["sorting_rules"] = [{"property": "relevance"}]
+    if user is not None:
+        params["access_filter"] = {"with_private": 1}
+    return params
+
+
+def _oracle_ranked(oracle, query, lang, user):
+    """(doc_id, score) of every match, ranked, after the filters."""
+    if query is None:
+        ranked = [(d, 0.0) for d in sorted(oracle["lang"])]
+    else:
+        ranked = oracle_topk(oracle["index"], query, k=SHARED_ROWS)
+    return [
+        (d, s) for d, s in ranked
+        if (lang is None or oracle["lang"][d] == lang)
+        and (user is None or (user == "alice" and d % 3 == 0))
+    ]
+
+
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"rpc-pages-{next(_groups)}"
+    sc.setJobGroup(group, "rpc page job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("tier", sorted(TIERS))
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_page_and_total_equal_oracle_in_one_pass(
+    spark, svc, oracle, monkeypatch, case, tier
+):
+    query, relevance, start, count, lang, user = CASES[case]
+    monkeypatch.setattr(T, "LOCAL_POSTINGS_MAX", TIERS[tier])
+    ranked = _oracle_ranked(oracle, query, lang, user)
+    n = len(ranked)
+    assert bool(n) == (case not in KNOWN_EMPTY | {"empty_intersection"})
+    count = n if count is None else count
+    start = n + 5 if start is None else start
+    want = [d for d, _ in ranked] if relevance else sorted(d for d, _ in ranked)
+    want = want[start:start + count]
+
+    out, jobs = _jobs(spark, lambda: svc.search_objects(
+        _params(query, relevance, start, count, lang, user), user=user))
+    assert out["total"] == n
+    assert [o["guid"] for o in out["objects"]] == want
+
+    # job budget: one pass over the match frame. On the local tier that
+    # is one job; on the fan-out, the jobs of collecting the frame once
+    # (its shuffle and broadcast stages). A count-0 page, or one at or
+    # past the end, may take one more: a count when its plan folded, or,
+    # on the fan-out, the stages an empty frame's own collect skips but
+    # the observation still runs.
+    if case in KNOWN_EMPTY:
+        assert jobs == 0
+        return
+    mf = MatchFilter(full_text=query,
+                     term_eq={"lang": lang} if lang is not None else {})
+    access = AccessFilter(user_groups=[GROUP]) if user else None
+    _, frame_jobs = _jobs(spark, lambda: match_frame(
+        svc.index, mf, access=access, scores=relevance).collect())
+    at_end = start >= n or count == 0
+    assert jobs <= frame_jobs + at_end, (jobs, frame_jobs)
+    if tier == "local":
+        assert jobs <= (0 if n == 0 else 1 + at_end)
+
+
+@pytest.mark.parametrize("tier", sorted(TIERS))
+def test_total_is_counted_in_the_result_stage(spark, svc, monkeypatch, tier):
+    """The observed count has no exchange above it: it runs in the result
+    stage, whose task metrics Spark applies once per partition, so a
+    speculative duplicate task cannot count a row twice."""
+    monkeypatch.setattr(T, "LOCAL_POSTINGS_MAX", TIERS[tier])
+    pages = []
+    real_page = rpc._page
+
+    def spy(*a, **kw):
+        pages.append(real_page(*a, **kw))
+        return pages[-1]
+
+    monkeypatch.setattr(rpc, "_page", spy)
+    out = svc.search_objects(_params(HEAD, True, 50, 10, "python", None))
+    assert out["total"] > 60
+    plan = pages[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "CollectMetrics" in plan
+    assert "Exchange" not in plan.split("CollectMetrics")[0], plan
