@@ -50,11 +50,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.codec import encode_grouped
 from ..functions.tokenize import hash_tokens_expr
 from . import store
-from .store import FORMAT_VERSION
+from .store import FORMAT_VERSION, POSTING_SCHEMA
 
 BLOCK_SIZE = 128  # postings per block-max block
 _OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
@@ -73,13 +74,6 @@ _OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
 # consolidates, so the trade is fragment count (~2x rows, equal bytes at
 # 450k docs) for cache residency.
 FLUSH_PAIRS = 1_500_000
-
-POSTING_SCHEMA = (
-    "segment int, term_hash bigint, df int, doc_ids binary, tfs binary, "
-    "dls binary, block_last array<bigint>, block_max_tf array<bigint>, "
-    "block_min_dl array<bigint>, block_doc_off array<bigint>, "
-    "block_tf_off array<bigint>, block_dl_off array<bigint>"
-)
 
 
 # ---------------------------------------------------------------- doc ids
@@ -237,7 +231,8 @@ def write_docs(
     max_doc_id) during the write — no separate aggregation job. The
     write materializes the frame, so the sort cache is released here.
     Returns (persisted frame, metrics); the posting build runs on the
-    frame as-is (token arrays and doc-range partitioning included).
+    frame as-is (token arrays and doc-range partitioning included),
+    and the metrics carry the written ``docs_schema``.
     """
     cached = _with_segment(docs, seg_size).persist()
     base = [
@@ -256,45 +251,16 @@ def write_docs(
         os.path.join(index_dir, "docs")
     )
     m = obs.get
-    if not m["n_docs"]:
-        store.write_empty(to_store.drop("segment"), index_dir, "docs",
-                          "segment=-1")
     if sort_cache is not None:
         sort_cache.unpersist()
     max_id = m["max_doc_id"]
     return cached, {"n_docs": int(m["n_docs"] or 0),
                     "total_dl": int(m["total_dl"] or 0),
-                    "max_doc_id": -1 if max_id is None else int(max_id)}
+                    "max_doc_id": -1 if max_id is None else int(max_id),
+                    "docs_schema": to_store.schema.jsonValue()}
 
 
 # ---------------------------------------------------------------- postings
-
-
-_POSTING_PA_SCHEMA = None  # built lazily (pyarrow import at worker use)
-
-
-def _posting_pa_schema():
-    global _POSTING_PA_SCHEMA
-    if _POSTING_PA_SCHEMA is None:
-        import pyarrow as pa
-
-        _POSTING_PA_SCHEMA = pa.schema(
-            [
-                ("segment", pa.int32()),
-                ("term_hash", pa.int64()),
-                ("df", pa.int32()),
-                ("doc_ids", pa.binary()),
-                ("tfs", pa.binary()),
-                ("dls", pa.binary()),
-                ("block_last", pa.list_(pa.int64())),
-                ("block_max_tf", pa.list_(pa.int64())),
-                ("block_min_dl", pa.list_(pa.int64())),
-                ("block_doc_off", pa.list_(pa.int64())),
-                ("block_tf_off", pa.list_(pa.int64())),
-                ("block_dl_off", pa.list_(pa.int64())),
-            ]
-        )
-    return _POSTING_PA_SCHEMA
 
 
 def posting_rows(
@@ -368,7 +334,8 @@ def build_postings_from_docs(
         src = src.select(
             "doc_id", "segment", "dl", hash_tokens_expr("_text").alias("_toks")
         )
-    flush_pairs = FLUSH_PAIRS  # read on the driver, shipped in the closure
+    # read on the driver, shipped in the closure
+    flush_pairs, out_schema = FLUSH_PAIRS, store.POSTINGS_ARROW
 
     def _flush(seg_l, doc_l, dl_l, tf_l, code_l):
         seg = np.concatenate(seg_l)
@@ -422,7 +389,6 @@ def build_postings_from_docs(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        out_schema = _posting_pa_schema()
         seg_l, doc_l, dl_l, tf_l, code_l = [], [], [], [], []
         pending = 0
         cols = None
@@ -510,18 +476,15 @@ def write_terms(spark: SparkSession, index_dir: str, batch: int) -> None:
     Strings are intentionally absent (v4): BM25 only needs (hash -> df);
     query terms are hashed driver-side (functions/hashing.py).
     """
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    postings = store.read_table(spark, index_dir, "postings")
     terms = postings.where(F.col("segment") >= batch).groupBy(
         "term_hash"
     ).agg(F.sum("df").alias("df"))
-    obs = Observation()
-    terms.withColumn("batch", F.lit(int(batch))).observe(
-        obs, F.count(F.lit(1)).alias("rows")
-    ).sortWithinPartitions("batch", "term_hash").write.mode(
-        "overwrite"
-    ).partitionBy("batch").parquet(os.path.join(index_dir, "terms"))
-    if not obs.get["rows"]:
-        store.write_empty(terms, index_dir, "terms", f"batch={batch}")
+    terms.withColumn("batch", F.lit(int(batch))).sortWithinPartitions(
+        "batch", "term_hash"
+    ).write.mode("overwrite").partitionBy("batch").parquet(
+        os.path.join(index_dir, "terms")
+    )
 
 
 # ---------------------------------------------------------------- full build
@@ -606,7 +569,8 @@ class IndexBuilder:
             stats = {"n_docs": nd, "avgdl": m["total_dl"] / nd if nd else 0.0,
                      "total_dl": m["total_dl"], "max_doc_id": m["max_doc_id"],
                      "num_segments": self.num_segments, "seg_size": seg_size,
-                     "k1": 1.2, "b": 0.75, "format_version": FORMAT_VERSION}
+                     "k1": 1.2, "b": 0.75, "format_version": FORMAT_VERSION,
+                     "docs_schema": m["docs_schema"]}
             store.commit_stats(index_dir, stats)
             store.write_marker(
                 index_dir, "docs", {"rows": nd, "seconds": time.time() - t0}
@@ -617,9 +581,8 @@ class IndexBuilder:
 
         docs_df = cached_docs
         if docs_df is None:
-            stored = spark.read.parquet(os.path.join(index_dir, "docs"))
-            if text_col in stored.columns:
-                docs_df = stored
+            if text_col in store.docs_schema(stats).names:
+                docs_df = store.read_table(spark, index_dir, "docs", stats)
             else:
                 # store_text=False resume: re-derive the assigned frame
                 # from the corpus (doc_id = sort rank — deterministic)
@@ -654,9 +617,6 @@ class IndexBuilder:
                 os.path.join(index_dir, "postings")
             )
             m = obs.get
-            if not m["rows"]:  # empty corpus
-                store.write_empty(postings.drop("segment"), index_dir,
-                                  "postings", "segment=-1")
             store.write_marker(index_dir, f"group-{gi}", {
                 "segments": segs,
                 "rows": int(m["rows"] or 0),
@@ -718,7 +678,7 @@ def build_field_index(
     field-scoped) but drops the primary text payload.
     """
     primary = store.read_stats(index_dir)
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).drop(
+    docs = store.read_table(spark, index_dir, "docs", primary).drop(
         "dl", "sha256", "segment", *drop_cols
     )
     sub_dir = os.path.join(index_dir, "fields", field)
@@ -871,7 +831,8 @@ def union_version_docs(spark: SparkSession, base_dir: str) -> DataFrame:
     docs tables BY NAME with null-filling for keys a version does not
     define (unionByName(allowMissingColumns) — incompatible schemas
     coexist, exactly the testTypeVersions invariant). Each row carries
-    its ``spec_version``; (spec_version, doc_id) is the unique key.
+    its ``spec_version``; (spec_version, doc_id) is the unique key. Each
+    version is read with its own committed schema.
     """
     from functools import reduce
 
@@ -882,7 +843,7 @@ def union_version_docs(spark: SparkSession, base_dir: str) -> DataFrame:
     if not vdirs:
         raise FileNotFoundError(f"no version indexes under {base_dir}")
     frames = [
-        spark.read.parquet(os.path.join(base_dir, d, "docs")).withColumn(
+        store.read_table(spark, os.path.join(base_dir, d), "docs").withColumn(
             "spec_version", F.lit(int(d[1:]))
         )
         for d in vdirs
@@ -916,7 +877,8 @@ def add_documents(
                   terms/batch=<first_new_seg> partition (readers aggregate
                   lazily); no global term-dictionary rebuild
       stats    -> arithmetic update from (n_new, total_dl_new), both
-                  observed during the docs write
+                  observed during the docs write; the docs schema gains
+                  the new docs' columns it lacks
 
     Crash safety: every data write is an idempotent dynamic partition
     overwrite keyed off the COMMITTED stats (start_id), so re-running a
@@ -942,6 +904,9 @@ def add_documents(
             stats["total_dl"] = stats.get("total_dl", 0) + marker["total_dl_new"]
             stats["avgdl"] = stats["total_dl"] / stats["n_docs"]
             stats["max_doc_id"] = marker["max_doc_id"]
+            store.add_docs_columns(
+                stats, StructType.fromJson(marker["docs_schema"])
+            )
             store.commit_stats(index_dir, stats)
         return {"added": marker["n_new"],
                 "first_segment": marker["first_segment"],
@@ -986,6 +951,7 @@ def add_documents(
         "total_dl_new": m["total_dl"],
         "first_segment": first_new_seg,
         "max_doc_id": m["max_doc_id"],
+        "docs_schema": m["docs_schema"],
     }
     store.write_marker(index_dir, marker_name, marker)
     return _finish(marker)

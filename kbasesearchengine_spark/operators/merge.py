@@ -13,7 +13,6 @@ bounded groups (total postings of the merged segments per term).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Mapping
 
 import numpy as np
@@ -23,7 +22,8 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import delta_decode, varint_decode
 from . import store
-from .indexer import POSTING_SCHEMA, posting_rows
+from .indexer import posting_rows
+from .store import POSTING_SCHEMA
 
 
 def merge_postings(
@@ -103,14 +103,14 @@ def apply_merge(
     if not sources:
         return {"merged": 0, "targets": []}
     affected = sorted(seg_map)
-    postings = spark.read.parquet(os.path.join(index_dir, "postings")).where(
+    postings = store.read_table(spark, index_dir, "postings").where(
         F.col("segment").isin(affected)
     )
     store.replace_segments(
         spark, index_dir, "postings", merge_postings(postings, seg_map),
         drop=sources,
     )
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).where(
+    docs = store.read_table(spark, index_dir, "docs").where(
         F.col("segment").isin(affected)
     )
     store.replace_segments(

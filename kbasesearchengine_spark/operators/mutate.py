@@ -17,7 +17,6 @@ re-analyze content.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -35,11 +34,13 @@ def update_docs_fields(
     """Set fields on every doc matching `predicate` (update-by-query).
 
     assignments: {column: value-or-Column}. New columns are created
-    (null outside the match set); existing columns keep their old value
-    outside the match set. Returns {updated_rows, updated_segments}.
+    (null outside the match set, also on segments not rewritten: they
+    join the committed docs schema); existing columns keep their old
+    value outside the match set. Returns {updated_rows, updated_segments}.
     """
     require_exactly_once_metrics(spark)
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
+    stats = store.read_stats(index_dir)
+    docs = store.read_table(spark, index_dir, "docs", stats)
 
     segs = [
         int(r["segment"])
@@ -80,6 +81,8 @@ def update_docs_fields(
 
     store.replace_segments(spark, index_dir, "docs", updated)
     n = int(obs.get["n"] or 0)
+    store.add_docs_columns(stats, updated.schema)
+    store.commit_stats(index_dir, stats)
 
     # marker name must be stable ACROSS processes (idempotence protocol:
     # md5, not Python's per-process-salted hash()) yet UNIQUE per logical
@@ -139,7 +142,7 @@ def share_with_group(spark, index_dir: str, predicate: Column, group: int) -> di
     g = int(group)
     return update_docs_fields(
         spark, index_dir, predicate,
-        {"access_groups": F.array_union(_groups_col(spark, index_dir),
+        {"access_groups": F.array_union(_groups_col(index_dir),
                                         F.array(F.lit(g)))},
     )
 
@@ -150,7 +153,7 @@ def unshare_group(spark, index_dir: str, predicate: Column, group: int) -> dict:
     arrays without touching other grants)."""
     return update_docs_fields(
         spark, index_dir, predicate,
-        {"access_groups": F.array_remove(_groups_col(spark, index_dir),
+        {"access_groups": F.array_remove(_groups_col(index_dir),
                                          int(group))},
     )
 
@@ -190,22 +193,8 @@ def share_object_version(
     update-by-query: the pinned version gains the group in lastin+groups;
     every other version loses it from lastin (and extpub), exactly the
     UPDATE_ACC_GRP_VERS_TEMPLATE script."""
-    g, v = int(group), int(version)
-    lastin = _arr_col(spark, index_dir, "access_lastin")
-    groups = _arr_col(spark, index_dir, "access_groups")
-    extpub = _arr_col(spark, index_dir, "extpub")
-    garr = F.array(F.lit(g))
-    is_ver = F.col("version") == v
-    return update_docs_fields(
-        spark, index_dir, obj_predicate,
-        {
-            "access_lastin": F.when(is_ver, F.array_union(lastin, garr))
-            .otherwise(F.array_remove(lastin, g)),
-            "access_groups": F.when(is_ver, F.array_union(groups, garr))
-            .otherwise(groups),
-            "extpub": F.when(is_ver, extpub).otherwise(F.array_remove(extpub, g)),
-        },
-    )
+    return _pin_version(spark, index_dir, obj_predicate, version, group,
+                        publish=False)
 
 
 def unshare_object_version(
@@ -220,16 +209,15 @@ def unshare_object_version(
     actually carrying the pointer are touched (the reference's
     term-lastin query clause)."""
     g = int(group)
-    lastin = _arr_col(spark, index_dir, "access_lastin")
-    extpub = _arr_col(spark, index_dir, "extpub")
+    lastin, extpub, groups = _arr_cols(
+        index_dir, "access_lastin", "extpub", "access_groups"
+    )
     assignments = {
         "access_lastin": F.array_remove(lastin, g),
         "extpub": F.array_remove(extpub, g),
     }
     if home_group is None or int(home_group) != g:
-        assignments["access_groups"] = F.array_remove(
-            _arr_col(spark, index_dir, "access_groups"), g
-        )
+        assignments["access_groups"] = F.array_remove(groups, g)
     pred = obj_predicate & F.coalesce(
         F.array_contains(lastin, g), F.lit(False)
     )
@@ -261,17 +249,21 @@ def publish_externally(
 ) -> dict:
     """publishObjectsExternally analog (:1021-1047 + addExtPubForVersion):
     share the version into the group AND mark it externally published —
-    the exists(extpub) clause makes it publicly visible (:1461-1476)."""
+    the exists(extpub) clause makes it publicly visible (:1461-1476).
+    ONE staged rewrite: the share_object_version assignments with the
+    extpub union folded into the pinned-version branch."""
+    return _pin_version(spark, index_dir, obj_predicate, version, group,
+                        publish=True)
+
+
+def _pin_version(spark, index_dir: str, obj_predicate: Column, version: int,
+                 group: int, publish: bool) -> dict:
     g, v = int(group), int(version)
-    lastin = _arr_col(spark, index_dir, "access_lastin")
-    groups = _arr_col(spark, index_dir, "access_groups")
-    extpub = _arr_col(spark, index_dir, "extpub")
+    lastin, groups, extpub = _arr_cols(
+        index_dir, "access_lastin", "access_groups", "extpub"
+    )
     garr = F.array(F.lit(g))
     is_ver = F.col("version") == v
-    # ONE staged rewrite: the share_object_version assignments with the
-    # extpub union folded into the pinned-version branch (the former
-    # share + second update_docs_fields pair rewrote the matched
-    # segments twice for the same final row state)
     return update_docs_fields(
         spark, index_dir, obj_predicate,
         {
@@ -279,24 +271,24 @@ def publish_externally(
             .otherwise(F.array_remove(lastin, g)),
             "access_groups": F.when(is_ver, F.array_union(groups, garr))
             .otherwise(groups),
-            "extpub": F.when(is_ver, F.array_union(extpub, garr))
-            .otherwise(F.array_remove(extpub, g)),
+            "extpub": F.when(
+                is_ver, F.array_union(extpub, garr) if publish else extpub
+            ).otherwise(F.array_remove(extpub, g)),
         },
     )
 
 
-def _arr_col(spark, index_dir: str, name: str) -> Column:
-    """Current value of an int-array access column, [] when the column
-    doesn't exist yet (first mutation on a fresh index can't reference a
-    missing column)."""
+def _arr_cols(index_dir: str, *names: str) -> list[Column]:
+    """Current values of int-array access columns, [] where null or
+    where the committed docs schema has no such column yet (the first
+    mutation on a fresh index can't reference a missing column)."""
     empty = F.expr("CAST(array() AS array<int>)")
-    cols = spark.read.parquet(os.path.join(index_dir, "docs")).columns
-    if name in cols:
-        return F.coalesce(F.col(name), empty)
-    return empty
+    cols = store.docs_columns(index_dir)
+    return [F.coalesce(F.col(n), empty) if n in cols else empty
+            for n in names]
 
 
-def _groups_col(spark, index_dir: str) -> Column:
+def _groups_col(index_dir: str) -> Column:
     """Current access_groups value, [] when the column doesn't exist yet
     (first share on a fresh index can't reference a missing column).
 
@@ -306,7 +298,7 @@ def _groups_col(spark, index_dir: str) -> Column:
     (plans/search.AccessFilter) never drops a pre-existing scalar grant
     and unshare_group can actually revoke it (ADVICE r4)."""
     empty = F.expr("CAST(array() AS array<int>)")
-    cols = spark.read.parquet(os.path.join(index_dir, "docs")).columns
+    cols = store.docs_columns(index_dir)
     parts = []
     if "access_groups" in cols:
         parts.append(F.col("access_groups"))

@@ -1,21 +1,29 @@
-"""Index store: the on-disk layout and how a write is committed (the
-part the reference leaves to Elasticsearch). Build, incremental add,
-update-by-query and merge commit stats, markers and segment swaps here,
-and readers load stats and open driver-side snapshots here.
+"""Index store: the on-disk layout, the tables' schemas and how a write
+is committed (the part the reference leaves to Elasticsearch). Build,
+incremental add, update-by-query and merge commit stats, markers and
+segment swaps here, and readers load stats, read tables and open
+driver-side snapshots here.
 
 Layout under index_dir/:
   docs/        parquet, partitioned by segment: keys, metadata, dl,
-               doc_id, sha256 (text too unless store_text=False)
-  postings/    parquet, partitioned by segment (indexer.POSTING_SCHEMA:
+               doc_id, sha256 (text too unless store_text=False); its
+               schema is committed in stats.json
+  postings/    parquet, partitioned by segment (POSTINGS_ARROW:
                term_hash, df, compressed doc_ids/tfs/dls, block metadata)
-  terms/       parquet (term_hash, df), partitioned by batch: batch=0 from
-               the build, batch=<first new segment> per incremental add;
-               readers sum df across batches
+  terms/       parquet (TERMS_ARROW: term_hash, df), partitioned by
+               batch: batch=0 from the build, batch=<first new segment>
+               per incremental add; readers sum df across batches
   stats.json   {n_docs, avgdl, total_dl, max_doc_id, num_segments,
-               seg_size, k1, b, format_version}
+               seg_size, k1, b, format_version, docs_schema}
   _lineage/    <name>.json markers with metrics: docs, group-<i>, terms,
                add-<key>, update-<segs>-<tag>, merge-<lo>-<hi>
   _staging/    transient: replace_segments stages rewritten partitions here
+
+Every table read is given its schema (read_table, open_dataset); none is
+inferred from a footer. A column a mutation adds joins the committed
+docs schema and reads as null from files without it (the reference's
+index mapping, ElasticIndexingStorage.java:1797-1873). A zero-row write
+leaves a table with no data file, which reads as empty.
 """
 
 from __future__ import annotations
@@ -24,9 +32,12 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-FORMAT_VERSION = 4  # bump on any index layout/schema change
+FORMAT_VERSION = 5  # bump on any index layout/schema change
 # v3: docs/ partitioned by segment (partition-pruned reads; idempotent
 #     incremental adds + merge write-back), terms/ partitioned by batch
 #     (each add contributes its own partition — O(new) increments, global
@@ -38,6 +49,26 @@ FORMAT_VERSION = 4  # bump on any index layout/schema change
 #     cheaper than string at query time; query terms are hashed
 #     driver-side by the compatible pure-Python XXH64
 #     (functions/hashing.py; collision bound documented there).
+# v5: stats.json commits the docs schema (docs_schema), and every reader
+#     is given a schema; no empty schema-bearing partition is written.
+
+# postings in the order the posting kernel and the merge emit them
+POSTINGS_ARROW = pa.schema(
+    [("segment", pa.int32()), ("term_hash", pa.int64()), ("df", pa.int32())]
+    + [(c, pa.binary()) for c in ("doc_ids", "tfs", "dls")]
+    + [(c, pa.list_(pa.int64())) for c in (
+        "block_last", "block_max_tf", "block_min_dl", "block_doc_off",
+        "block_tf_off", "block_dl_off")]
+)
+POSTING_SCHEMA = from_arrow_schema(POSTINGS_ARROW)
+TERMS_ARROW = pa.schema(
+    [("term_hash", pa.int64()), ("df", pa.int64()), ("batch", pa.int32())]
+)
+# a partitioned table reads with its partition column last
+_ARROW_READ = {"postings": POSTINGS_ARROW.remove(0).append(
+                   POSTINGS_ARROW.field("segment")),
+               "terms": TERMS_ARROW}
+_SPARK_READ = {t: from_arrow_schema(s) for t, s in _ARROW_READ.items()}
 
 _STATS = "stats.json"
 _LINEAGE = "_lineage"
@@ -65,15 +96,53 @@ def is_index(index_dir: str) -> bool:
     return os.path.exists(os.path.join(index_dir, _STATS))
 
 
+# ---------------------------------------------------------------- schemas
+
+
+def docs_schema(stats: dict) -> StructType:
+    """The committed docs schema: data columns, then `segment`."""
+    return StructType.fromJson(stats["docs_schema"])
+
+
+def docs_columns(index_dir: str) -> list[str]:
+    return docs_schema(read_stats(index_dir)).names
+
+
+def add_docs_columns(stats: dict, schema: StructType) -> None:
+    """Set `stats`' docs schema to the committed one plus the columns of
+    `schema` it lacks, matched by name; a committed column keeps its
+    type. The caller commits the stats."""
+    have = [f for f in docs_schema(stats) if f.name != "segment"]
+    names = {f.name for f in have}
+    new = [f for f in schema if f.name not in names and f.name != "segment"]
+    stats["docs_schema"] = StructType(
+        have + new + [StructField("segment", IntegerType())]
+    ).jsonValue()
+
+
+def read_table(
+    spark: SparkSession, index_dir: str, table: str, stats: dict | None = None
+) -> DataFrame:
+    """A Spark read of docs, postings or terms, given its schema: the
+    constant one, or for docs the one committed in `stats` (a handle's
+    snapshot; stats.json as it is now when not given)."""
+    if table == "docs":
+        schema = docs_schema(stats or read_stats(index_dir))
+    else:
+        schema = _SPARK_READ[table]
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, table))
+
+
 def open_dataset(index_dir: str, table: str):
-    """A pyarrow dataset over one table's files as they are listed now: a
-    snapshot, so files committed later are not read through it. Raises
-    OSError (or pyarrow's ArrowInvalid) when the store is not readable
-    through pyarrow; readers then fall back to Spark."""
+    """A pyarrow dataset over the postings or terms files as they are
+    listed now: a snapshot, so files committed later are not read through
+    it. Raises OSError (or pyarrow's ArrowInvalid) when the store is not
+    readable through pyarrow; readers then fall back to Spark."""
     import pyarrow.dataset as pads
 
     return pads.dataset(
-        os.path.join(index_dir, table), format="parquet", partitioning="hive"
+        os.path.join(index_dir, table), schema=_ARROW_READ[table],
+        format="parquet", partitioning="hive",
     )
 
 
@@ -105,15 +174,6 @@ def write_marker(index_dir: str, name: str, payload: dict) -> None:
 
 
 # ---------------------------------------------------------------- segments
-
-
-def write_empty(frame: DataFrame, index_dir: str, table: str, part: str):
-    """A zero-row partitioned write emits no files: leave a schema-bearing
-    empty partition (`frame` minus its partition column) so every reader
-    can still infer the table's schema."""
-    frame.limit(0).write.mode("overwrite").parquet(
-        os.path.join(index_dir, table, part)
-    )
 
 
 def segment_bytes(index_dir: str, table: str, segs) -> int:

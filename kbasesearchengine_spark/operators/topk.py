@@ -58,7 +58,6 @@ from ..functions.bm25 import idf as bm25_idf
 from ..functions.hashing import term_hash
 from ..functions.tokenize import tokenize_py, tokenize_udf
 from . import store
-from .indexer import POSTING_SCHEMA
 from .store import FORMAT_VERSION
 from .wand import and_topk_segment, wand_topk_segment
 
@@ -84,12 +83,6 @@ log = logging.getLogger(__name__)
 # candidates and does not cross over in this range.
 LOCAL_POSTINGS_MAX = 4096
 
-# the postings' Spark schema: the written columns, then the partition
-# column. Given, not inferred — inference runs a Spark job per handle.
-_POSTINGS_READ_SCHEMA = ", ".join(
-    [c for c in POSTING_SCHEMA.split(", ") if not c.startswith("segment ")]
-    + ["segment int"]
-)
 # what a match-only scan reads: the doc-id payload and its skip directory
 _MATCH_ONLY_COLS = ["segment", "term_hash", "doc_ids", "block_last",
                     "block_doc_off"]
@@ -101,11 +94,12 @@ _MATCH_ONLY_COLS = ["segment", "term_hash", "doc_ids", "block_last",
 class InvertedIndex:
     """Read handle over an index directory written by IndexBuilder.
 
-    A handle scores one snapshot of the index: stats.json, the pyarrow
-    datasets of terms/postings and the Spark postings handle (its file
-    listing) are opened together, in ``__init__`` and ``refresh()``.
-    Segments committed afterwards are not seen, on either query tier,
-    until ``refresh()`` (the reference's refreshIndex, S6)."""
+    A handle scores one snapshot of the index: stats.json (with the docs
+    schema every docs read is given), the pyarrow datasets of
+    terms/postings and the Spark postings handle (its file listing) are
+    opened together, in ``__init__`` and ``refresh()``. Segments
+    committed afterwards are not seen, on either query tier, until
+    ``refresh()`` (the reference's refreshIndex, S6)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -140,11 +134,8 @@ class InvertedIndex:
 
     def _tbl(self, name: str) -> DataFrame:
         if name not in self._dfs:
-            reader = self.spark.read
-            if name == "postings":
-                reader = reader.schema(_POSTINGS_READ_SCHEMA)
-            self._dfs[name] = reader.parquet(
-                os.path.join(self.index_dir, name)
+            self._dfs[name] = store.read_table(
+                self.spark, self.index_dir, name, self.stats
             )
         return self._dfs[name]
 

@@ -836,13 +836,10 @@ def _mut_index(spark: SparkSession, sf_dir: str):
             doc_id_col="doc_id",
             resume=True,
         )
-        docs_cols = spark.read.parquet(os.path.join(idx_dir, "docs")).columns
-        if "is_public" not in docs_cols:
+        if "is_public" not in store.docs_columns(idx_dir):
             # M4 publish: every English doc becomes public
             publish_objects(spark, idx_dir, F.col("lang") == "en")
-        if "access_group" not in spark.read.parquet(
-            os.path.join(idx_dir, "docs")
-        ).columns:
+        if "access_group" not in store.docs_columns(idx_dir):
             # M2 share: three sources shared into access group 7
             set_access_group(
                 spark, idx_dir,
@@ -922,8 +919,7 @@ def _vermut_index(spark: SparkSession, sf_dir: str):
             corpus, key_cols=["doc_id"], text_col="text",
             doc_id_col="doc_id", resume=True,
         )
-        docs_cols = spark.read.parquet(os.path.join(idx_dir, "docs")).columns
-        if "access_lastin" not in docs_cols:
+        if "access_lastin" not in store.docs_columns(idx_dir):
             obj = F.col("obj_id")
             update_docs_fields(
                 spark, idx_dir, F.lit(True),
@@ -1083,8 +1079,7 @@ def mut_multigroup(spark, sf_dir):
         )
         # idempotent re-entry: the array column's presence marks the
         # mutation pass as done (same protocol as _mut_index)
-        docs_cols = spark.read.parquet(os.path.join(idx_dir, "docs")).columns
-        if "access_groups" not in docs_cols:
+        if "access_groups" not in store.docs_columns(idx_dir):
             share_with_group(spark, idx_dir, F.col("source") == "src2", 7)
             share_with_group(spark, idx_dir, F.col("source") == "src2", 9)
             share_with_group(spark, idx_dir, F.col("source") == "src4", 9)
@@ -1327,7 +1322,7 @@ def idx_resume_rebuild(spark, sf_dir):
                 doc_id_col="doc_id", resume=True)
     stats = store.read_stats(idx_dir)
     total_postings = (
-        spark.read.parquet(os.path.join(idx_dir, "postings"))
+        store.read_table(spark, idx_dir, "postings")
         .agg(F.sum("df")).collect()[0][0]
     )
     return spark.createDataFrame(

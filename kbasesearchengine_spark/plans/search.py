@@ -91,24 +91,23 @@ class AccessFilter:
         """A5: nothing could possibly match — skip the query entirely."""
         return not (self.admin or self.user_groups or self.with_public)
 
-    def predicate(self, columns: list | None = None) -> Column | None:
-        """columns: the docs table's columns — selects which access
-        metadata exists (version-pinned arrays vs plain array vs legacy
-        scalar grants). None = assume the legacy scalar layout
-        (back-compat)."""
+    def predicate(self, columns: list) -> Column | None:
+        """columns: the docs table's committed columns — selects which
+        access metadata exists (version-pinned arrays vs plain array vs
+        legacy scalar grants)."""
         if self.admin:
             return None  # unconstrained
         preds = []
-        have_cols = set(columns) if columns is not None else None
+        have = set(columns)
         if self.with_public:
-            if have_cols is None or "is_public" in have_cols:
+            if "is_public" in have:
                 preds.append(F.col("is_public") == True)  # noqa: E712
-            if have_cols is not None and "extpub" in have_cols:
+            if "extpub" in have:
                 # external-publication exists clause (:1461-1476)
                 preds.append(
                     F.coalesce(F.size("extpub") > 0, F.lit(False))
                 )
-            if have_cols is not None and "access_lastin" in have_cols:
+            if "access_lastin" in have:
                 # the PUBLIC pseudo-group (-1): the reference's
                 # createAccessMustBlock adds PUBLIC_ACCESS_GROUP to the
                 # group ids matched against lastin[] (groups[] under
@@ -131,7 +130,6 @@ class AccessFilter:
                 )
         if self.user_groups:
             groups = [int(g) for g in self.user_groups]
-            have = have_cols if have_cols is not None else {"access_group"}
             if "access_lastin" in have:
                 # versioned index: lastin (default) vs groups (history)
                 prop = (
@@ -283,7 +281,7 @@ def _combined_predicate(
 ) -> Column | None:
     pred = _predicate(match)
     if access is not None:
-        ap = access.predicate(columns=index.docs.columns)
+        ap = access.predicate(index.docs.columns)
         if ap is not None:
             pred = ap if pred is None else (pred & ap)
     return pred

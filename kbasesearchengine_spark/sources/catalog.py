@@ -53,15 +53,13 @@ def index_ddl(db: str, name: str) -> list[str]:
     Run via spark.sql(...) on a cluster with the Iceberg runtime; in this
     sandbox (no Iceberg jars) the same layout is parquet directories.
     """
-    # the postings column list is DERIVED from the writer's POSTING_SCHEMA
-    # so the DDL can never drift from what build/merge actually emit
-    # (the v4 layout added block_doc_off/tf_off/dl_off byte offsets that
-    # wand.py's lazy per-block decode requires)
-    from ..operators.indexer import POSTING_SCHEMA
-
+    # the postings columns are DERIVED from the store's one schema, so the
+    # DDL can never drift from what build/merge actually emit (the v4
+    # layout added block_doc_off/tf_off/dl_off byte offsets that wand.py's
+    # lazy per-block decode requires)
     posting_cols = ",\n  ".join(
-        f"{c.strip().split(' ', 1)[0]} {c.strip().split(' ', 1)[1].upper()}"
-        for c in POSTING_SCHEMA.split(", ")
+        f"{f.name} {f.dataType.simpleString().upper()}"
+        for f in store.POSTING_SCHEMA.fields
     )
     return [
         f"""CREATE TABLE IF NOT EXISTS {db}.{name}_docs (

@@ -95,14 +95,14 @@ def test_ddl_matches_v4_layout():
     assert "PARTITIONED BY (segment)" in stmts[1]
     assert "PARTITIONED BY (batch)" in stmts[2]
     assert all("CREATE TABLE IF NOT EXISTS" in s for s in stmts)
-    # the postings DDL must carry EVERY writer column (derived from
-    # POSTING_SCHEMA so it can't drift): v4's lazy WAND decode needs the
-    # per-block byte offsets
-    from kbasesearchengine_spark.operators.indexer import POSTING_SCHEMA
+    # the postings DDL must carry EVERY writer column (derived from the
+    # store's POSTING_SCHEMA so it can't drift): v4's lazy WAND decode
+    # needs the per-block byte offsets
+    from kbasesearchengine_spark.operators.store import POSTING_SCHEMA
 
-    for col_def in POSTING_SCHEMA.split(", "):
-        name, typ = col_def.strip().split(" ", 1)
-        assert f"{name} {typ.upper()}" in stmts[1], col_def
+    for f in POSTING_SCHEMA.fields:
+        col_def = f"{f.name} {f.dataType.simpleString().upper()}"
+        assert col_def in stmts[1], col_def
     for off in ("block_doc_off", "block_tf_off", "block_dl_off"):
         assert f"{off} ARRAY<BIGINT>" in stmts[1]
 

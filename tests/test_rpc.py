@@ -36,12 +36,8 @@ versions:
         full-text: true
 """
     )
-    index = InvertedIndex(spark, shared_index_dir)
-    # a handle's docs frame infers its schema with a job when first made:
-    # make it here, so the job-counting tests count only their own jobs
-    index.docs
     return RpcService(
-        index,
+        InvertedIndex(spark, shared_index_dir),
         type_col="lang",
         specs={"TestObj": spec},
         groups_for=lambda user: {"alice": [7], "bob": []}.get(user, []),

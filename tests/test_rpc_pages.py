@@ -6,20 +6,24 @@ must equal the brute-force oracle, in total and in guids, within a
 Spark-job budget read from the status tracker."""
 
 import itertools
+import os
 import shutil
 import sys
 
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
 from kbasesearchengine_spark.api import rpc
-from kbasesearchengine_spark.corpus import generate_corpus_pandas
+from kbasesearchengine_spark.corpus import generate_corpus, generate_corpus_pandas
 from kbasesearchengine_spark.operators import topk as T
+from kbasesearchengine_spark.operators.indexer import IndexBuilder, add_documents
 from kbasesearchengine_spark.operators.mutate import share_with_group
 from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
 from kbasesearchengine_spark.plans.search import (
     AccessFilter,
     MatchFilter,
+    count_objects,
     match_frame,
 )
 
@@ -41,13 +45,13 @@ def svc(spark, shared_index_dir, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("rpc_pages") / "idx")
     shutil.copytree(shared_index_dir, d)
     share_with_group(spark, d, F.col("doc_id") % 3 == 0, GROUP)
-    index = T.InvertedIndex(spark, d)
-    # a handle's docs frame infers its schema with a job when first made:
-    # make it here, so each case counts only its own jobs
-    index.docs
     return rpc.RpcService(
-        index, groups_for=lambda user: {"alice": [GROUP]}.get(user, []),
+        T.InvertedIndex(spark, d), groups_for=_groups_for,
     )
+
+
+def _groups_for(user):
+    return {"alice": [GROUP]}.get(user, [])
 
 
 @pytest.fixture(scope="module")
@@ -188,3 +192,110 @@ def test_total_is_counted_in_the_result_stage(spark, svc, monkeypatch, tier):
     plan = pages[-1]._jdf.queryExecution().executedPlan().toString()
     assert "CollectMetrics" in plan
     assert "Exchange" not in plan.split("CollectMetrics")[0], plan
+
+
+# ------------------------------------------- grants on the added segments
+
+
+@pytest.fixture(scope="module")
+def added(spark, tmp_path_factory):
+    """An index built over 300 rows, then 60 rows added, then the added
+    segments alone shared with GROUP: only their docs files carry
+    access_groups, which the committed docs schema still names."""
+    d = str(tmp_path_factory.mktemp("rpc_added") / "idx")
+    base = generate_corpus(spark, 300, parallelism=4)
+    IndexBuilder(spark, d, num_segments=4, segments_per_commit=4).build(
+        base, key_cols=KEYS
+    )
+    first = add_documents(spark, d, generate_corpus(
+        spark, 360, parallelism=4).subtract(base), KEYS)["first_segment"]
+    share_with_group(spark, d, F.col("segment") >= first, GROUP)
+    rows = pads.dataset(os.path.join(d, "docs"), partitioning="hive").to_table(
+        columns=["doc_id", "content", "lang", "segment"]).to_pylist()
+    ranked = oracle_topk(
+        build_oracle_index([(r["doc_id"], r["content"]) for r in rows]),
+        HEAD, k=len(rows),
+    )
+    shared = {r["doc_id"] for r in rows if r["segment"] >= first}
+    lang = {r["doc_id"]: r["lang"] for r in rows}
+    return {"dir": d, "lang": lang,
+            "ranked": [(i, s) for i, s in ranked if i in shared]}
+
+
+def _types(ranked, lang):
+    out: dict = {}
+    for d, _ in ranked:
+        out[lang[d]] = out.get(lang[d], 0) + 1
+    return out
+
+
+# id -> (engine call on (service, access filter), oracle answer)
+ADDED_CASES = {
+    "search_objects_relevance": (
+        lambda svc, _: svc.search_objects(
+            _params(HEAD, True, 0, 10, None, "alice"), user="alice"),
+        lambda o: {"total": len(o["ranked"]),
+                   "guids": [d for d, _ in o["ranked"][:10]]}),
+    "search_objects_ids": (
+        lambda svc, _: svc.search_objects(
+            _params(HEAD, False, 5, 10, None, "alice"), user="alice"),
+        lambda o: {"total": len(o["ranked"]),
+                   "guids": sorted(d for d, _ in o["ranked"])[5:15]}),
+    "count_objects": (
+        lambda svc, access: count_objects(
+            svc.index, MatchFilter(full_text=HEAD), access),
+        lambda o: len(o["ranked"])),
+    "search_types": (
+        lambda svc, _: svc.search_types(
+            {"match_filter": {"full_text_in_all": HEAD},
+             "access_filter": {"with_private": 1}}, user="alice",
+        )["type_to_count"],
+        lambda o: _types(o["ranked"], o["lang"])),
+}
+
+
+@pytest.mark.parametrize("tier", sorted(TIERS))
+@pytest.mark.parametrize("case", sorted(ADDED_CASES))
+def test_grants_on_added_segments_equal_oracle(
+    spark, added, monkeypatch, case, tier
+):
+    """A grant that only the added segments' files carry still filters:
+    every file reads through the committed docs schema, so the older
+    segments' docs read access_groups as null (not shared)."""
+    run, expect = ADDED_CASES[case]
+    monkeypatch.setattr(T, "LOCAL_POSTINGS_MAX", TIERS[tier])
+    svc = rpc.RpcService(T.InvertedIndex(spark, added["dir"]),
+                         groups_for=_groups_for)
+    got = run(svc, AccessFilter(user_groups=[GROUP]))
+    if isinstance(got, dict) and "objects" in got:
+        got = {"total": got["total"],
+               "guids": [o["guid"] for o in got["objects"]]}
+    assert added["ranked"]
+    assert got == expect(added)
+
+
+@pytest.mark.parametrize("probe", ["docs_columns", "a5_page"])
+@pytest.mark.parametrize("handle", ["fresh", "refreshed"])
+def test_handle_reads_docs_without_a_job(spark, added, handle, probe):
+    """Opening or refreshing a handle and its first docs access run no
+    Spark job: the docs frame is given the committed schema."""
+    index = T.InvertedIndex(spark, added["dir"])
+    index.docs
+
+    def run():
+        if handle == "fresh":
+            ix = T.InvertedIndex(spark, added["dir"])
+        else:
+            ix = index
+            ix.refresh()
+        if probe == "docs_columns":
+            return ix.docs.columns
+        return rpc.RpcService(ix, groups_for=_groups_for).search_objects(
+            _params(MID_PAIR, True, 0, 10, None, "bob"), user="bob")
+
+    out, jobs = _jobs(spark, run)
+    assert jobs == 0
+    if probe == "docs_columns":
+        assert "access_groups" in out
+    else:
+        assert out["total"] == 0 and out["objects"] == []
