@@ -8,14 +8,18 @@ single batch DAG, per SURVEY.md §3.2).
 
 Physical design (built for 100 TB):
 
-  corpus ──build_docs──► docs(doc_id, keys…, lang, sha256, dl, _toks)
-          (dense, partition-invariant: doc_id = rank over sorted keys;
-           tokenized and hashed once, inside the persisted sort)
-  docs ──write_docs: + segment, observe(count, sum dl, max doc_id)
-         during the write──► docs/, stats(N, avgdl)   [tiny, broadcast]
-  docs ──mapInArrow(JVM tokenize+xxhash64 → int64 tf-aggregate + sort +
-         compress)──► postings(segment, term_hash, df, doc_ids␣Δvarint,
-         tfs␣varint, dls␣varint, block_last/block_max_tf/block_min_dl)
+  corpus ──docs_phase: ONE range shuffle + sort on the keys (or the given
+         doc ids), ONE tokenizer pass (_toks, dl, sha256), ONE persisted
+         frame; one per-partition count collect gives n and the rank
+         offsets──► docs(doc_id, keys…, lang, sha256, dl, _toks, segment)
+          (dense, partition-invariant: doc_id = rank over sorted keys =
+           offset[partition] + within-partition sequence)
+  docs ──write_docs: observe(count, sum dl, max doc_id) during the
+         write──► docs/, stats(N, avgdl)   [tiny, broadcast]
+  docs ──per segment group, the group's doc range of the same cache──►
+         mapInArrow(int64 tf-aggregate + sort + compress)──►
+         postings(segment, term_hash, df, doc_ids␣Δvarint, tfs␣varint,
+         dls␣varint, block_last/block_max_tf/block_min_dl)
           [build_postings_from_docs — the one posting builder: one
            RAM-buffer pass per doc-range partition, the Lucene flush
            model; memory bound = FLUSH_PAIRS, consolidated later by the
@@ -30,7 +34,10 @@ more than one doc-range of one term. tf is pre-aggregated inside the Arrow
 batch (map-side combine) before anything shuffles.
 
 The incremental add runs the same docs phase and the same docs and terms
-writers, on doc ids offset past the committed ones.
+writers, on doc ids offset past the committed ones; a resume runs it over
+the stored docs of its pending segments (the corpus, when docs/ holds no
+text). The phase releases its cache on every exit, a failed or killed
+build included.
 
 Resume: segments are built in groups; each group is committed with a
 dynamic-partition-overwrite (idempotent) followed by a lineage marker with
@@ -44,7 +51,10 @@ from __future__ import annotations
 import math
 import os
 import time
+from bisect import bisect_left, bisect_right
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -58,7 +68,6 @@ from . import store
 from .store import FORMAT_VERSION, POSTING_SCHEMA
 
 BLOCK_SIZE = 128  # postings per block-max block
-_OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
 
 # RAM-buffer budget per posting flush, in (doc,term) pairs. Sized for
 # the CACHE tier, not for RAM: the flush kernel is argsort + 5-lane
@@ -76,188 +85,149 @@ _OFFSETS_LITERAL_MAX = 4096  # partition-offset literal-array plan cutover
 FLUSH_PAIRS = 1_500_000
 
 
-# ---------------------------------------------------------------- doc ids
+# ---------------------------------------------------------------- docs phase
 
 
-def assign_doc_ids(
-    df: DataFrame,
-    key_cols: list[str],
-    num_partitions: int | None = None,
-    post_shuffle=None,
-) -> tuple[DataFrame, int, DataFrame]:
-    """Dense doc_id = rank of row under ORDER BY key_cols (unique keys).
+def _partition_rows(batches):
+    """One (partition id, row count) row per non-empty partition, read
+    from its ``_pid`` column: a count with no shuffle, so no map stage of
+    its own (Spark runs each adaptive query stage as a job)."""
+    import pyarrow as pa
 
-    Partition-count-invariant (FIXTURES.md §1): the id is the global sort
-    rank, which does not depend on where range-partition boundaries fall,
-    so local[8] and local[32] assign identical ids. ENTIRELY JVM-side:
-    one offsets job (groupBy partition id) plus a projection that combines
-    the broadcast offset array with monotonically_increasing_id's
-    within-partition sequence (lower 33 bits — rows flow in sorted order,
-    so the sequence IS the partition-local rank). No Arrow crossing, no
-    per-row Python, no driver collect of data rows. Returns
-    (df_with_doc_id, n_rows, sort_cache): the count falls out of the
-    offset pass; sort_cache is the persisted sorted frame the result
-    reads from, for the caller to unpersist once its own frame is
-    materialized (it is a full raw-corpus copy in executor memory).
-
-    post_shuffle: optional DataFrame->DataFrame hook applied AFTER the
-    range shuffle and INSIDE the persisted frame — expensive derived
-    columns (tokenization, hashing, digests) land here so they are
-    computed ONCE, after the partitioner's sampling job (which re-executes
-    the pre-shuffle plan), and reused by every downstream pass off the
-    persisted blocks.
-    """
-    spark = df.sparkSession
-    nump = num_partitions or spark.sparkContext.defaultParallelism
-    sorted_df = df.repartitionByRange(nump, *key_cols).sortWithinPartitions(
-        *key_cols
-    )
-    if post_shuffle is not None:
-        sorted_df = post_shuffle(sorted_df)
-    sorted_df = sorted_df.withColumn("_pid", F.spark_partition_id()).persist()
-    rows = sorted_df.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    counts = {r["_pid"]: r["cnt"] for r in rows}
-    offsets, acc = {}, 0
-    for pid in range(max(counts) + 1 if counts else 0):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-
-    # doc_id = offset[_pid] + within-partition row sequence. The sequence
-    # comes from monotonically_increasing_id's low 33 bits (its contract:
-    # partition id in the high bits, per-partition record number in the
-    # low 33); evaluated over the persisted sorted partitions it counts
-    # rows in sorted order. Up to _OFFSETS_LITERAL_MAX partitions the
-    # offset lookup is element_at on a literal array (O(1), whole-stage
-    # codegen); past that the literal plan itself becomes the bottleneck
-    # (expression-tree size), so a broadcast hash join on _pid takes over
-    # — streaming per partition, so the within-partition row order (and
-    # hence the id sequence) is unchanged. Equality of the two paths is
-    # asserted in tests.
-    seq = F.monotonically_increasing_id() % F.lit(1 << 33)
-    keep = [c for c in sorted_df.columns if c != "_pid"]
-    if not offsets:  # empty input: keep the schema, zero rows
-        result = (
-            sorted_df.select(*keep)
-            .withColumn("doc_id", F.lit(0).cast("bigint"))
-            .limit(0)
+    pid, n = None, 0
+    for rb in batches:
+        if rb.num_rows:
+            pid, n = rb.column(0)[0].as_py(), n + rb.num_rows
+    if n:
+        yield pa.record_batch(
+            [pa.array([pid], pa.int32()), pa.array([n], pa.int64())],
+            names=["_pid", "n"],
         )
-    elif len(offsets) <= _OFFSETS_LITERAL_MAX:
-        offsets_arr = F.array(
-            *[
-                F.lit(offsets.get(p, 0)).cast("bigint")
-                for p in range(len(offsets))
-            ]
-        )
-        result = sorted_df.select(
-            *keep,
-            (
-                F.element_at(offsets_arr, F.col("_pid").cast("int") + 1)
-                + seq
-            ).alias("doc_id"),
-        )
-    else:
-        off_df = spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()],
-            "_pid int, _off bigint",
-        )
-        result = (
-            sorted_df.join(F.broadcast(off_df), "_pid")
-            .select(*keep, (F.col("_off") + seq).alias("doc_id"))
-        )
-    return result, acc, sorted_df
 
 
-# ---------------------------------------------------------------- docs/stats
-
-
-def build_docs(
+@contextmanager
+def docs_phase(
     corpus: DataFrame,
     key_cols: list[str],
-    text_col: str = "content",
+    text_col: str,
     doc_id_col: str | None = None,
     keep_text: bool = True,
-) -> tuple[DataFrame, int, DataFrame | None]:
-    """docs frame: doc_id, keys, metadata, sha256(content), dl, _toks.
+    start_id: int = 0,
+):
+    """The one docs phase of a build, an incremental add and a resume:
+    ``with docs_phase(...) as (docs, n):``.
 
-    sha256 is the per-row invariant carried through the engine (reference
+    One range shuffle: the corpus is range-partitioned and sorted on
+    key_cols (rank ids: doc_id = start_id + rank under ORDER BY key_cols,
+    unique keys) or on the given doc_id_col (doc_id = that column). The
+    tokenizer then runs once per document inside the shuffled frame:
+    ``_toks`` (the hashed-token array the posting kernel consumes), ``dl
+    = size(_toks)`` and ``sha256`` (the per-row invariant; reference
     analog: the md5 system field, ElasticIndexingStorage.java:404-410).
-    Returns (docs, n_docs, sort_cache): the sort cache (None when
-    doc_id_col supplies the ids) is for write_docs to release.
+    keep_text=False drops the raw text after that (store_text=False: the
+    payload is dead weight in executor memory and in docs/).
 
-    The frame also carries a ``_toks`` column (hash_tokens_expr — the
-    hashed token array) computed ONCE inside the post-shuffle persisted
-    frame, with dl = size(_toks): the posting build then consumes the
-    cached arrays instead of re-running the tokenize regex over the full
-    corpus — the whole build touches each document's text with the
-    tokenizer exactly once. keep_text=False additionally drops the raw
-    text from the persisted frame (the store_text=False scale layout:
-    after sha256/dl/_toks are derived, the payload is dead weight in
-    executor memory).
+    One persisted frame, materialized by one per-partition count collect
+    (_partition_rows) that gives n and the rank offsets. A rank id is
+    offset[_pid] + seq: seq is monotonically_increasing_id's low 33 bits
+    (its contract: the per-partition record number; rows flow in sorted
+    order, so it is the partition-local rank), and the offsets go to the
+    JVM as one literal array expression (a Column per literal costs a
+    py4j round trip). The id is the global sort rank wherever the
+    partition boundaries fall, so it does not depend on the partition
+    count (FIXTURES.md §1).
+
+    ``docs(seg_size, lo=0, hi=None)`` projects the cache to the docs
+    frame (doc_id, and segment = doc_id // seg_size), cut to doc ids
+    [lo, hi). A rank-id range is first cut to the partitions that hold
+    it, on the cached ``_pid``: Catalyst does not push a filter on the
+    derived id below the nondeterministic sequence, so that filter alone
+    would scan every cached batch. The cache is released on every exit.
+
+    Range boundaries come from a sample seeded with the RDD id, so the
+    file split of docs/ and the split posting rows depend on how many
+    RDDs the process made before; ids and table rows do not. Compare
+    layouts with each case in a fresh process.
     """
-    if doc_id_col is None:
-        def _prep(sdf: DataFrame) -> DataFrame:
-            sdf = sdf.withColumn("_toks", hash_tokens_expr(text_col))
-            sdf = sdf.withColumn("dl", F.size("_toks").cast("int"))
-            sdf = sdf.withColumn("sha256", F.sha2(F.col(text_col), 256))
-            return sdf if keep_text else sdf.drop(text_col)
-
-        return assign_doc_ids(corpus, key_cols, post_shuffle=_prep)
-    # given ids still need the doc-range partitioning the posting build
-    # relies on (an input read from many files arrives in file order)
-    docs = corpus.withColumn(
-        "doc_id", F.col(doc_id_col).cast("bigint")
-    ).repartitionByRange(
-        corpus.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    ).sortWithinPartitions("doc_id").withColumn(
-        "_toks", hash_tokens_expr(text_col)
-    ).withColumn(
-        "dl", F.size("_toks").cast("int")
-    ).withColumn("sha256", F.sha2(F.col(text_col), 256))
-    return docs, corpus.count(), None
-
-
-def _with_segment(docs: DataFrame, seg_size: int) -> DataFrame:
-    return docs.withColumn(
-        "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
+    if doc_id_col is not None:
+        corpus = corpus.withColumn("doc_id", F.col(doc_id_col).cast("bigint"))
+        key_cols = ["doc_id"]
+    frame = (
+        corpus.repartitionByRange(
+            corpus.sparkSession.sparkContext.defaultParallelism, *key_cols
+        )
+        .sortWithinPartitions(*key_cols)
+        .withColumn("_toks", hash_tokens_expr(text_col))
+        .withColumn("dl", F.size("_toks").cast("int"))
+        .withColumn("sha256", F.sha2(F.col(text_col), 256))
+        .withColumn("_pid", F.spark_partition_id())
     )
+    if not keep_text:
+        frame = frame.drop(text_col)
+    frame = frame.persist()
+    try:
+        counts = dict(frame.select("_pid").mapInArrow(
+            _partition_rows, "_pid int, n long"
+        ).collect())
+        sizes = [counts.get(p, 0) for p in range(max(counts, default=-1) + 1)]
+        n = sum(sizes)
+        offsets = list(accumulate(sizes[:-1], initial=start_id))
+        ends = [o + c for o, c in zip(offsets, sizes)]
+        if doc_id_col is None:
+            doc_id = F.element_at(
+                F.expr(f"array({', '.join(f'{o}L' for o in offsets)})"),
+                F.col("_pid") + 1,
+            ) + F.monotonically_increasing_id() % F.lit(1 << 33)
+        else:
+            doc_id = F.col("doc_id")
+        cols = [c for c in frame.columns if c not in ("doc_id", "_pid")]
+
+        def docs(seg_size: int, lo: int = 0, hi: int | None = None) -> DataFrame:
+            src = frame
+            if hi is not None and doc_id_col is None:
+                src = src.where(F.col("_pid").between(
+                    bisect_right(ends, lo), bisect_left(offsets, hi) - 1
+                ))
+            out = src.select(*cols, doc_id.alias("doc_id")).withColumn(
+                "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
+            )
+            if hi is None:
+                return out
+            return out.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+
+        yield docs, n
+    finally:
+        frame.unpersist()
 
 
-def write_docs(
-    index_dir: str, docs: DataFrame, seg_size: int, sort_cache
-) -> tuple[DataFrame, dict]:
-    """The one docs writer (full build and incremental add): segment a
-    build_docs frame by seg_size doc ids, persist it, and write it minus
-    ``_toks`` to docs/ by segment, observing (n_docs, total_dl,
-    max_doc_id) during the write — no separate aggregation job. The
-    write materializes the frame, so the sort cache is released here.
-    Returns (persisted frame, metrics); the posting build runs on the
-    frame as-is (token arrays and doc-range partitioning included),
-    and the metrics carry the written ``docs_schema``.
+def write_docs(index_dir: str, docs: DataFrame) -> dict:
+    """The one docs writer (full build and incremental add): write a
+    docs-phase frame minus ``_toks`` to docs/ by segment, observing
+    (n_docs, total_dl, max_doc_id) during the write — no separate
+    aggregation job. Returns those metrics and the written
+    ``docs_schema``.
     """
-    cached = _with_segment(docs, seg_size).persist()
     base = [
-        c for c in cached.columns
+        c for c in docs.columns
         if c not in ("_toks", "doc_id", "sha256", "segment")
     ]
     obs = Observation()
-    to_store = cached.select(*base, "doc_id", "sha256", "segment").observe(
+    to_store = docs.select(*base, "doc_id", "sha256", "segment").observe(
         obs,
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("total_dl"),
         F.max("doc_id").alias("max_doc_id"),
     )
-    cached.sparkSession.sparkContext.setJobDescription("index build: docs table")
+    docs.sparkSession.sparkContext.setJobDescription("index build: docs table")
     to_store.write.mode("overwrite").partitionBy("segment").parquet(
         os.path.join(index_dir, "docs")
     )
     m = obs.get
-    if sort_cache is not None:
-        sort_cache.unpersist()
     max_id = m["max_doc_id"]
-    return cached, {"n_docs": int(m["n_docs"] or 0),
-                    "total_dl": int(m["total_dl"] or 0),
-                    "max_doc_id": -1 if max_id is None else int(max_id),
-                    "docs_schema": to_store.schema.jsonValue()}
+    return {"n_docs": int(m["n_docs"] or 0),
+            "total_dl": int(m["total_dl"] or 0),
+            "max_doc_id": -1 if max_id is None else int(max_id),
+            "docs_schema": to_store.schema.jsonValue()}
 
 
 # ---------------------------------------------------------------- postings
@@ -298,18 +268,12 @@ def posting_rows(
     )
 
 
-def build_postings_from_docs(
-    docs: DataFrame, text_col: str = "content"
-) -> DataFrame:
-    """One-shuffle posting build (the Lucene RAM-buffer flush model).
-
-    Raw docs are range-partitioned on (segment, doc_id) — each partition a
-    contiguous doc range — then ONE mapInArrow stage tf-aggregates,
-    groups and compresses. A write_docs frame (full build or incremental
-    add) already carries the hashed-token arrays (``_toks``) and its
-    doc-range partitioning, so it is consumed as-is; the stored docs
-    table a resume re-reads is range-shuffled and then tokenized
-    JVM-side from text_col.
+def build_postings_from_docs(docs: DataFrame) -> DataFrame:
+    """One-stage posting build (the Lucene RAM-buffer flush model) over a
+    docs-phase frame: each partition is a contiguous doc range in doc_id
+    order and carries the hashed-token arrays (``_toks``), so ONE
+    mapInArrow stage tf-aggregates, groups and compresses — no shuffle
+    and no second tokenizer pass.
 
     Memory: one partition's uncompressed postings (bounded by the doc-range
     budget — at scale, size partitions/segments so this fits the worker;
@@ -318,22 +282,7 @@ def build_postings_from_docs(
     A (segment, term) posting may split across a partition boundary —
     readers merge duplicate term rows (disjoint, ordered doc ranges).
     """
-    if "_toks" in docs.columns:
-        src = docs.select("doc_id", "segment", "dl", "_toks")
-    else:
-        src = docs.select(
-            "doc_id", "segment", "dl", F.col(text_col).alias("_text")
-        ).repartitionByRange(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            "segment", "doc_id",
-        ).sortWithinPartitions("segment", "doc_id")
-        # tokenize AND hash JVM-side (codegen'd regexp + xxhash64
-        # transform) AFTER the shuffle — raw text moves over the exchange,
-        # not token arrays; the Arrow boundary then carries int64 hash
-        # arrays and the kernel is whole-array numpy only
-        src = src.select(
-            "doc_id", "segment", "dl", hash_tokens_expr("_text").alias("_toks")
-        )
+    src = docs.select("doc_id", "segment", "dl", "_toks")
     # read on the driver, shipped in the closure
     flush_pairs, out_schema = FLUSH_PAIRS, store.POSTINGS_ARROW
 
@@ -536,11 +485,14 @@ class IndexBuilder:
         committing this many segment groups (simulates a mid-build kill).
 
         store_text=False drops the raw text column from the WRITTEN docs
-        table (keys, metadata, dl, sha256 stay) — the 100-TB layout: the
-        source Iceberg table already holds the content; duplicating it
-        into the index doubles the corpus write. Hydration then joins the
-        source by key. A resume re-derives the assigned frame from the
-        corpus instead of re-reading stored docs (deterministic ids).
+        table (keys, metadata, dl, sha256 stay), with rank ids or a
+        doc_id_col alike — the 100-TB layout: the source Iceberg table
+        already holds the content; duplicating it into the index doubles
+        the corpus write. Hydration then joins the source by key.
+
+        Every build runs one docs phase (docs_phase). A resume enters one
+        only when some segment groups are pending: over the stored docs of
+        those segments when docs/ holds the text, else over the corpus.
         """
         spark = self.spark
         index_dir = self.index_dir
@@ -551,106 +503,101 @@ class IndexBuilder:
         def done(name: str) -> bool:
             return resume and store.has_marker(index_dir, name)
 
-        cached_docs = sort_cache = None
-        if not done("docs"):
-            t0 = time.time()
-            docs, n_docs, cache = build_docs(
-                corpus, key_cols, text_col, doc_id_col, keep_text=store_text
-            )
-            seg_size = max(1, math.ceil(n_docs / self.num_segments))
-            # docs write FIRST, serially: that pass materializes the
-            # persisted frame (one computation, no cold-cache race); it
-            # is already range-partitioned in doc_id order AND carries the
-            # hashed-token arrays, so the posting groups then run over the
-            # warm cache — no docs re-read, no second shuffle, and no
-            # second tokenizer pass over the text
-            cached_docs, m = write_docs(index_dir, docs, seg_size, cache)
-            nd = m["n_docs"]
-            stats = {"n_docs": nd, "avgdl": m["total_dl"] / nd if nd else 0.0,
-                     "total_dl": m["total_dl"], "max_doc_id": m["max_doc_id"],
-                     "num_segments": self.num_segments, "seg_size": seg_size,
-                     "k1": 1.2, "b": 0.75, "format_version": FORMAT_VERSION,
-                     "docs_schema": m["docs_schema"]}
-            store.commit_stats(index_dir, stats)
-            store.write_marker(
-                index_dir, "docs", {"rows": nd, "seconds": time.time() - t0}
-            )
-        else:
-            stats = store.read_stats(index_dir)
-            seg_size = stats["seg_size"]
+        def pending(stats: dict) -> list[tuple[int, list[int]]]:
+            n_segments = max(1, math.ceil(stats["n_docs"] / stats["seg_size"]))
+            per = self.segments_per_commit
+            return [
+                (gi, list(range(g, min(g + per, n_segments))))
+                for gi, g in enumerate(range(0, n_segments, per))
+                if not done(f"group-{gi}")
+            ]
 
-        docs_df = cached_docs
-        if docs_df is None:
-            if text_col in store.docs_schema(stats).names:
-                docs_df = store.read_table(spark, index_dir, "docs", stats)
-            else:
-                # store_text=False resume: re-derive the assigned frame
-                # from the corpus (doc_id = sort rank — deterministic)
-                docs, _, sort_cache = build_docs(
-                    corpus, key_cols, text_col, doc_id_col, keep_text=False
+        def build_groups(docs, seg_size: int, todo: list) -> None:
+            def build_group(gi: int, segs: list[int]) -> None:
+                t0 = time.time()
+                spark.sparkContext.setJobDescription(
+                    f"index build: postings group {gi}"
                 )
-                cached_docs = _with_segment(docs, seg_size).persist()
-                docs_df = cached_docs
-        n_segments = max(1, math.ceil(stats["n_docs"] / seg_size))
+                part = docs(seg_size, segs[0] * seg_size,
+                            (segs[-1] + 1) * seg_size)
+                # marker metrics observed DURING the write (one job
+                # instead of write + re-read)
+                obs = Observation()
+                build_postings_from_docs(part).observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum("df").alias("postings"),
+                ).write.mode("overwrite").partitionBy("segment").parquet(
+                    os.path.join(index_dir, "postings")
+                )
+                m = obs.get
+                store.write_marker(index_dir, f"group-{gi}", {
+                    "segments": segs,
+                    "rows": int(m["rows"] or 0),
+                    "postings": int(m["postings"] or 0),
+                    "bytes": store.segment_bytes(index_dir, "postings", segs),
+                    "seconds": time.time() - t0,
+                })
 
-        groups = [
-            list(range(g, min(g + self.segments_per_commit, n_segments)))
-            for g in range(0, n_segments, self.segments_per_commit)
-        ]
+            # max_groups: commit only that many, then die like a killed build
+            cut = len(todo) if max_groups is None else max_groups
+            run = todo[:cut]
+            if len(run) == 1:
+                build_group(*run[0])
+            elif run:
+                with ThreadPoolExecutor(max_workers=min(len(run), 8)) as ex:
+                    futures = [ex.submit(build_group, gi, segs)
+                               for gi, segs in run]
+                    for f in futures:
+                        f.result()  # surface the first failure
+            if len(todo) > cut:
+                raise RuntimeError("fault injection: killed mid-build")
 
-        def build_group(gi: int, segs: list[int]) -> None:
+        if done("docs"):
+            stats = store.read_stats(index_dir)
+            todo = pending(stats)
+            if todo:
+                src, ids = corpus, doc_id_col
+                if text_col in store.docs_schema(stats).names:
+                    # the stored docs of the pending segments, with their
+                    # ids; a store_text=False index re-derives the tokens
+                    # from the corpus (rank ids are deterministic)
+                    segs = [s for _, g in todo for s in g]
+                    src = store.read_table(spark, index_dir, "docs", stats).where(
+                        F.col("segment").isin(segs)
+                    ).select("doc_id", text_col)
+                    ids = "doc_id"
+                with docs_phase(src, key_cols, text_col, ids,
+                                keep_text=False) as (docs, _):
+                    build_groups(docs, stats["seg_size"], todo)
+        else:
             t0 = time.time()
-            spark.sparkContext.setJobDescription(
-                f"index build: postings group {gi}"
-            )
-            lo, hi = segs[0] * seg_size, (segs[-1] + 1) * seg_size
-            part = docs_df.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            postings = build_postings_from_docs(part, text_col)
-            # marker metrics observed DURING the write (one job instead of
-            # write + re-read)
-            obs = Observation()
-            postings.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("df").alias("postings"),
-            ).write.mode("overwrite").partitionBy("segment").parquet(
-                os.path.join(index_dir, "postings")
-            )
-            m = obs.get
-            store.write_marker(index_dir, f"group-{gi}", {
-                "segments": segs,
-                "rows": int(m["rows"] or 0),
-                "postings": int(m["postings"] or 0),
-                "bytes": store.segment_bytes(index_dir, "postings", segs),
-                "seconds": time.time() - t0,
-            })
-
-        pending = [
-            (gi, segs) for gi, segs in enumerate(groups)
-            if not done(f"group-{gi}")
-        ]
-        # max_groups: commit only that many, then die like a killed build
-        cut = len(pending) if max_groups is None else max_groups
-        run = pending[:cut]
-        if len(run) == 1:
-            build_group(*run[0])
-        elif run:
-            with ThreadPoolExecutor(max_workers=min(len(run), 8)) as ex:
-                futures = [ex.submit(build_group, gi, segs)
-                           for gi, segs in run]
-                for f in futures:
-                    f.result()  # surface the first failure
-        if len(pending) > cut:
-            raise RuntimeError("fault injection: killed mid-build")
+            with docs_phase(corpus, key_cols, text_col, doc_id_col,
+                            keep_text=store_text) as (docs, n):
+                seg_size = max(1, math.ceil(n / self.num_segments))
+                m = write_docs(index_dir, docs(seg_size))
+                nd = m["n_docs"]
+                stats = {"n_docs": nd,
+                         "avgdl": m["total_dl"] / nd if nd else 0.0,
+                         "total_dl": m["total_dl"],
+                         "max_doc_id": m["max_doc_id"],
+                         "num_segments": self.num_segments,
+                         "seg_size": seg_size, "k1": 1.2, "b": 0.75,
+                         "format_version": FORMAT_VERSION,
+                         "docs_schema": m["docs_schema"]}
+                store.commit_stats(index_dir, stats)
+                store.write_marker(
+                    index_dir, "docs", {"rows": nd, "seconds": time.time() - t0}
+                )
+                # the count collect materialized the cache; the posting
+                # groups read their doc ranges from it
+                build_groups(docs, seg_size, pending(stats))
 
         if not done("terms"):
             t0 = time.time()
             write_terms(spark, index_dir, 0)
             store.write_marker(index_dir, "terms", {"seconds": time.time() - t0})
 
-        for frame in (cached_docs, sort_cache):
-            if frame is not None:
-                frame.unpersist()
         stats["build_seconds"] = time.time() - t_all
         return stats
 
@@ -867,8 +814,9 @@ def add_documents(
     """Incremental add (M6 / NEW_VERSION events): index new docs as NEW
     segments appended after the committed max doc_id.
 
-    Runs the build's docs phase (build_docs: one tokenizer pass) and its
-    docs and terms writers on doc ids offset past the committed ones.
+    Runs the build's docs phase (docs_phase: one range shuffle, one
+    tokenizer pass, one persisted frame) and its docs and terms writers
+    on doc ids offset past the committed ones.
     O(new) by construction — existing postings/docs/terms files are never
     re-read or rewritten:
       docs     -> dynamic-overwrite of the NEW segment partitions only
@@ -928,22 +876,16 @@ def add_documents(
         start_id = first_new_seg * seg_size
         marker_name = f"add-{start_id}"
 
-    docs, n_new, sort_cache = build_docs(new_corpus, key_cols, text_col)
-    if n_new == 0:
-        sort_cache.unpersist()
-        return {"added": 0, "first_segment": first_new_seg,
-                "n_docs": stats["n_docs"], "avgdl": stats.get("avgdl", 0.0)}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    docs, m = write_docs(
-        index_dir,
-        docs.withColumn("doc_id", F.col("doc_id") + F.lit(start_id)),
-        seg_size,
-        sort_cache,
-    )
-    build_postings_from_docs(docs, text_col).write.mode(
-        "overwrite"
-    ).partitionBy("segment").parquet(os.path.join(index_dir, "postings"))
-    docs.unpersist()
+    with docs_phase(new_corpus, key_cols, text_col,
+                    start_id=start_id) as (docs, n_new):
+        if n_new == 0:
+            return {"added": 0, "first_segment": first_new_seg,
+                    "n_docs": stats["n_docs"], "avgdl": stats.get("avgdl", 0.0)}
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        m = write_docs(index_dir, docs(seg_size))
+        build_postings_from_docs(docs(seg_size)).write.mode(
+            "overwrite"
+        ).partitionBy("segment").parquet(os.path.join(index_dir, "postings"))
     write_terms(spark, index_dir, first_new_seg)
 
     marker = {

@@ -37,3 +37,18 @@ def shared_index_dir(spark, tmp_path_factory):
         corpus, key_cols=["repo", "path", "commit"]
     )
     return idx_dir
+
+
+@pytest.fixture
+def no_persisted_leak(spark):
+    """Fails a test that leaves more persisted RDDs in the session than
+    it found: a write path must release what it caches on every exit."""
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    yield
+    leaked = persisted() - before
+    if leaked > 0:
+        pytest.fail(f"{leaked} persisted RDD(s) left behind")

@@ -14,6 +14,8 @@ from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
 from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
 from test_term_dfs_lookup import assert_terms_hash_sorted
 
+pytestmark = pytest.mark.usefixtures("no_persisted_leak")
+
 
 def _partition_snapshot(root: str) -> dict:
     """{segment dir -> sorted (file, mtime_ns)} for change detection."""
@@ -137,10 +139,13 @@ def test_add_to_empty_index(spark, tmp_path):
     assert InvertedIndex(spark, idx_dir).stats["n_docs"] == 50
 
 
-def test_add_releases_its_caches(spark, tmp_path):
-    """Each add persists its sort and docs frames only for its own
-    duration: three adds leave the session's persisted RDDs as they
-    found them."""
+def test_add_releases_its_caches(spark, tmp_path, monkeypatch):
+    """Each add persists its one docs-phase frame only for its own
+    duration, on every exit: adds that commit, an add whose posting
+    write raises and an add of 0 rows leave the session's persisted RDDs
+    as they found them, and rerunning the failed add completes it."""
+    from kbasesearchengine_spark.operators import indexer
+
     idx_dir = str(tmp_path / "cache")
     pdf = generate_corpus_pandas(160)
     IndexBuilder(spark, idx_dir, num_segments=2, segments_per_commit=2).build(
@@ -150,12 +155,26 @@ def test_add_releases_its_caches(spark, tmp_path):
     def persisted():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    before = persisted()
-    for lo in (100, 120, 140):
-        info = add_documents(
-            spark, idx_dir, spark.createDataFrame(pdf.iloc[lo:lo + 20]),
-            key_cols=["repo", "path", "commit"],
+    def add(rows):
+        return add_documents(
+            spark, idx_dir, rows, key_cols=["repo", "path", "commit"]
         )
-        assert info["added"] == 20
+
+    before = persisted()
+    for lo in (100, 120):
+        assert add(spark.createDataFrame(pdf.iloc[lo:lo + 20]))["added"] == 20
+    assert persisted() == before
+
+    def failing_write(*args):
+        raise OSError("posting write failed")
+
+    monkeypatch.setattr(indexer, "build_postings_from_docs", failing_write)
+    last = spark.createDataFrame(pdf.iloc[140:])
+    with pytest.raises(OSError, match="posting write failed"):
+        add(last)
+    assert persisted() == before
+    monkeypatch.undo()
+    assert add(last)["added"] == 20
+    assert add(last.limit(0))["added"] == 0
     assert persisted() == before
     assert InvertedIndex(spark, idx_dir).stats["n_docs"] == 160

@@ -178,27 +178,29 @@ def test_doc_id_assignment_is_sorted_rank(spark, built, oracle_idx):
     )
 
 
-def test_doc_id_offsets_broadcast_path_identical(spark, monkeypatch):
-    """assign_doc_ids has two physical offset-lookup plans (literal array
-    vs broadcast join past _OFFSETS_LITERAL_MAX partitions — the 10^4+
-    partition regime of a real cluster). Both must assign identical ids."""
+def test_doc_ids_invariant_to_partition_count(spark, monkeypatch):
+    """The docs phase's rank ids (one literal offset array plus the
+    within-partition sequence) do not depend on how many partitions the
+    range shuffle makes: 1, 8 and 64 partitions over 200 rows all give
+    each row its dense rank under the sorted keys."""
+    from pyspark import SparkContext
+
     from kbasesearchengine_spark.operators import indexer as ix
 
+    rows = [("r%03d" % (i % 37), "p%03d" % i, "c", "x y z") for i in range(200)]
     df = spark.createDataFrame(
-        [("r%03d" % (i % 37), "p%03d" % i, "c", "x y z") for i in range(200)],
-        "repo string, path string, commit string, content string",
+        rows, "repo string, path string, commit string, content string"
     )
-    lit_ids, _, lit_cache = ix.assign_doc_ids(df, ["repo", "path"],
-                                              num_partitions=8)
-    a = {(r["repo"], r["path"]): r["doc_id"] for r in lit_ids.collect()}
-    lit_cache.unpersist()
-    monkeypatch.setattr(ix, "_OFFSETS_LITERAL_MAX", 2)
-    bj_ids, _, bj_cache = ix.assign_doc_ids(df, ["repo", "path"],
-                                            num_partitions=8)
-    b = {(r["repo"], r["path"]): r["doc_id"] for r in bj_ids.collect()}
-    bj_cache.unpersist()
-    assert a == b
-    assert sorted(a.values()) == list(range(200))
+    rank = {k: i for i, k in enumerate(sorted((r[0], r[1]) for r in rows))}
+    for nump in (1, 8, 64):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: nump))
+        with ix.docs_phase(df, ["repo", "path"], "content") as (docs, n):
+            ids = {(r["repo"], r["path"]): r["doc_id"]
+                   for r in docs(50).collect()}
+        assert n == 200
+        assert ids == rank, nump
+        assert sorted(ids.values()) == list(range(200))
 
 
 def test_tiny_flush_buffer_rank_identical(spark, monkeypatch, tmp_path):

@@ -14,6 +14,8 @@ from kbasesearchengine_spark.functions.bm25 import idf as bm25_idf
 from kbasesearchengine_spark.functions.hashing import term_hash
 from kernel_reference import eager_segment_topk
 
+pytestmark = pytest.mark.usefixtures("no_persisted_leak")
+
 
 @pytest.fixture(scope="module")
 def built(shared_index_dir):

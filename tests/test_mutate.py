@@ -5,6 +5,7 @@ metadata immediately."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from kbasesearchengine_spark.corpus import generate_corpus
@@ -15,6 +16,8 @@ from kbasesearchengine_spark.operators.mutate import (
     update_docs_fields,
 )
 from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
+
+pytestmark = pytest.mark.usefixtures("no_persisted_leak")
 
 
 def _mtimes(root):

@@ -1,22 +1,51 @@
 """Resume/lineage semantics (FIXTURES.md §6; north rule: a killed build
 resumes from per-partition lineage markers without recomputation)."""
 
+import glob
 import json
 import os
+import sys
 
+import numpy as np
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from kbasesearchengine_spark.corpus import generate_corpus
-from kbasesearchengine_spark.operators import store
+from kbasesearchengine_spark.api.rpc import RpcService
+from kbasesearchengine_spark.corpus import generate_corpus, generate_corpus_pandas
+from kbasesearchengine_spark.operators import indexer, store, topk as topk_mod
 from kbasesearchengine_spark.operators.indexer import (
     IndexBuilder,
     add_documents,
     require_exactly_once_metrics,
 )
 from kbasesearchengine_spark.operators.mutate import update_docs_fields
-from kbasesearchengine_spark.operators.topk import InvertedIndex
+from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
+from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
+
+pytestmark = pytest.mark.usefixtures("no_persisted_leak")
 
 N_ROWS = 400
+KEYS = ["repo", "path", "commit"]
+
+
+def _corpus(spark, ids, n):
+    """A corpus of n rows for one id kind, its build arguments and the
+    oracle's (doc_id, text) pairs: doc ids are the rank over the sorted
+    keys, or a given doc_id column that permutes them."""
+    pdf = generate_corpus_pandas(n)
+    if ids == "keyed":
+        ranked = pdf.sort_values(KEYS)["content"]
+        return (generate_corpus(spark, n, parallelism=4), {"key_cols": KEYS},
+                list(enumerate(ranked)))
+    pdf["doc_id"] = (np.arange(n) * 7) % n
+    return (spark.createDataFrame(pdf),
+            {"key_cols": ["doc_id"], "doc_id_col": "doc_id"},
+            list(zip(pdf["doc_id"].tolist(), pdf["content"])))
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _postings_fingerprint(spark, idx_dir):
@@ -54,20 +83,24 @@ def _postings_fingerprint(spark, idx_dir):
     return out
 
 
-def test_kill_resume_no_recompute(spark, tmp_path):
-    corpus = generate_corpus(spark, N_ROWS, parallelism=4)
+@pytest.mark.parametrize("ids", ["keyed", "doc_id_col"])
+def test_kill_resume_no_recompute(spark, tmp_path, ids):
+    corpus, kw, _ = _corpus(spark, ids, N_ROWS)
 
     # clean uninterrupted build for comparison
     clean_dir = str(tmp_path / "clean")
     IndexBuilder(spark, clean_dir, num_segments=8, segments_per_commit=2).build(
-        corpus, key_cols=["repo", "path", "commit"]
+        corpus, **kw
     )
 
-    # killed build: 2 of 4 groups committed, then crash
+    # killed build: 2 of 4 groups committed, then crash; the docs phase
+    # releases its cache on the way out
     idx_dir = str(tmp_path / "killed")
+    persisted = _persisted(spark)
     b = IndexBuilder(spark, idx_dir, num_segments=8, segments_per_commit=2)
     with pytest.raises(RuntimeError, match="fault injection"):
-        b.build(corpus, key_cols=["repo", "path", "commit"], max_groups=2)
+        b.build(corpus, max_groups=2, **kw)
+    assert _persisted(spark) == persisted
 
     done = [
         f for f in os.listdir(os.path.join(idx_dir, "_lineage"))
@@ -82,16 +115,91 @@ def test_kill_resume_no_recompute(spark, tmp_path):
 
     # resume: must complete remaining groups, must not rewrite done markers
     b2 = IndexBuilder(spark, idx_dir, num_segments=8, segments_per_commit=2)
-    b2.build(corpus, key_cols=["repo", "path", "commit"], resume=True)
+    b2.build(corpus, resume=True, **kw)
+    assert _persisted(spark) == persisted
     for f in done:
         assert os.path.getmtime(os.path.join(idx_dir, "_lineage", f)) == mtimes[f]
         after = json.load(open(os.path.join(idx_dir, "_lineage", f)))
         assert after == before[f]
 
-    # final index identical to the uninterrupted build
+    # final index identical to the uninterrupted build, table by table
     assert _postings_fingerprint(spark, idx_dir) == _postings_fingerprint(
         spark, clean_dir
     )
+
+    def docs(d):
+        return [r.asDict() for r in InvertedIndex(spark, d).docs.orderBy(
+            "doc_id").collect()]
+
+    def terms(d):
+        return dict(store.read_table(spark, d, "terms").groupBy(
+            "term_hash").agg(F.sum("df")).collect())
+
+    def stats(d):
+        out = store.read_stats(d)
+        out.pop("build_seconds", None)
+        return out
+
+    assert docs(idx_dir) == docs(clean_dir)
+    assert terms(idx_dir) == terms(clean_dir)
+    assert stats(idx_dir) == stats(clean_dir)
+
+
+def test_failed_posting_group_releases_the_cache(spark, tmp_path, monkeypatch):
+    """A build whose posting group raises releases its docs-phase cache."""
+
+    def failing_write(*args):
+        raise OSError("posting write failed")
+
+    monkeypatch.setattr(indexer, "build_postings_from_docs", failing_write)
+    persisted = _persisted(spark)
+    b = IndexBuilder(spark, str(tmp_path / "f"), num_segments=4,
+                     segments_per_commit=2)
+    with pytest.raises(OSError, match="posting write failed"):
+        b.build(generate_corpus(spark, 200, parallelism=4), key_cols=KEYS)
+    assert _persisted(spark) == persisted
+
+
+@pytest.mark.parametrize("killed", [False, True])
+@pytest.mark.parametrize("ids", ["keyed", "doc_id_col"])
+def test_store_text_false(spark, tmp_path, monkeypatch, ids, killed):
+    """store_text=False writes no text to docs/ with rank ids and with a
+    doc_id_col, in full or killed and resumed (the resume re-derives the
+    tokens from the corpus); both query tiers equal the oracle, and a
+    highlight, which needs the text, fails with its cause."""
+    corpus, kw, oracle_docs = _corpus(spark, ids, 200)
+    idx_dir = str(tmp_path / "notext")
+    b = IndexBuilder(spark, idx_dir, num_segments=4, segments_per_commit=2)
+    if killed:
+        with pytest.raises(RuntimeError, match="fault injection"):
+            b.build(corpus, store_text=False, max_groups=1, **kw)
+    b.build(corpus, store_text=False, **kw)
+
+    files = glob.glob(os.path.join(idx_dir, "docs", "segment=*", "*.parquet"))
+    assert files
+    for f in files:
+        assert "content" not in pq.read_schema(f).names
+    assert "content" not in store.docs_schema(store.read_stats(idx_dir)).names
+
+    index = InvertedIndex(spark, idx_dir)
+    oidx = build_oracle_index(oracle_docs)
+    for bound in (0, sys.maxsize):
+        monkeypatch.setattr(topk_mod, "LOCAL_POSTINGS_MAX", bound)
+        for query, mode in [("license import", "and"), ("rfah", "and"),
+                            ("parser http cache", "or")]:
+            got = topk(index, query, k=10, mode=mode, hydrate=False).collect()
+            exp = oracle_topk(oidx, query, k=10, mode=mode)
+            assert [r["doc_id"] for r in got] == [d for d, _ in exp], (
+                bound, query, mode)
+            np.testing.assert_allclose(
+                [r["score"] for r in got], [s for _, s in exp], atol=1e-9
+            )
+        with pytest.raises(ValueError, match="no text payload"):
+            RpcService(index).search_objects({
+                "match_filter": {"full_text_in_all": "license"},
+                "post_processing": {"include_highlight": 1},
+                "pagination": {"start": 0, "count": 5},
+            })
 
 
 def test_lineage_metrics_recorded(spark, tmp_path):
