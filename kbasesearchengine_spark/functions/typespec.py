@@ -89,9 +89,6 @@ class TypeSpec:
             )
         return self.versions[v - 1]
 
-    def full_text_keys(self, version: int | None = None) -> list[str]:
-        return [r.name for r in self.rules(version) if r.full_text]
-
     def indexed_keys(self, version: int | None = None) -> list[str]:
         return [r.name for r in self.rules(version) if not r.not_indexed]
 

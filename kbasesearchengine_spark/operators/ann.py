@@ -23,12 +23,6 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
 def cosine_topk(
     emb: DataFrame,
     query_vec: list[float],

@@ -39,11 +39,19 @@ the stored docs of its pending segments (the corpus, when docs/ holds no
 text). The phase releases its cache on every exit, a failed or killed
 build included.
 
+Fields: a field index is one more posting set of the primary (Lucene's
+per-field postings in one segment; the reference's `oname` next to
+`_all`): fields/<f>/ holds postings and terms only, partitioned by the
+primary's segments, and the primary's stats.json commits each field's
+total_dl. build_field_index writes one from the stored docs through the
+same group writer; add_documents and merge.apply_merge write every
+committed field's postings with the primary's.
+
 Resume: segments are built in groups; each group is committed with a
-dynamic-partition-overwrite (idempotent) followed by a lineage marker with
-metrics. A killed build reruns only unmarked groups (north rule:
-per-partition lineage + metrics checkpoints). The on-disk layout, stats
-and markers are read and written through operators/store.py.
+dynamic-partition-overwrite (idempotent, given per write) followed by a
+lineage marker with metrics. A killed build reruns only unmarked groups
+(north rule: per-partition lineage + metrics checkpoints). The on-disk
+layout, stats and markers are read and written through operators/store.py.
 """
 
 from __future__ import annotations
@@ -83,6 +91,28 @@ BLOCK_SIZE = 128  # postings per block-max block
 # consolidates, so the trade is fragment count (~2x rows, equal bytes at
 # 450k docs) for cache residency.
 FLUSH_PAIRS = 1_500_000
+
+
+@contextmanager
+def job_label(spark: SparkSession, description: str):
+    """Label the Spark jobs run inside the block; the label they replaced
+    (the thread's job description, often none) comes back on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def write_partitions(frame: DataFrame, path: str, by: str = "segment") -> None:
+    """Overwrite the partitions of `path` that `frame` holds and no other:
+    a dynamic partition overwrite, given on this write (the session's
+    partitionOverwriteMode is left as it is)."""
+    frame.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(by).parquet(path)
 
 
 # ---------------------------------------------------------------- docs phase
@@ -138,7 +168,8 @@ def docs_phase(
     count (FIXTURES.md §1).
 
     ``docs(seg_size, lo=0, hi=None)`` projects the cache to the docs
-    frame (doc_id, and segment = doc_id // seg_size), cut to doc ids
+    frame (doc_id, and segment = doc_id // seg_size unless the corpus
+    carries its stored segment: a merged index's is not), cut to doc ids
     [lo, hi). A rank-id range is first cut to the partitions that hold
     it, on the cached ``_pid``: Catalyst does not push a filter on the
     derived id below the nondeterministic sequence, so that filter alone
@@ -188,9 +219,11 @@ def docs_phase(
                 src = src.where(F.col("_pid").between(
                     bisect_right(ends, lo), bisect_left(offsets, hi) - 1
                 ))
-            out = src.select(*cols, doc_id.alias("doc_id")).withColumn(
-                "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
-            )
+            out = src.select(*cols, doc_id.alias("doc_id"))
+            if "segment" not in cols:
+                out = out.withColumn(
+                    "segment", (F.col("doc_id") / F.lit(seg_size)).cast("int")
+                )
             if hi is None:
                 return out
             return out.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
@@ -218,10 +251,8 @@ def write_docs(index_dir: str, docs: DataFrame) -> dict:
         F.sum("dl").alias("total_dl"),
         F.max("doc_id").alias("max_doc_id"),
     )
-    docs.sparkSession.sparkContext.setJobDescription("index build: docs table")
-    to_store.write.mode("overwrite").partitionBy("segment").parquet(
-        os.path.join(index_dir, "docs")
-    )
+    with job_label(docs.sparkSession, "index build: docs table"):
+        write_partitions(to_store, os.path.join(index_dir, "docs"))
     m = obs.get
     max_id = m["max_doc_id"]
     return {"n_docs": int(m["n_docs"] or 0),
@@ -410,7 +441,8 @@ def build_postings_from_docs(docs: DataFrame) -> DataFrame:
 
 def write_terms(spark: SparkSession, index_dir: str, batch: int) -> None:
     """The one terms writer: the term-hash dictionary (df per term_hash)
-    of postings segments >= batch, to terms/batch=<batch>. The build
+    of postings segments >= batch, to terms/batch=<batch>, under the
+    index or a field's directory (fields/<f>). The build
     writes batch 0; an incremental add writes the batch named by its
     first new segment (O(new); readers sum df across batches,
     InvertedIndex.terms). The groupBy input is pre-aggregated (one row
@@ -429,11 +461,93 @@ def write_terms(spark: SparkSession, index_dir: str, batch: int) -> None:
     terms = postings.where(F.col("segment") >= batch).groupBy(
         "term_hash"
     ).agg(F.sum("df").alias("df"))
-    terms.withColumn("batch", F.lit(int(batch))).sortWithinPartitions(
-        "batch", "term_hash"
-    ).write.mode("overwrite").partitionBy("batch").parquet(
-        os.path.join(index_dir, "terms")
+    write_partitions(
+        terms.withColumn("batch", F.lit(int(batch))).sortWithinPartitions(
+            "batch", "term_hash"
+        ),
+        os.path.join(index_dir, "terms"), by="batch",
     )
+
+
+# ---------------------------------------------------------------- posting groups
+
+
+def write_postings(docs: DataFrame, table_dir: str,
+                   field: str | None = None) -> dict:
+    """Build the postings of a docs-phase frame (of `field`'s tokens when
+    given, else of the phase's) into the frame's segment partitions of
+    table_dir/postings. Returns the rows, postings and the docs'
+    total_dl, observed during the write."""
+    if field is not None:
+        docs = docs.withColumn("_toks", hash_tokens_expr(field)).withColumn(
+            "dl", F.size("_toks").cast("int"))
+    dls, obs = Observation(), Observation()
+    write_partitions(
+        build_postings_from_docs(
+            docs.observe(dls, F.sum("dl").alias("total_dl"))
+        ).observe(obs, F.count(F.lit(1)).alias("rows"),
+                  F.sum("df").alias("postings")),
+        os.path.join(table_dir, "postings"),
+    )
+    return {"rows": int(obs.get["rows"] or 0),
+            "postings": int(obs.get["postings"] or 0),
+            "total_dl": int(dls.get["total_dl"] or 0)}
+
+
+def pending_groups(index_dir: str, stats: dict, per: int | None,
+                   prefix: str = "", resume: bool = True) -> list:
+    """The (i, segments) groups of `per` segments (None: one group) that
+    cover every doc id up to max_doc_id, less those whose marker
+    ``<prefix>group-<i>`` records the same segments. Segments are counted
+    from max_doc_id, not n_docs: ids have a gap where an add started a
+    fresh segment, and given ids may have any."""
+    n_segments = max(1, stats["max_doc_id"] // stats["seg_size"] + 1)
+    per = per or n_segments
+
+    def done(gi: int, segs: list[int]) -> bool:
+        m = store.read_marker(index_dir, f"{prefix}group-{gi}") if resume else None
+        return m is not None and m["segments"] == segs
+
+    plan = [(gi, list(range(g, min(g + per, n_segments))))
+            for gi, g in enumerate(range(0, n_segments, per))]
+    return [(gi, segs) for gi, segs in plan if not done(gi, segs)]
+
+
+def write_posting_groups(spark: SparkSession, index_dir: str, docs,
+                         seg_size: int, todo: list, table_dir: str | None = None,
+                         prefix: str = "", max_groups: int | None = None) -> None:
+    """The one posting-group writer (build, resume and field build): each
+    group's doc range of a docs phase (``docs``) becomes the postings of
+    its segments under table_dir (the index, or a field's directory),
+    then marker ``<prefix>group-<i>`` with the write's metrics. Groups
+    commit concurrently.
+
+    max_groups: fault-injection knob for resume tests — commit that many
+    groups, then raise like a killed build."""
+    table_dir = table_dir or index_dir
+
+    def write_group(gi: int, segs: list[int]) -> None:
+        t0 = time.time()
+        part = docs(seg_size, segs[0] * seg_size, (segs[-1] + 1) * seg_size)
+        with job_label(spark, f"index build: {prefix}postings group {gi}"):
+            m = write_postings(part, table_dir)
+        store.write_marker(index_dir, f"{prefix}group-{gi}", {
+            "segments": segs, **m,
+            "bytes": store.segment_bytes(table_dir, "postings", segs),
+            "seconds": time.time() - t0,
+        })
+
+    cut = len(todo) if max_groups is None else max_groups
+    run = todo[:cut]
+    if len(run) == 1:
+        write_group(*run[0])
+    elif run:
+        with ThreadPoolExecutor(max_workers=min(len(run), 8)) as ex:
+            futures = [ex.submit(write_group, gi, segs) for gi, segs in run]
+            for f in futures:
+                f.result()  # surface the first failure
+    if len(todo) > cut:
+        raise RuntimeError("fault injection: killed mid-build")
 
 
 # ---------------------------------------------------------------- full build
@@ -497,65 +611,12 @@ class IndexBuilder:
         spark = self.spark
         index_dir = self.index_dir
         require_exactly_once_metrics(spark)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         t_all = time.time()
+        per = self.segments_per_commit
 
-        def done(name: str) -> bool:
-            return resume and store.has_marker(index_dir, name)
-
-        def pending(stats: dict) -> list[tuple[int, list[int]]]:
-            n_segments = max(1, math.ceil(stats["n_docs"] / stats["seg_size"]))
-            per = self.segments_per_commit
-            return [
-                (gi, list(range(g, min(g + per, n_segments))))
-                for gi, g in enumerate(range(0, n_segments, per))
-                if not done(f"group-{gi}")
-            ]
-
-        def build_groups(docs, seg_size: int, todo: list) -> None:
-            def build_group(gi: int, segs: list[int]) -> None:
-                t0 = time.time()
-                spark.sparkContext.setJobDescription(
-                    f"index build: postings group {gi}"
-                )
-                part = docs(seg_size, segs[0] * seg_size,
-                            (segs[-1] + 1) * seg_size)
-                # marker metrics observed DURING the write (one job
-                # instead of write + re-read)
-                obs = Observation()
-                build_postings_from_docs(part).observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum("df").alias("postings"),
-                ).write.mode("overwrite").partitionBy("segment").parquet(
-                    os.path.join(index_dir, "postings")
-                )
-                m = obs.get
-                store.write_marker(index_dir, f"group-{gi}", {
-                    "segments": segs,
-                    "rows": int(m["rows"] or 0),
-                    "postings": int(m["postings"] or 0),
-                    "bytes": store.segment_bytes(index_dir, "postings", segs),
-                    "seconds": time.time() - t0,
-                })
-
-            # max_groups: commit only that many, then die like a killed build
-            cut = len(todo) if max_groups is None else max_groups
-            run = todo[:cut]
-            if len(run) == 1:
-                build_group(*run[0])
-            elif run:
-                with ThreadPoolExecutor(max_workers=min(len(run), 8)) as ex:
-                    futures = [ex.submit(build_group, gi, segs)
-                               for gi, segs in run]
-                    for f in futures:
-                        f.result()  # surface the first failure
-            if len(todo) > cut:
-                raise RuntimeError("fault injection: killed mid-build")
-
-        if done("docs"):
+        if resume and store.has_marker(index_dir, "docs"):
             stats = store.read_stats(index_dir)
-            todo = pending(stats)
+            todo = pending_groups(index_dir, stats, per)
             if todo:
                 src, ids = corpus, doc_id_col
                 if text_col in store.docs_schema(stats).names:
@@ -569,7 +630,9 @@ class IndexBuilder:
                     ids = "doc_id"
                 with docs_phase(src, key_cols, text_col, ids,
                                 keep_text=False) as (docs, _):
-                    build_groups(docs, stats["seg_size"], todo)
+                    write_posting_groups(spark, index_dir, docs,
+                                         stats["seg_size"], todo,
+                                         max_groups=max_groups)
         else:
             t0 = time.time()
             with docs_phase(corpus, key_cols, text_col, doc_id_col,
@@ -584,16 +647,20 @@ class IndexBuilder:
                          "num_segments": self.num_segments,
                          "seg_size": seg_size, "k1": 1.2, "b": 0.75,
                          "format_version": FORMAT_VERSION,
-                         "docs_schema": m["docs_schema"]}
+                         "docs_schema": m["docs_schema"],
+                         "fields": {}}
                 store.commit_stats(index_dir, stats)
                 store.write_marker(
                     index_dir, "docs", {"rows": nd, "seconds": time.time() - t0}
                 )
                 # the count collect materialized the cache; the posting
                 # groups read their doc ranges from it
-                build_groups(docs, seg_size, pending(stats))
+                write_posting_groups(spark, index_dir, docs, seg_size,
+                                     pending_groups(index_dir, stats, per,
+                                                    resume=resume),
+                                     max_groups=max_groups)
 
-        if not done("terms"):
+        if not (resume and store.has_marker(index_dir, "terms")):
             t0 = time.time()
             write_terms(spark, index_dir, 0)
             store.write_marker(index_dir, "terms", {"seconds": time.time() - t0})
@@ -605,34 +672,47 @@ class IndexBuilder:
 # ---------------------------------------------------------------- field index
 
 
-def build_field_index(
-    spark: SparkSession,
-    index_dir: str,
-    field: str,
-    num_segments: int | None = None,
-    drop_cols: tuple = (),
-) -> str:
-    """Per-field postings (P5): a sub-index over one column of the primary
-    docs table, with its OWN df/avgdl statistics — the reference matches on
-    `oname` separately from `_all` (ElasticIndexingStorage.java:1381-1383),
-    i.e. Lucene's per-field posting lists + per-field norms.
+def build_field_index(spark: SparkSession, index_dir: str, field: str) -> str:
+    """Per-field postings (P5): one more posting set of the primary index
+    over one of its docs columns — the reference matches `oname` apart
+    from `_all` (ElasticIndexingStorage.java:1381-1383), Lucene's
+    per-field posting lists and norms in one segment.
 
-    doc_ids are shared with the primary index (read straight from the
-    primary docs table), so results join/hydrate against primary docs with
-    no translation. Layout: <index_dir>/fields/<field>/{docs,postings,
-    terms,stats.json} — same format, same readers, same resume protocol.
-    The sub-docs table keeps metadata columns (doc_filter predicates work
-    field-scoped) but drops the primary text payload.
+    fields/<field>/ holds only postings and terms, partitioned by the
+    primary's segments (its seg_size, and the stored segment of a merged
+    index), so a segment number names the same doc range in every table
+    and every doc filter and hydration reads the primary docs. One docs
+    phase over the stored (doc_id, field, segment) — the text is not
+    copied — feeds one posting group through the build's group writer and
+    markers (``field-<field>-group-0``, ``field-<field>-terms``; a killed
+    build resumes), then one stats commit adds the field and its total_dl
+    to the primary's stats.json. A committed field is left as it is:
+    add_documents and merge.apply_merge keep it current.
     """
-    primary = store.read_stats(index_dir)
-    docs = store.read_table(spark, index_dir, "docs", primary).drop(
-        "dl", "sha256", "segment", *drop_cols
-    )
-    sub_dir = os.path.join(index_dir, "fields", field)
-    nseg = num_segments or primary.get("num_segments", 16)
-    b = IndexBuilder(spark, sub_dir, num_segments=nseg, segments_per_commit=nseg)
-    b.build(docs, key_cols=["doc_id"], text_col=field, doc_id_col="doc_id")
-    return sub_dir
+    require_exactly_once_metrics(spark)
+    stats = store.read_stats(index_dir)
+    field_dir = store.field_dir(index_dir, field)
+    if field in stats["fields"]:
+        return field_dir
+    prefix = f"field-{field}-"
+    todo = pending_groups(index_dir, stats, None, prefix)
+    if todo:
+        src = store.read_table(spark, index_dir, "docs", stats).select(
+            "doc_id", field, "segment"
+        )
+        with docs_phase(src, ["doc_id"], field, "doc_id",
+                        keep_text=False) as (docs, _):
+            write_posting_groups(spark, index_dir, docs, stats["seg_size"],
+                                 todo, field_dir, prefix)
+    if todo or not store.has_marker(index_dir, f"{prefix}terms"):
+        t0 = time.time()
+        write_terms(spark, field_dir, 0)
+        store.write_marker(index_dir, f"{prefix}terms",
+                           {"seconds": time.time() - t0})
+    group = store.read_marker(index_dir, f"{prefix}group-0")
+    stats["fields"][field] = {"total_dl": group["total_dl"]}
+    store.commit_stats(index_dir, stats)
+    return field_dir
 
 
 def build_from_spec(
@@ -824,9 +904,13 @@ def add_documents(
       terms    -> this add's df contribution written to its own
                   terms/batch=<first_new_seg> partition (readers aggregate
                   lazily); no global term-dictionary rebuild
+      fields   -> each committed field's postings of the NEW segments,
+                  from the same cached frame with the field's column
+                  tokenized, and its own terms batch
       stats    -> arithmetic update from (n_new, total_dl_new), both
-                  observed during the docs write; the docs schema gains
-                  the new docs' columns it lacks
+                  observed during the docs write, and each field's
+                  total_dl_new, observed during its postings write; the
+                  docs schema gains the new docs' columns it lacks
 
     Crash safety: every data write is an idempotent dynamic partition
     overwrite keyed off the COMMITTED stats (start_id), so re-running a
@@ -844,6 +928,10 @@ def add_documents(
     require_exactly_once_metrics(spark)
     stats = store.read_stats(index_dir)
     seg_size = stats["seg_size"]
+    fields = sorted(stats["fields"])
+    missing = [f for f in fields if f not in new_corpus.columns]
+    if missing:
+        raise ValueError(f"new documents lack the indexed fields {missing}")
 
     def _finish(marker: dict) -> dict:
         # data committed by a previous (or this) run; roll the stats forward
@@ -852,6 +940,8 @@ def add_documents(
             stats["total_dl"] = stats.get("total_dl", 0) + marker["total_dl_new"]
             stats["avgdl"] = stats["total_dl"] / stats["n_docs"]
             stats["max_doc_id"] = marker["max_doc_id"]
+            for f, total_dl_new in marker["fields"].items():
+                stats["fields"][f]["total_dl"] += total_dl_new
             store.add_docs_columns(
                 stats, StructType.fromJson(marker["docs_schema"])
             )
@@ -881,12 +971,12 @@ def add_documents(
         if n_new == 0:
             return {"added": 0, "first_segment": first_new_seg,
                     "n_docs": stats["n_docs"], "avgdl": stats.get("avgdl", 0.0)}
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         m = write_docs(index_dir, docs(seg_size))
-        build_postings_from_docs(docs(seg_size)).write.mode(
-            "overwrite"
-        ).partitionBy("segment").parquet(os.path.join(index_dir, "postings"))
-    write_terms(spark, index_dir, first_new_seg)
+        write_postings(docs(seg_size), index_dir)
+        field_dl = {f: write_postings(docs(seg_size), store.field_dir(
+            index_dir, f), f)["total_dl"] for f in fields}
+    for table_dir in [index_dir] + [store.field_dir(index_dir, f) for f in fields]:
+        write_terms(spark, table_dir, first_new_seg)
 
     marker = {
         "n_new": m["n_docs"],
@@ -894,6 +984,7 @@ def add_documents(
         "first_segment": first_new_seg,
         "max_doc_id": m["max_doc_id"],
         "docs_schema": m["docs_schema"],
+        "fields": field_dl,
     }
     store.write_marker(index_dir, marker_name, marker)
     return _finish(marker)

@@ -88,8 +88,10 @@ def apply_merge(
     spark, index_dir: str, seg_map: Mapping[int, int]
 ) -> dict:
     """Apply a segment merge to an on-disk index: rewrite the affected
-    postings AND docs partitions consistently, drop the emptied source
-    partitions, and record the mapping in lineage.
+    postings, every field's postings and the docs partitions under the
+    same mapping, drop the emptied source partitions, and record the
+    mapping in lineage. A segment number then names the same doc range
+    in every table.
 
     Only partitions named in seg_map are read (partition pruning) or
     written (one staged write per table, store.replace_segments) — cost is
@@ -103,13 +105,16 @@ def apply_merge(
     if not sources:
         return {"merged": 0, "targets": []}
     affected = sorted(seg_map)
-    postings = store.read_table(spark, index_dir, "postings").where(
-        F.col("segment").isin(affected)
-    )
-    store.replace_segments(
-        spark, index_dir, "postings", merge_postings(postings, seg_map),
-        drop=sources,
-    )
+    fields = store.read_stats(index_dir)["fields"]
+    for table_dir in [index_dir] + [store.field_dir(index_dir, f)
+                                    for f in sorted(fields)]:
+        postings = store.read_table(spark, table_dir, "postings").where(
+            F.col("segment").isin(affected)
+        )
+        store.replace_segments(
+            spark, table_dir, "postings", merge_postings(postings, seg_map),
+            drop=sources,
+        )
     docs = store.read_table(spark, index_dir, "docs").where(
         F.col("segment").isin(affected)
     )

@@ -13,10 +13,16 @@ Layout under index_dir/:
   terms/       parquet (TERMS_ARROW: term_hash, df), partitioned by
                batch: batch=0 from the build, batch=<first new segment>
                per incremental add; readers sum df across batches
+  fields/<f>/  a field's posting set: postings/ and terms/ only, in the
+               formats above, partitioned by the primary's segments; a
+               field has no docs and no stats of its own
   stats.json   {n_docs, avgdl, total_dl, max_doc_id, num_segments,
-               seg_size, k1, b, format_version, docs_schema}
+               seg_size, k1, b, format_version, docs_schema,
+               fields: {<f>: {total_dl}}}; n_docs and max_doc_id are
+               every field's too, so one commit covers them all
   _lineage/    <name>.json markers with metrics: docs, group-<i>, terms,
-               add-<key>, update-<segs>-<tag>, merge-<lo>-<hi>
+               field-<f>-group-0, field-<f>-terms, add-<key>,
+               update-<segs>-<tag>, merge-<lo>-<hi>
   _staging/    transient: replace_segments stages rewritten partitions here
 
 Every table read is given its schema (read_table, open_dataset); none is
@@ -37,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-FORMAT_VERSION = 5  # bump on any index layout/schema change
+FORMAT_VERSION = 6  # bump on any index layout/schema change
 # v3: docs/ partitioned by segment (partition-pruned reads; idempotent
 #     incremental adds + merge write-back), terms/ partitioned by batch
 #     (each add contributes its own partition — O(new) increments, global
@@ -51,6 +57,9 @@ FORMAT_VERSION = 5  # bump on any index layout/schema change
 #     (functions/hashing.py; collision bound documented there).
 # v5: stats.json commits the docs schema (docs_schema), and every reader
 #     is given a schema; no empty schema-bearing partition is written.
+# v6: a field index is a posting set of the primary (fields/<f>/postings
+#     and terms on the primary's segments); its total_dl is committed in
+#     the primary's stats.json, and it has no docs or stats.json.
 
 # postings in the order the posting kernel and the merge emit them
 POSTINGS_ARROW = pa.schema(
@@ -90,6 +99,11 @@ def commit_stats(index_dir: str, stats: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(stats, f)
     os.replace(tmp, path)
+
+
+def field_dir(index_dir: str, field: str) -> str:
+    """Where a field's postings/ and terms/ live."""
+    return os.path.join(index_dir, "fields", field)
 
 
 def is_index(index_dir: str) -> bool:

@@ -33,7 +33,11 @@ Fan-out tier (larger volumes, or a store pyarrow cannot open):
   ──► left join to docs for hydration
 
 A handle scores one snapshot: stats, the term dictionary and the
-postings are opened together in ``InvertedIndex.refresh()``.
+postings are opened together in ``InvertedIndex.refresh()``. A field
+(``field_index``) is a posting set of the same index: it scores its own
+postings and term dictionary with the primary's n_docs and its own
+avgdl, and both tiers filter, prune by segment and hydrate against the
+primary docs.
 
 Scores are computed per (term, doc) from scalars and summed over ≤ a few
 query terms — reduction order is fixed (sorted term order), so scores are
@@ -104,6 +108,7 @@ class InvertedIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
+        self.field: str | None = None  # set on a field_index() handle
         self._logged: set[str] = set()
         self.refresh()
 
@@ -120,6 +125,18 @@ class InvertedIndex:
                 f"this reader needs {FORMAT_VERSION}. Rebuild the index "
                 "(IndexBuilder.build) — on-disk layouts are not migrated."
             )
+        self._snapshot(stats)
+
+    def _snapshot(self, stats: dict) -> None:
+        """Open one snapshot from the index's stats: a field handle
+        scores with the field's total_dl and avgdl, and reads postings
+        and terms from the field's directory."""
+        self._postings_dir = self.index_dir
+        if self.field is not None:
+            self._postings_dir = store.field_dir(self.index_dir, self.field)
+            n, total = stats["n_docs"], stats["fields"][self.field]["total_dl"]
+            stats = {**stats, "total_dl": total,
+                     "avgdl": total / n if n else 0.0}
         self.stats = stats
         self._dfs: dict = {}
         self._datasets = {t: self._open(t) for t in ("terms", "postings")}
@@ -135,7 +152,9 @@ class InvertedIndex:
     def _tbl(self, name: str) -> DataFrame:
         if name not in self._dfs:
             self._dfs[name] = store.read_table(
-                self.spark, self.index_dir, name, self.stats
+                self.spark,
+                self.index_dir if name == "docs" else self._postings_dir,
+                name, self.stats,
             )
         return self._dfs[name]
 
@@ -145,11 +164,11 @@ class InvertedIndex:
         if table not in self._logged:
             self._logged.add(table)
             log.info("pyarrow cannot read %s/%s (%s); reading it with Spark",
-                     self.index_dir, table, err)
+                     self._postings_dir, table, err)
 
     def _open(self, table: str):
         try:
-            return store.open_dataset(self.index_dir, table)
+            return store.open_dataset(self._postings_dir, table)
         except (OSError, pa.lib.ArrowInvalid) as err:
             self._fallback(table, err)
             return None
@@ -239,16 +258,26 @@ class InvertedIndex:
         return out
 
     def field_index(self, field: str) -> "InvertedIndex":
-        """Field-scoped sub-index (P5): per-field postings + per-field
-        BM25 stats under <index_dir>/fields/<field> (built by
-        indexer.build_field_index); doc_ids shared with the primary."""
+        """The handle of a field (P5; indexer.build_field_index): the
+        field's postings and term dictionary under <index_dir>/fields/
+        <field>, scored with this snapshot's stats but the field's avgdl,
+        and this index's docs table — filters, segment pruning and
+        hydration read the primary docs. Made on first use (its files are
+        listed then) and dropped by this handle's ``refresh()``; its own
+        ``refresh()`` reopens the field over the index's current stats."""
         key = f"field:{field}"
         if key not in self._dfs:
-            # memoize the handle object itself on the dfs dict (same
-            # lifecycle: dropped on refresh())
-            self._dfs[key] = InvertedIndex(
-                self.spark, os.path.join(self.index_dir, "fields", field)
-            )
+            if field not in self.stats["fields"]:
+                raise ValueError(
+                    f"index at {self.index_dir!r} has no field index "
+                    f"{field!r} (indexer.build_field_index)"
+                )
+            fx = object.__new__(InvertedIndex)
+            fx.spark, fx.index_dir, fx.field = self.spark, self.index_dir, field
+            fx._logged = set()
+            fx._snapshot(self.stats)
+            # memoize the handle on the dfs dict (same lifecycle)
+            self._dfs[key] = fx
         return self._dfs[key]
 
     def has_sub_index(self) -> bool:
@@ -321,23 +350,20 @@ def _local_hits(
 def _local_frame(
     docs: DataFrame,
     hits: pd.DataFrame,
-    prune_segments: bool,
     doc_filter,
     k: int | None,
     scores: bool,
 ) -> DataFrame:
-    """One docs scan pruned to the hits (their segments, when `docs` is
-    the scoring index's own table, and their doc_ids), with the
+    """One docs scan pruned to the hits (their segments and their
+    doc_ids: a field's postings share the docs' segments), with the
     doc_filter in the same scan and the scores as a literal map column;
     ranked and cut to k when scored with a k. The literals go to the JVM
     as one SQL expression each: a Column per literal costs a py4j round
     trip."""
     ids = hits["doc_id"].tolist()
-    frame = docs.where(F.expr(f"doc_id IN ({', '.join(map(str, ids))})"))
-    if prune_segments:
-        frame = frame.where(
-            F.col("segment").isin(sorted(set(hits["segment"].tolist())))
-        )
+    frame = docs.where(
+        F.expr(f"doc_id IN ({', '.join(map(str, ids))})")
+    ).where(F.col("segment").isin(sorted(set(hits["segment"].tolist()))))
     if doc_filter is not None:
         frame = frame.where(doc_filter)
     if not scores:
@@ -368,8 +394,9 @@ def topk(
 
     doc_filter: optional Column predicate over the docs table (the
     reference's non-scoring filter context, ElasticIndexingStorage.java:
-    1321-1325); applied BEFORE ranking — the segments return every match
-    and the rank cut runs after the predicate.
+    1321-1325; a field handle's docs are the primary's, on both tiers);
+    applied BEFORE ranking — the segments return every match and the
+    rank cut runs after the predicate.
     k=None returns ALL matching docs scored, unordered (match-only mode,
     no ranking cut) — used for counts/aggregations over the match set.
     scores=False (requires k=None, hydrate=False): return matching
@@ -379,9 +406,8 @@ def topk(
     (ElasticIndexingStorage.java:1498-1501 — score unused there).
     join_to (with hydrate=False): return the matches as rows of this
     index's docs table — every column, plus `score` when scored,
-    unordered; the doc_filter then applies to those rows on the local
-    tier. match_frame passes its index (also when scoring one of its
-    field indexes), so the matches are read with the docs once.
+    unordered. match_frame passes its index (also when scoring one of
+    its fields), so the matches are read with the docs once.
     An answer known to be empty before any Spark job (no query terms, an
     absent AND term, no local-tier candidate) is the `no_matches` frame
     of the handle whose rows it would carry.
@@ -432,8 +458,7 @@ def topk(
             if hits.empty:
                 return empty()
             docs = (join_to or index).docs
-            frame = _local_frame(docs, hits, join_to in (None, index),
-                                 doc_filter, k, scores)
+            frame = _local_frame(docs, hits, doc_filter, k, scores)
             score_col = ["score"] if scores else []
             if join_to is not None:
                 return frame.select(

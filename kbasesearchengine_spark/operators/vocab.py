@@ -24,9 +24,7 @@ hash equals the df the hash-keyed index derived from posting rows, and
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_expr
@@ -43,16 +41,3 @@ def derive_vocab(corpus: DataFrame, text_col: str = "content") -> DataFrame:
         .agg(F.count("*").alias("df"))
         .withColumn("term_hash", F.xxhash64("term"))
     )
-
-
-def write_vocab(
-    spark: SparkSession,
-    index_dir: str,
-    corpus: DataFrame,
-    text_col: str = "content",
-) -> str:
-    """Materialize the dictionary under ``<index_dir>/vocab/`` so lookups
-    (hash -> term, or term-prefix browsing) are a pruned parquet scan."""
-    out = os.path.join(index_dir, "vocab")
-    derive_vocab(corpus, text_col).write.mode("overwrite").parquet(out)
-    return out

@@ -67,11 +67,11 @@ def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
             doc_id_col="doc_id",
             resume=True,
         )
-        # P5: field-scoped sub-index over `source` with its own BM25 stats
-        # (resumable/no-op on re-entry via the same marker protocol)
+        # P5: the `source` field's postings with its own df/avgdl (a no-op
+        # once committed; a killed field build resumes from its markers)
         from ..operators.indexer import build_field_index
 
-        build_field_index(spark, idx_dir, "source", drop_cols=("text",))
+        build_field_index(spark, idx_dir, "source")
         _INDEX_CACHE[key] = idx_dir
     return InvertedIndex(spark, _INDEX_CACHE[key])
 

@@ -141,14 +141,6 @@ def apply_events(state: DataFrame, events: DataFrame) -> DataFrame:
     return state.unionByName(fresh)
 
 
-def empty_state(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "repo string, path string, commit string, lang string, "
-        "content string, ts bigint, tombstone boolean, event_id bigint",
-    )
-
-
 def initial_state(corpus: DataFrame, ts: int = 0) -> DataFrame:
     return corpus.select(
         "repo", "path", "commit", "lang", "content",

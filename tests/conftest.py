@@ -39,16 +39,22 @@ def shared_index_dir(spark, tmp_path_factory):
     return idx_dir
 
 
+def persisted_ids(spark) -> set[int]:
+    """The ids of the session's persisted RDDs. A leak check asks whether
+    an id is present that was not there before, not whether the count
+    grew: Spark's context cleaner releases RDDs of earlier tests (a
+    collected Dataset's localCheckpoint) at any time, which would offset
+    a leak in a count or make it shrink mid-test."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 @pytest.fixture
 def no_persisted_leak(spark):
-    """Fails a test that leaves more persisted RDDs in the session than
-    it found: a write path must release what it caches on every exit."""
-
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    before = persisted()
+    """Fails a test that leaves a persisted RDD in the session that was
+    not there before it: a write path must release what it caches on
+    every exit."""
+    before = persisted_ids(spark)
     yield
-    leaked = persisted() - before
-    if leaked > 0:
-        pytest.fail(f"{leaked} persisted RDD(s) left behind")
+    leaked = persisted_ids(spark) - before
+    if leaked:
+        pytest.fail(f"persisted RDD(s) {sorted(leaked)} left behind")

@@ -12,6 +12,7 @@ from kbasesearchengine_spark.corpus import generate_corpus, generate_corpus_pand
 from kbasesearchengine_spark.operators.indexer import IndexBuilder, add_documents
 from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
 from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
+from conftest import persisted_ids
 from test_term_dfs_lookup import assert_terms_hash_sorted
 
 pytestmark = pytest.mark.usefixtures("no_persisted_leak")
@@ -142,8 +143,8 @@ def test_add_to_empty_index(spark, tmp_path):
 def test_add_releases_its_caches(spark, tmp_path, monkeypatch):
     """Each add persists its one docs-phase frame only for its own
     duration, on every exit: adds that commit, an add whose posting
-    write raises and an add of 0 rows leave the session's persisted RDDs
-    as they found them, and rerunning the failed add completes it."""
+    write raises and an add of 0 rows leave no persisted RDD that was
+    not there before, and rerunning the failed add completes it."""
     from kbasesearchengine_spark.operators import indexer
 
     idx_dir = str(tmp_path / "cache")
@@ -152,18 +153,15 @@ def test_add_releases_its_caches(spark, tmp_path, monkeypatch):
         spark.createDataFrame(pdf.iloc[:100]), key_cols=["repo", "path", "commit"]
     )
 
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
     def add(rows):
         return add_documents(
             spark, idx_dir, rows, key_cols=["repo", "path", "commit"]
         )
 
-    before = persisted()
+    before = persisted_ids(spark)
     for lo in (100, 120):
         assert add(spark.createDataFrame(pdf.iloc[lo:lo + 20]))["added"] == 20
-    assert persisted() == before
+    assert persisted_ids(spark) <= before
 
     def failing_write(*args):
         raise OSError("posting write failed")
@@ -172,9 +170,46 @@ def test_add_releases_its_caches(spark, tmp_path, monkeypatch):
     last = spark.createDataFrame(pdf.iloc[140:])
     with pytest.raises(OSError, match="posting write failed"):
         add(last)
-    assert persisted() == before
+    assert persisted_ids(spark) <= before
     monkeypatch.undo()
     assert add(last)["added"] == 20
     assert add(last.limit(0))["added"] == 0
-    assert persisted() == before
+    assert persisted_ids(spark) <= before
     assert InvertedIndex(spark, idx_dir).stats["n_docs"] == 160
+
+
+def test_session_write_mode_is_left_as_set(spark, tmp_path):
+    """The build and the add give each partitioned write its own overwrite
+    mode: a session set to static still reads static after both, and the
+    add leaves every existing docs, postings and terms file as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        idx_dir = str(tmp_path / "static")
+        pdf = generate_corpus_pandas(250)
+        IndexBuilder(spark, idx_dir, num_segments=4, segments_per_commit=2).build(
+            spark.createDataFrame(pdf.iloc[:200]), key_cols=["repo", "path", "commit"]
+        )
+        assert spark.conf.get(key) == "static"
+        tables = ("docs", "postings")
+        before = {t: _partition_snapshot(os.path.join(idx_dir, t)) for t in tables}
+        terms0 = os.path.join(idx_dir, "terms", "batch=0")
+        terms_before = sorted((f, os.stat(os.path.join(terms0, f)).st_mtime_ns)
+                              for f in os.listdir(terms0))
+        info = add_documents(spark, idx_dir, spark.createDataFrame(pdf.iloc[200:]),
+                             key_cols=["repo", "path", "commit"])
+        assert spark.conf.get(key) == "static"
+        assert info["n_docs"] == 250
+        for t in tables:
+            after = _partition_snapshot(os.path.join(idx_dir, t))
+            assert {s: after[s] for s in before[t]} == before[t], t
+            assert len(after) > len(before[t]), t
+        assert sorted((f, os.stat(os.path.join(terms0, f)).st_mtime_ns)
+                      for f in os.listdir(terms0)) == terms_before
+        assert InvertedIndex(spark, idx_dir).docs.count() == 250
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

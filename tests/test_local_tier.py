@@ -56,7 +56,7 @@ def index_dir(spark, shared_index_dir, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("local_tier") / "idx")
     shutil.copytree(shared_index_dir, d)
     share_with_group(spark, d, F.col("doc_id") % 3 == 0, GROUP)
-    build_field_index(spark, d, "path", num_segments=4)
+    build_field_index(spark, d, "path")
     return d
 
 

@@ -4,18 +4,23 @@ metadata immediately."""
 
 import os
 import shutil
+import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from kbasesearchengine_spark.corpus import generate_corpus
+from kbasesearchengine_spark.corpus import generate_corpus, generate_corpus_pandas
 from kbasesearchengine_spark.operators.indexer import IndexBuilder
 from kbasesearchengine_spark.operators.mutate import (
     publish_objects,
     set_access_group,
+    unpublish_objects,
     update_docs_fields,
 )
+from kbasesearchengine_spark.operators import topk as topk_mod
 from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
+from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
 
 pytestmark = pytest.mark.usefixtures("no_persisted_leak")
 
@@ -96,6 +101,49 @@ def test_publish_and_share_flags(spark, tmp_path):
                doc_filter=F.col("is_public"), hydrate=False).collect()
     pub_ids = {r["doc_id"] for r in index.docs.where(F.col("is_public")).select("doc_id").collect()}
     assert all(r["doc_id"] in pub_ids for r in got)
+
+
+def test_unpublish_hides_from_with_public(spark, tmp_path, monkeypatch):
+    """M5 unpublish (:802-835): after publishing the python and go docs
+    and unpublishing the go docs, a with_public search sees exactly the
+    python docs — its relevance page and its count equal the oracle's on
+    both query tiers."""
+    from kbasesearchengine_spark.plans.search import (
+        AccessFilter,
+        MatchFilter,
+        Pagination,
+        SortingRule,
+        count_objects,
+        search_objects,
+    )
+
+    keys = ["repo", "path", "commit"]
+    idx_dir = str(tmp_path / "unpubidx")
+    IndexBuilder(spark, idx_dir, num_segments=4, segments_per_commit=4).build(
+        generate_corpus(spark, 200, parallelism=4), key_cols=keys
+    )
+    publish_objects(spark, idx_dir, F.col("lang").isin("python", "go"))
+    unpublish_objects(spark, idx_dir, F.col("lang") == "go")
+
+    pdf = generate_corpus_pandas(200).sort_values(keys).reset_index(drop=True)
+    query = "license import"
+    want = [(d, s) for d, s in oracle_topk(
+        build_oracle_index(list(enumerate(pdf["content"]))), query, k=200,
+        mode="or") if pdf["lang"][d] == "python"]
+    assert want
+    index = InvertedIndex(spark, idx_dir)
+    match = MatchFilter(full_text=query, full_text_mode="or")
+    public = AccessFilter(with_public=True)
+    for bound in (0, sys.maxsize):
+        monkeypatch.setattr(topk_mod, "LOCAL_POSTINGS_MAX", bound)
+        rows = search_objects(
+            index, match, sorting=[SortingRule("relevance")],
+            pagination=Pagination(0, 200), access=public,
+        ).collect()
+        assert [r["doc_id"] for r in rows] == [d for d, _ in want], bound
+        np.testing.assert_allclose([r["score"] for r in rows],
+                                   [s for _, s in want], atol=1e-9)
+        assert count_objects(index, match, public) == len(want)
 
 
 def test_multigroup_share_unshare(spark, tmp_path):

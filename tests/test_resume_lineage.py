@@ -23,6 +23,8 @@ from kbasesearchengine_spark.operators.mutate import update_docs_fields
 from kbasesearchengine_spark.operators.topk import InvertedIndex, topk
 from kbasesearchengine_spark.oracle import build_oracle_index, oracle_topk
 
+from conftest import persisted_ids
+
 pytestmark = pytest.mark.usefixtures("no_persisted_leak")
 
 N_ROWS = 400
@@ -42,10 +44,6 @@ def _corpus(spark, ids, n):
     return (spark.createDataFrame(pdf),
             {"key_cols": ["doc_id"], "doc_id_col": "doc_id"},
             list(zip(pdf["doc_id"].tolist(), pdf["content"])))
-
-
-def _persisted(spark):
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _postings_fingerprint(spark, idx_dir):
@@ -96,11 +94,11 @@ def test_kill_resume_no_recompute(spark, tmp_path, ids):
     # killed build: 2 of 4 groups committed, then crash; the docs phase
     # releases its cache on the way out
     idx_dir = str(tmp_path / "killed")
-    persisted = _persisted(spark)
+    persisted = persisted_ids(spark)
     b = IndexBuilder(spark, idx_dir, num_segments=8, segments_per_commit=2)
     with pytest.raises(RuntimeError, match="fault injection"):
         b.build(corpus, max_groups=2, **kw)
-    assert _persisted(spark) == persisted
+    assert persisted_ids(spark) <= persisted
 
     done = [
         f for f in os.listdir(os.path.join(idx_dir, "_lineage"))
@@ -116,7 +114,7 @@ def test_kill_resume_no_recompute(spark, tmp_path, ids):
     # resume: must complete remaining groups, must not rewrite done markers
     b2 = IndexBuilder(spark, idx_dir, num_segments=8, segments_per_commit=2)
     b2.build(corpus, resume=True, **kw)
-    assert _persisted(spark) == persisted
+    assert persisted_ids(spark) <= persisted
     for f in done:
         assert os.path.getmtime(os.path.join(idx_dir, "_lineage", f)) == mtimes[f]
         after = json.load(open(os.path.join(idx_dir, "_lineage", f)))
@@ -152,12 +150,12 @@ def test_failed_posting_group_releases_the_cache(spark, tmp_path, monkeypatch):
         raise OSError("posting write failed")
 
     monkeypatch.setattr(indexer, "build_postings_from_docs", failing_write)
-    persisted = _persisted(spark)
+    persisted = persisted_ids(spark)
     b = IndexBuilder(spark, str(tmp_path / "f"), num_segments=4,
                      segments_per_commit=2)
     with pytest.raises(OSError, match="posting write failed"):
         b.build(generate_corpus(spark, 200, parallelism=4), key_cols=KEYS)
-    assert _persisted(spark) == persisted
+    assert persisted_ids(spark) <= persisted
 
 
 @pytest.mark.parametrize("killed", [False, True])
@@ -200,6 +198,37 @@ def test_store_text_false(spark, tmp_path, monkeypatch, ids, killed):
                 "post_processing": {"include_highlight": 1},
                 "pagination": {"start": 0, "count": 5},
             })
+
+
+def test_job_labels_do_not_outlive_the_call(spark, tmp_path):
+    """The build labels its jobs for their own phase only: after a full
+    build, a killed build and its resume, an add and a field build, the
+    driver thread's job description is the caller's again (a label, or
+    none)."""
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    pdf = generate_corpus_pandas(240)
+    corpus = spark.createDataFrame(pdf.iloc[:200])
+    try:
+        sc.setLocalProperty(key, "caller label")
+        full = str(tmp_path / "full")
+        IndexBuilder(spark, full, num_segments=4, segments_per_commit=2).build(
+            corpus, key_cols=KEYS)
+        assert sc.getLocalProperty(key) == "caller label"
+        b = IndexBuilder(spark, str(tmp_path / "killed"), num_segments=4,
+                         segments_per_commit=2)
+        with pytest.raises(RuntimeError, match="fault injection"):
+            b.build(corpus, key_cols=KEYS, max_groups=1)
+        assert sc.getLocalProperty(key) == "caller label"
+        b.build(corpus, key_cols=KEYS)
+        assert sc.getLocalProperty(key) == "caller label"
+        sc.setLocalProperty(key, None)
+        add_documents(spark, full, spark.createDataFrame(pdf.iloc[200:]), KEYS)
+        assert sc.getLocalProperty(key) is None
+        indexer.build_field_index(spark, full, "path")
+        assert sc.getLocalProperty(key) is None
+    finally:
+        sc.setLocalProperty(key, None)
 
 
 def test_lineage_metrics_recorded(spark, tmp_path):
