@@ -15,9 +15,11 @@ The dispatcher is deliberately NOT a network server: ``handle()`` takes
 and returns plain dicts, so it runs inside tests, notebooks, or any
 transport (the optional ``serve()`` wraps it in the stdlib HTTP server
 for parity with the reference's deployment — zero third-party deps).
-Collecting here is correct by design: this is the serving boundary, and
-only the requested page (<= pagination.count rows) ever reaches the
-driver — the search itself stays distributed.
+Collecting here is correct by design: this is the serving boundary. On
+the fan-out only the requested page (<= pagination.count rows) reaches
+the driver; a match set of the driver-local tier (posting volume <=
+topk.LOCAL_POSTINGS_MAX) is already there, and is paged and counted in
+Arrow with no Spark job.
 
 Auth boundary analog: the reference resolves the caller's workspace
 groups via AccessGroupProvider.findAccessGroupIds(user)
@@ -30,24 +32,29 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.topk import InvertedIndex
-# _apply_post and search_objects are not called here; perfbench/ traces
-# the search layer under these rpc-module names
+# search_objects is not called here; perfbench/ traces the search layer
+# under these rpc-module names
 from ..plans.search import (
     AccessFilter,
     MatchFilter,
     Pagination,
     PostProcessing,
     SortingRule,
-    _apply_post,  # noqa: F401
+    _apply_post,
     _by_relevance,
+    _highlight_pattern,
+    _kept_columns,
+    _local_page,
     _page,
     get_objects,
     match_frame,
+    match_rows,
     search_objects,  # noqa: F401
     search_types,
 )
@@ -164,6 +171,25 @@ def _object_data(row: dict) -> dict:
     return out
 
 
+def _local_page_rows(
+    index: InvertedIndex,
+    rows: pa.Table,
+    match: MatchFilter,
+    sorting: list[SortingRule] | None,
+    pagination: Pagination,
+    post: PostProcessing,
+) -> list[dict]:
+    """A page of a local match table (match_rows), whose row count is
+    hits.total: ordered, sliced and cut to its post-processed columns in
+    Arrow. Only a highlight goes through Spark (_apply_post over a local
+    relation of the page), which still runs no job."""
+    page = _local_page(index, rows, sorting, pagination, post)
+    if post.ids_only or _highlight_pattern(match, post) is None:
+        return page.select(_kept_columns(page.column_names, post)).to_pylist()
+    out = _apply_post(index.rows_frame(page), match, post)
+    return [r.asDict(recursive=True) for r in out.collect()]
+
+
 def _page_and_total(
     frame: DataFrame,
     match: MatchFilter,
@@ -171,10 +197,11 @@ def _page_and_total(
     pagination: Pagination,
     post: PostProcessing,
 ) -> tuple[list[dict], int]:
-    """A page and hits.total, the full match-set size (spec
-    KBaseSearchEngine.spec:262,281), from one pass: the total is counted
-    while the page's own scan pulls every match through (the reference
-    reads both from one ES response, ElasticIndexingStorage.java:1557).
+    """A page of a fan-out match frame and hits.total, the full match-set
+    size (spec KBaseSearchEngine.spec:262,281), from one pass: the total
+    is counted while the page's own scan pulls every match through (the
+    reference reads both from one ES response,
+    ElasticIndexingStorage.java:1557).
     The page's sort-and-limit merges per-partition top rows on the
     driver, so no exchange sits above the count: it runs in the result
     stage, whose task metrics Spark applies once per partition, and a
@@ -227,11 +254,14 @@ class RpcService:
         )
         post = _to_post(params.get("post_processing"))
         relevance = _by_relevance(sorting)
-        frame = match_frame(self.index, mf, access=access, scores=relevance)
-        if frame is self.index.no_matches(relevance, rows=True):
-            # known empty before any job: A5, or topk found no candidate
-            rows, total = [], 0
+        matches = match_rows(self.index, mf, access=access, scores=relevance)
+        if matches is not None:
+            rows = _local_page_rows(
+                self.index, matches, mf, sorting, pagination, post)
+            total = matches.num_rows
         else:
+            frame = match_frame(self.index, mf, access=access,
+                                scores=relevance)
             rows, total = _page_and_total(frame, mf, sorting, pagination, post)
         if post.ids_only:
             objects = [{"guid": r["doc_id"]} for r in rows]

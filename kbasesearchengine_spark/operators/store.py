@@ -40,7 +40,7 @@ import shutil
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 FORMAT_VERSION = 6  # bump on any index layout/schema change
@@ -147,15 +147,25 @@ def read_table(
     return spark.read.schema(schema).parquet(os.path.join(index_dir, table))
 
 
-def open_dataset(index_dir: str, table: str):
-    """A pyarrow dataset over the postings or terms files as they are
-    listed now: a snapshot, so files committed later are not read through
-    it. Raises OSError (or pyarrow's ArrowInvalid) when the store is not
-    readable through pyarrow; readers then fall back to Spark."""
+def docs_arrow_schema(stats: dict) -> pa.Schema:
+    """The committed docs schema as pyarrow reads it."""
+    return to_arrow_schema(docs_schema(stats))
+
+
+def open_dataset(index_dir: str, table: str, stats: dict | None = None):
+    """A pyarrow dataset over the docs, postings or terms files as they
+    are listed now: a snapshot, so files committed later are not read
+    through it. Docs are given the schema committed in `stats`. Raises
+    OSError (or pyarrow's ArrowInvalid) when the store is not readable
+    through pyarrow; readers then fall back to Spark."""
     import pyarrow.dataset as pads
 
+    if table == "docs":
+        schema = docs_arrow_schema(stats or read_stats(index_dir))
+    else:
+        schema = _ARROW_READ[table]
     return pads.dataset(
-        os.path.join(index_dir, table), schema=_ARROW_READ[table],
+        os.path.join(index_dir, table), schema=schema,
         format="parquet", partitioning="hive",
     )
 

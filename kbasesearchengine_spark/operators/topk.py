@@ -16,15 +16,22 @@ the block directory, lazy block decode) through one closure,
 asc):
 
 Driver-local tier (posting volume ≤ LOCAL_POSTINGS_MAX) — Lucene answers
-a selective match in-process on the shard that holds the postings:
-  postings snapshot ──pyarrow read, filter term_hash ∈ query (match-only
-      queries read the doc-id payload and its skip directory only)──►
-  per-segment kernels in-process ──► global cut
-  ──► ONE docs scan: segment- and doc_id-pruned to the candidates, the
-      doc_filter in the same scan, scores as a literal map column
-  No postings shuffle, no applyInPandas, no Python worker: one Spark job.
+a selective match in-process on the shard that holds the postings, and
+ES returns a page with its hits.total from there:
+  postings snapshot ──pyarrow read, pruned to the query's term_hash row
+      groups (match-only queries read the doc-id payload and its skip
+      directory only)──► per-segment kernels in-process ──► global cut
+  ──► docs snapshot ──pyarrow read of the candidates (their segments and
+      doc-id range), every column but the text payload──►
+  ──► the doc_filter, evaluated by Catalyst over a local relation of
+      those rows (it folds while planning: no job)
+  ──► one Arrow table: the match set, or its ranked top k
+  Pages, hits.total and type counts are Arrow sorts, slices and counts of
+  that table; topk and match_frame return it as a local relation, and
+  the text payload is read for the rows they return. No postings
+  shuffle, no Python worker and no Spark job.
 
-Fan-out tier (larger volumes, or a store pyarrow cannot open):
+Fan-out tier (larger volumes, or a store pyarrow cannot read):
   postings parquet ──filter term_hash ∈ query (parquet pushdown; same
       column pruning)──► groupBy(segment) applyInPandas [kernels]
   ──► with a doc_filter: broadcast join of the segments' matches to the
@@ -48,15 +55,20 @@ tests/kernel_reference.py.
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 import os
+import re
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.bm25 import idf as bm25_idf
 from ..functions.hashing import term_hash
@@ -71,7 +83,8 @@ log = logging.getLogger(__name__)
 # the driver-local tier; larger queries fan out over Spark. Crossover
 # sweep on a 4-core host (local[4]): 20,000-row code-corpus index in 16
 # segments, single-term queries, median of 5 interleaved reads per
-# point (ms):
+# point (ms), taken when the local tier still answered through one Spark
+# docs scan (a literal doc_id IN list and score map):
 #             every match (k=None,      top 10, scored,
 #   df sum    match-only): local/fan-out  hydrated: local/fan-out
 #       60        121 /  354               305 / 1083
@@ -81,11 +94,20 @@ log = logging.getLogger(__name__)
 #     4094        314 /  374               233 /  956
 #     8246        467 /  332               275 / 1041
 #    16444       1074 /  382               267 / 1029
-# When every match is wanted, every match is a candidate and the docs
-# scan's literal doc_id list (and score map) grows with it: that shape
-# crosses over between 4k and 8k postings. A top-k query keeps ≤ k
-# candidates and does not cross over in this range.
+# The tier now answers in Arrow with no Spark job, and the bound also
+# caps what it holds on the driver: every match's docs row but the text
+# payload, and the local relation a doc_filter is evaluated over, which
+# must stay under Spark's local-relation size
+# (spark.sql.execution.arrow.localRelationThreshold) to run no job.
 LOCAL_POSTINGS_MAX = 4096
+
+# the docs columns that hold a document's text: the local tier reads them
+# only for the rows a page or a top k returns (and for every candidate
+# when a doc_filter names one)
+PAYLOAD_COLS = ("text", "content", "sub_value")
+
+# relevance order, as (column, ascending) keys
+RELEVANCE = [("score", False), ("doc_id", True)]
 
 # what a match-only scan reads: the doc-id payload and its skip directory
 _MATCH_ONLY_COLS = ["segment", "term_hash", "doc_ids", "block_last",
@@ -100,8 +122,8 @@ class InvertedIndex:
 
     A handle scores one snapshot of the index: stats.json (with the docs
     schema every docs read is given), the pyarrow datasets of
-    terms/postings and the Spark postings handle (its file listing) are
-    opened together, in ``__init__`` and ``refresh()``. Segments
+    docs/terms/postings and the Spark postings handle (its file listing)
+    are opened together, in ``__init__`` and ``refresh()``. Segments
     committed afterwards are not seen, on either query tier, until
     ``refresh()`` (the reference's refreshIndex, S6)."""
 
@@ -130,7 +152,7 @@ class InvertedIndex:
     def _snapshot(self, stats: dict) -> None:
         """Open one snapshot from the index's stats: a field handle
         scores with the field's total_dl and avgdl, and reads postings
-        and terms from the field's directory."""
+        and terms from the field's directory (and the primary's docs)."""
         self._postings_dir = self.index_dir
         if self.field is not None:
             self._postings_dir = store.field_dir(self.index_dir, self.field)
@@ -139,7 +161,17 @@ class InvertedIndex:
                      "avgdl": total / n if n else 0.0}
         self.stats = stats
         self._dfs: dict = {}
-        self._datasets = {t: self._open(t) for t in ("terms", "postings")}
+        # the types of a local match table's columns: the committed docs
+        # schema's, and the score
+        self._fields = {f.name: f for f in store.docs_schema(stats)}
+        self._fields["score"] = StructField("score", DoubleType())
+        self._arrow = store.docs_arrow_schema(stats).append(
+            pa.field("score", pa.float64()))
+        # the column order of a local match table (the fan-out's too)
+        self.docs_columns = ["doc_id"] + [
+            c for c in self._arrow.names if c not in ("doc_id", "score")]
+        self._datasets = {t: self._open(t)
+                          for t in ("terms", "postings", "docs")}
         # a Spark handle lists its files when it is made: make the
         # postings' now, so the fan-out scores this snapshot too (and the
         # terms' when the Spark scan replaces the pyarrow lookup). Docs
@@ -152,40 +184,104 @@ class InvertedIndex:
     def _tbl(self, name: str) -> DataFrame:
         if name not in self._dfs:
             self._dfs[name] = store.read_table(
-                self.spark,
-                self.index_dir if name == "docs" else self._postings_dir,
-                name, self.stats,
+                self.spark, self._dir(name), name, self.stats,
             )
         return self._dfs[name]
+
+    def _dir(self, table: str) -> str:
+        """Where a table of this handle lives: a field's docs are the
+        primary's."""
+        return self.index_dir if table == "docs" else self._postings_dir
 
     def _fallback(self, table: str, err: Exception) -> None:
         """Record (once per handle and table) that pyarrow cannot read a
         table and Spark answers instead."""
         if table not in self._logged:
             self._logged.add(table)
-            log.info("pyarrow cannot read %s/%s (%s); reading it with Spark",
-                     self._postings_dir, table, err)
+            log.info("pyarrow cannot read %s/%s (%s); Spark answers instead",
+                     self._dir(table), table, err)
 
     def _open(self, table: str):
         try:
-            return store.open_dataset(self._postings_dir, table)
+            return store.open_dataset(self._dir(table), table, self.stats)
         except (OSError, pa.lib.ArrowInvalid) as err:
             self._fallback(table, err)
             return None
 
-    def _read(self, table: str, hashes: list[int], columns=None):
-        """The snapshot's rows of `table` for these term hashes, or None
+    def _read(self, table: str, where: pads.Expression, columns=None):
+        """The snapshot's rows of `table` that `where` selects, or None
         when pyarrow cannot read the table (the caller uses Spark)."""
         ds = self._datasets[table]
         if ds is None:
             return None
         try:
-            return ds.to_table(
-                columns=columns, filter=pads.field("term_hash").isin(hashes)
-            )
+            return ds.to_table(columns=columns, filter=where)
         except (OSError, pa.lib.ArrowInvalid) as err:
             self._fallback(table, err)
             return None
+
+    # ---------------------------------------------- local match tables
+
+    def row_columns(self, doc_filter=None) -> list[str]:
+        """The columns a local match table reads for every candidate:
+        every docs column but the text payload, which a doc_filter gets
+        too when its text names a payload column (the filter is evaluated
+        over these rows)."""
+        named = set(re.findall(r"\w+", str(doc_filter))) if (
+            doc_filter is not None) else set()
+        return [c for c in self.docs_columns
+                if c not in PAYLOAD_COLS or c in named]
+
+    def empty_rows(self, scores: bool) -> pa.Table:
+        """The empty local match table."""
+        names = self.row_columns() + (["score"] if scores else [])
+        return pa.schema([self._arrow.field(c) for c in names]).empty_table()
+
+    def doc_rows(self, ids: pa.Array, segments: list[int],
+                 columns: list[str]) -> pa.Table | None:
+        """These columns of the snapshot's docs rows with these doc ids,
+        which lie in `segments`; None when pyarrow cannot read docs. The
+        read is pruned to the segments' partitions and, by row-group
+        statistics, to the ids' min/max; the exact ids are kept after."""
+        bounds = pc.min_max(ids)
+        where = (_any_of("segment", segments)
+                 & (pads.field("doc_id") >= bounds["min"].as_py())
+                 & (pads.field("doc_id") <= bounds["max"].as_py()))
+        rows = self._read("docs", where, columns)
+        if rows is None:
+            return None
+        return rows.filter(pc.is_in(rows["doc_id"], value_set=ids))
+
+    def with_columns(self, rows: pa.Table, names: list[str]) -> pa.Table:
+        """A local match table with these docs columns added (read for
+        its rows' doc ids) and its columns in docs order: how a page or a
+        top k reads the text payload of the rows it returns."""
+        names = [c for c in names if c not in rows.column_names]
+        if not names:
+            return rows
+        unknown = [c for c in names if c not in self._fields]
+        if unknown:
+            raise ValueError(f"no docs column {unknown} in {self.index_dir!r}")
+        if rows.num_rows:
+            extra = self.doc_rows(rows["doc_id"].combine_chunks(),
+                                  pc.unique(rows["segment"]).to_pylist(),
+                                  ["doc_id", *names])
+            if extra is None:
+                raise OSError(f"pyarrow cannot read {self.index_dir}/docs")
+        else:
+            extra = pa.schema([self._arrow.field(c)
+                               for c in ["doc_id", *names]]).empty_table()
+        at = pc.index_in(rows["doc_id"], value_set=extra["doc_id"])
+        for c in names:
+            rows = rows.append_column(self._arrow.field(c), extra[c].take(at))
+        order = self.docs_columns + ["score"]
+        return rows.select([c for c in order if c in rows.column_names])
+
+    def rows_frame(self, rows: pa.Table) -> DataFrame:
+        """A local match table as a local relation, typed by the
+        committed docs schema (and the score)."""
+        return local_relation(self.spark, rows, StructType(
+            [self._fields[c] for c in rows.column_names]))
 
     @property
     def docs(self) -> DataFrame:
@@ -200,8 +296,7 @@ class InvertedIndex:
         index's docs rows (+ `score` when scored). Its filter folds to an
         empty relation, so collecting it runs no Spark job (a frame made
         from a Python list runs one, on Python workers). The handle keeps
-        one frame per shape, so a caller can tell an answer known to be
-        empty before any job by identity."""
+        one frame per shape."""
         key = f"empty:{scores}:{rows}"
         if key not in self._dfs:
             cols = [F.lit(None).cast("bigint").alias("doc_id")]
@@ -232,12 +327,14 @@ class InvertedIndex:
         Spark job at all (the Lucene analog reads its term dictionary
         locally too). The terms files are written hash-sorted (indexer
         sortWithinPartitions), so parquet row-group min/max statistics
-        prune the read to ~1 row group per file, and only the
-        (term_hash, df) columns are decoded. The ≤ terms×batches hits are
+        prune the read (``_any_of``: the installed pyarrow prunes no row
+        group on ``isin``), and only the (term_hash, df) columns are
+        decoded. The ≤ terms×batches hits are
         summed driver-side. When pyarrow cannot read the store, the same
         snapshot's Spark scan answers (and the fallback is logged)."""
         hashes = {term_hash(t): t for t in terms}
-        tbl = self._read("terms", list(hashes), ["term_hash", "df"])
+        tbl = self._read("terms", _any_of("term_hash", list(hashes)),
+                         ["term_hash", "df"])
         if tbl is not None:
             hits = zip(
                 tbl.column("term_hash").to_pylist(),
@@ -298,6 +395,47 @@ class InvertedIndex:
         return self._dfs[key]
 
 
+# ------------------------------------------------------------ Arrow rows
+
+
+def _any_of(field: str, values) -> pads.Expression:
+    """`field` equal to one of `values`, as an OR of `==`: pyarrow 16
+    prunes partitions and parquet row groups on it, and no row group on
+    `isin`."""
+    return functools.reduce(
+        operator.or_, [pads.field(field) == v for v in values])
+
+
+def sort_indices(table: pa.Table, keys: list[tuple[str, bool]]) -> pa.Array:
+    """The row order Spark's orderBy gives `table` for these (column,
+    ascending) keys: ascending puts nulls first and descending puts them
+    last, and NaN sorts above every number. Each key column is preceded
+    by an explicit validity key (and a NaN key for floats), so pyarrow's
+    own null and NaN placement never decides."""
+    cols, sort_keys = {}, []
+    for i, (name, asc) in enumerate(keys):
+        col = table[name]
+        order = "ascending" if asc else "descending"
+        cols[f"valid{i}"] = pc.is_valid(col)
+        sort_keys.append((f"valid{i}", order))
+        if pa.types.is_floating(col.type):
+            cols[f"nan{i}"] = pc.fill_null(pc.is_nan(col), False)
+            sort_keys.append((f"nan{i}", order))
+        cols[f"key{i}"] = col
+        sort_keys.append((f"key{i}", order))
+    return pc.sort_indices(pa.table(cols), sort_keys=sort_keys)
+
+
+def local_relation(spark: SparkSession, rows: pa.Table,
+                   schema: StructType) -> DataFrame:
+    """An Arrow table as a Spark local relation: plans over it fold on
+    the driver, so collecting them runs no job while it stays under
+    spark.sql.execution.arrow.localRelationThreshold. The table is one
+    record batch first: pyspark 4.1 drops every row after a zero-row
+    batch (which a filtered read or filter leaves behind)."""
+    return spark.createDataFrame(rows.combine_chunks(), schema)
+
+
 # ------------------------------------------------------------ main entry
 
 
@@ -321,6 +459,34 @@ def _segment_scorer(
     return score
 
 
+def _plan(
+    index: InvertedIndex, query: str, mode: str, scores: bool
+) -> tuple[dict[int, float], int] | None:
+    """A query's idfs and its posting volume (the summed global df of its
+    terms, which picks the tier), or None when the answer is known empty
+    from the term dictionary alone: no query terms, an absent AND term,
+    or no scored term."""
+    terms = sorted(set(tokenize_py(query)))
+    if not terms:
+        return None
+    dfs = index.term_dfs(terms)
+    if mode == "and" and any(t not in dfs for t in terms):
+        return None  # conjunctive: a term with no postings
+    # idfs is keyed by term_hash; its insertion order is the sorted-term
+    # order, the order the kernels reduce in (score contract). Match-only
+    # queries need term presence only: a globally absent term simply has
+    # no posting rows.
+    if scores:
+        n = index.stats["n_docs"]
+        idfs = {term_hash(t): float(bm25_idf(dfs[t], n))
+                for t in terms if t in dfs}
+        if not idfs:
+            return None
+    else:
+        idfs = {term_hash(t): 0.0 for t in terms}
+    return idfs, sum(dfs.values())
+
+
 def _local_hits(
     index: InvertedIndex,
     idfs: dict[int, float],
@@ -332,7 +498,7 @@ def _local_hits(
     """The driver-local tier's matches — (doc_id, segment[, score]),
     cut to the global top k when k is given — or None when pyarrow
     cannot read the postings snapshot."""
-    tbl = index._read("postings", list(idfs),
+    tbl = index._read("postings", _any_of("term_hash", list(idfs)),
                       None if scores else _MATCH_ONLY_COLS)
     if tbl is None:
         return None
@@ -347,37 +513,72 @@ def _local_hits(
     return hits
 
 
-def _local_frame(
-    docs: DataFrame,
-    hits: pd.DataFrame,
-    doc_filter,
+def _local_rows(
+    index: InvertedIndex,
+    rows_of: InvertedIndex,
+    idfs: dict[int, float],
+    volume: int,
     k: int | None,
+    mode: str,
+    doc_filter,
     scores: bool,
-) -> DataFrame:
-    """One docs scan pruned to the hits (their segments and their
-    doc_ids: a field's postings share the docs' segments), with the
-    doc_filter in the same scan and the scores as a literal map column;
-    ranked and cut to k when scored with a k. The literals go to the JVM
-    as one SQL expression each: a Column per literal costs a py4j round
-    trip."""
-    ids = hits["doc_id"].tolist()
-    frame = docs.where(
-        F.expr(f"doc_id IN ({', '.join(map(str, ids))})")
-    ).where(F.col("segment").isin(sorted(set(hits["segment"].tolist()))))
+) -> pa.Table | None:
+    """The driver-local tier: the matches as one Arrow table of
+    `rows_of`'s docs rows (``row_columns``, + `score` when scored) that
+    pass the doc_filter, ranked and cut to k when scored with a k, or
+    None when the query takes the fan-out (a posting volume above the
+    bound, or a postings or docs snapshot pyarrow cannot read). The
+    doc_filter is evaluated by Catalyst over a local relation of the
+    candidates' rows, which folds while planning: no Spark job."""
+    if volume > LOCAL_POSTINGS_MAX:
+        return None
+    # with a doc_filter the rank cut must come after the predicate, so
+    # the segments return every match (k=None)
+    seg_k = k if doc_filter is None else None
+    hits = _local_hits(index, idfs, index.stats["avgdl"], seg_k, mode, scores)
+    if hits is None:
+        return None
+    if hits.empty:
+        return rows_of.empty_rows(scores)
+    ids = pa.array(hits["doc_id"].to_numpy(), pa.int64())
+    rows = rows_of.doc_rows(ids, hits["segment"].unique().tolist(),
+                            rows_of.row_columns(doc_filter))
+    if rows is None:
+        return None
     if doc_filter is not None:
-        frame = frame.where(doc_filter)
-    if not scores:
-        return frame
-    pairs = ", ".join(
-        f"{d}L, {s!r}D" for d, s in zip(ids, hits["score"].tolist())
-    )
-    frame = frame.withColumn("score", F.expr(f"map({pairs})")[F.col("doc_id")])
-    if k is None:
-        # unordered, like the fan-out's: a ranked cut here would let a
-        # caller's page limit stop the scan before a count observed on
-        # this frame has seen every row
-        return frame
-    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        kept = rows_of.rows_frame(rows).where(doc_filter).select(
+            "doc_id").collect()
+        rows = rows.filter(pc.is_in(rows["doc_id"], value_set=pa.array(
+            [r[0] for r in kept], pa.int64())))
+    if scores:
+        # a take, not Table.join: pyarrow 16's join raises on list
+        # columns such as access_groups
+        at = pc.index_in(rows["doc_id"], value_set=ids)
+        rows = rows.append_column(
+            "score", pa.array(hits["score"].to_numpy(), pa.float64()).take(at))
+        if k is not None:
+            rows = rows.take(sort_indices(rows, RELEVANCE)[:k])
+    return rows
+
+
+def local_matches(
+    index: InvertedIndex,
+    query: str,
+    k: int | None = None,
+    mode: str = "and",
+    doc_filter=None,
+    scores: bool = True,
+    rows_of: InvertedIndex | None = None,
+) -> pa.Table | None:
+    """topk's matches as one Arrow table of `rows_of`'s docs rows
+    (default: `index`'s) when they are answered on the driver: by the
+    local tier, or known empty from the term dictionary (an empty table
+    on either tier). None means the query takes the fan-out."""
+    rows_of = rows_of or index
+    plan = _plan(index, query, mode, scores)
+    if plan is None:
+        return rows_of.empty_rows(scores)
+    return _local_rows(index, rows_of, *plan, k, mode, doc_filter, scores)
 
 
 def topk(
@@ -408,9 +609,11 @@ def topk(
     index's docs table — every column, plus `score` when scored,
     unordered. match_frame passes its index (also when scoring one of
     its fields), so the matches are read with the docs once.
-    An answer known to be empty before any Spark job (no query terms, an
-    absent AND term, no local-tier candidate) is the `no_matches` frame
-    of the handle whose rows it would carry.
+    On the driver-local tier the answer is a local relation of the
+    ``local_matches`` table (text payload read for its rows only); an
+    answer known empty before any Spark job (no query terms, an absent
+    AND term, no local-tier match) is the `no_matches` frame of the
+    handle whose rows it would carry.
     """
     if not scores and (k is not None or hydrate):
         raise ValueError(
@@ -418,8 +621,8 @@ def topk(
         )
     if join_to is not None and hydrate:
         raise ValueError("join_to returns docs rows: requires hydrate=False")
-    terms = sorted(set(tokenize_py(query)))
-    n, avgdl = index.stats["n_docs"], index.stats["avgdl"]
+    rows_of = join_to or index
+    avgdl = index.stats["avgdl"]
     out_schema = "doc_id bigint, score double" if scores else "doc_id bigint"
 
     def joined(top: DataFrame) -> DataFrame:
@@ -430,48 +633,29 @@ def topk(
             return index.no_matches(scores, rows=False)
         return join_to.no_matches(scores, rows=True)
 
-    if not terms:
+    plan = _plan(index, query, mode, scores)
+    if plan is None:
         return empty()
-    # the global df of every term: the idfs of a scored query, and the
-    # posting volume that picks the tier
-    dfs = index.term_dfs(terms)
-    if mode == "and" and any(t not in dfs for t in terms):
-        return empty()  # conjunctive: a term with no postings
-    # idfs is keyed by term_hash; its insertion order is the sorted-term
-    # order (terms is sorted above), the order the kernels reduce in
-    # (score contract). Match-only queries need term presence only: a
-    # globally absent term simply has no posting rows.
-    if scores:
-        idfs = {term_hash(t): float(bm25_idf(dfs[t], n))
-                for t in terms if t in dfs}
-        if not idfs:
+    idfs, volume = plan
+    rows = _local_rows(index, rows_of, idfs, volume, k, mode, doc_filter,
+                       scores)
+    if rows is not None:
+        if rows.num_rows == 0:
             return empty()
-    else:
-        idfs = {term_hash(t): 0.0 for t in terms}
+        score_col = ["score"] if scores else []
+        if join_to is not None:
+            cols = rows_of.docs_columns + score_col
+        elif hydrate:
+            rows = rows.take(sort_indices(rows, RELEVANCE))
+            cols = ["doc_id", "score"] + [
+                c for c in rows_of.docs_columns if c not in ("doc_id", "dl")]
+        else:
+            cols = ["doc_id", *score_col]
+        return rows_of.rows_frame(
+            rows_of.with_columns(rows, cols).select(cols))
     # with a doc_filter the rank cut must come after the predicate, so
     # the segments return every match (k=None)
     seg_k = k if doc_filter is None else None
-
-    if sum(dfs.values()) <= LOCAL_POSTINGS_MAX:
-        hits = _local_hits(index, idfs, avgdl, seg_k, mode, scores)
-        if hits is not None:
-            if hits.empty:
-                return empty()
-            docs = (join_to or index).docs
-            frame = _local_frame(docs, hits, doc_filter, k, scores)
-            score_col = ["score"] if scores else []
-            if join_to is not None:
-                return frame.select(
-                    "doc_id", *[c for c in docs.columns if c != "doc_id"],
-                    *score_col,
-                )
-            if not hydrate:
-                return frame.select("doc_id", *score_col)
-            return frame.select(
-                "doc_id", "score",
-                *[c for c in docs.columns if c not in ("doc_id", "dl")],
-            )
-
     if scores:
         postings_q = index.postings.where(F.col("term_hash").isin(list(idfs)))
     else:

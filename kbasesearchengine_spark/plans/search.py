@@ -24,10 +24,20 @@ from __future__ import annotations
 from dataclasses import dataclass
 from dataclasses import field as dc_field
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from ..operators.topk import InvertedIndex, topk
+from ..operators.topk import (
+    PAYLOAD_COLS,
+    RELEVANCE,
+    InvertedIndex,
+    local_matches,
+    local_relation,
+    sort_indices,
+    topk,
+)
 
 
 @dataclass
@@ -281,10 +291,42 @@ def _combined_predicate(
 ) -> Column | None:
     pred = _predicate(match)
     if access is not None:
-        ap = access.predicate(index.docs.columns)
+        ap = access.predicate(index.docs_columns)
         if ap is not None:
             pred = ap if pred is None else (pred & ap)
     return pred
+
+
+def match_rows(
+    index: InvertedIndex,
+    match: MatchFilter,
+    access: AccessFilter | None = None,
+    scores: bool = False,
+    k: int | None = None,
+) -> pa.Table | None:
+    """The FULL filtered match set (or, with k, its ranked top k) as one
+    Arrow table when the driver answers it: the driver-local tier
+    (topk.local_matches), or an answer known empty before any read (A5,
+    an absent AND term). Its columns are doc_id and every docs column but
+    the text payload (InvertedIndex.row_columns), + `score` when scored;
+    a page reads the payload of its own rows. None means the match set
+    is a Spark frame (match_frame): a fan-out query, or no full-text
+    clause (a filtered docs scan). Pages, hits.total and type counts
+    are then Arrow sorts, slices and counts of the one table."""
+    if access is not None and access.is_empty():
+        return index.empty_rows(scores)  # A5, without touching the index
+    if not match.full_text:
+        return None
+    scoring = index.field_index(match.field) if match.field else index
+    return local_matches(
+        scoring,
+        match.full_text,
+        k=k if scores else None,
+        mode=match.full_text_mode,
+        doc_filter=_combined_predicate(index, match, access),
+        scores=scores,
+        rows_of=index,
+    )
 
 
 def match_frame(
@@ -295,12 +337,13 @@ def match_frame(
     k: int | None = None,
 ) -> DataFrame:
     """The FULL filtered match frame (docs columns, + `score` when
-    requested) with no ordering/pagination applied — the one computation
-    behind pages, hits.total and type aggregations. The RPC layer
-    observes its row count during the page's own scan, so a page and its
-    total come from one Spark job (the reference gets both from one ES
-    response, ElasticIndexingStorage.java:1557). An answer known to be
-    empty before any job (A5, or topk's early returns) is
+    requested) with no ordering/pagination applied. On the driver-local
+    tier it is a local relation of the match table (``match_rows``) with
+    its text payload. On the fan-out the RPC layer observes its row
+    count during the page's own scan, so a page and its total come from
+    one Spark job (the reference gets both from one ES response,
+    ElasticIndexingStorage.java:1557). An answer known to be empty before
+    any job (A5, or topk's early returns) is
     `index.no_matches(scores, rows=True)`.
 
     scores=False skips ALL BM25 work (no idf math, tf/dl streams never
@@ -313,8 +356,8 @@ def match_frame(
     pred = _combined_predicate(index, match, access)
     if match.full_text:
         # topk returns the matches as this index's docs rows: the docs
-        # are read once, by the local tier's pruned scan or the fan-out's
-        # join
+        # are read once, by the local tier's pyarrow read or the
+        # fan-out's join
         scoring = index.field_index(match.field) if match.field else index
         return topk(
             scoring,
@@ -336,18 +379,19 @@ def _by_relevance(sorting: list[SortingRule] | None) -> bool:
     return bool(sorting) and sorting[0].key == "relevance"
 
 
-def _order_exprs(sorting: list[SortingRule] | None) -> list[Column]:
+def _order_keys(sorting: list[SortingRule] | None) -> list[tuple[str, bool]]:
+    """A page's order as (column, ascending) keys, for Spark
+    (_order_exprs) and Arrow (topk.sort_indices) alike."""
     if _by_relevance(sorting):
-        order = [F.desc("score"), F.asc("doc_id")]
-        order += [
-            (F.asc(s.key) if s.ascending else F.desc(s.key)) for s in sorting[1:]
-        ]
-    elif sorting:
-        order = [(F.asc(s.key) if s.ascending else F.desc(s.key)) for s in sorting]
-        order.append(F.asc("doc_id"))  # deterministic ties (O5)
-    else:
-        order = [F.asc("doc_id")]  # default: NOT relevance (O2 analog)
-    return order
+        return RELEVANCE + [(s.key, s.ascending) for s in sorting[1:]]
+    if sorting:
+        # deterministic ties (O5)
+        return [(s.key, s.ascending) for s in sorting] + [("doc_id", True)]
+    return [("doc_id", True)]  # default: NOT relevance (O2 analog)
+
+
+def _order_exprs(sorting: list[SortingRule] | None) -> list[Column]:
+    return [F.asc(c) if asc else F.desc(c) for c, asc in _order_keys(sorting)]
 
 
 def search_objects(
@@ -374,12 +418,15 @@ def search_objects(
     if include_subobjects:
         index = index.sub_index()
     pagination = pagination or Pagination()
+    post = post or PostProcessing()
     relevance = _by_relevance(sorting)
-    frame = match_frame(
-        index, match, access=access, scores=relevance,
-        k=pagination.start + pagination.count if relevance else None,
-    )
-    return _page(frame, match, sorting, pagination, post or PostProcessing())
+    k = pagination.start + pagination.count if relevance else None
+    rows = match_rows(index, match, access=access, scores=relevance, k=k)
+    if rows is not None:
+        page = _local_page(index, rows, sorting, pagination, post)
+        return _apply_post(index.rows_frame(page), match, post)
+    frame = match_frame(index, match, access=access, scores=relevance, k=k)
+    return _page(frame, match, sorting, pagination, post)
 
 
 def _page(
@@ -390,7 +437,7 @@ def _page(
     post: PostProcessing,
 ) -> DataFrame:
     """One page of a match frame: sort order, offset, limit, then
-    post-processing — the facade's page and the RPC's."""
+    post-processing — the facade's fan-out page and the RPC's."""
     page = (
         frame.orderBy(*_order_exprs(sorting))
         .offset(pagination.start)
@@ -399,33 +446,82 @@ def _page(
     return _apply_post(page, match, post)
 
 
+def _local_page(
+    index: InvertedIndex,
+    rows: pa.Table,
+    sorting: list[SortingRule] | None,
+    pagination: Pagination,
+    post: PostProcessing,
+) -> pa.Table:
+    """One page of a local match table (match_rows), ordered and sliced
+    in Arrow with Spark's order semantics. The text payload is read for
+    the page's rows only, and only when the post-processing returns or
+    highlights it (a sort key that is payload is read for every row)."""
+    keys = _order_keys(sorting)
+    rows = index.with_columns(rows, [c for c, _ in keys])
+    start = pagination.start
+    page = rows.take(sort_indices(rows, keys)[start:start + pagination.count])
+    if not post.ids_only and (
+        (post.include_content and not post.skip_data)
+        or post.highlight or post.highlight_fields
+    ):
+        page = index.with_columns(
+            page, [c for c in PAYLOAD_COLS if c in index.docs_columns])
+    return page
+
+
+def _highlight_pattern(match: MatchFilter, post: PostProcessing) -> str | None:
+    """The highlight regex of a page, or None when it highlights nothing.
+
+    ONE highlight semantics engine-wide (pinned by the driver oracle and
+    the reference's ES highlighter, which marks ANALYZED-TOKEN matches,
+    not raw substrings — `dup` must not light up inside `dedup`;
+    ElasticIndexingStorageTest.java:1488-1535): one case-insensitive
+    whole-token pass. \\b is the [A-Za-z0-9_] boundary in BOTH Java regex
+    and DuckDB's RE2 — exactly the analyzer's token alphabet — and a
+    single alternation pass can't re-match inside the <em> tags it
+    inserts (a per-term chain could, e.g. for the query term "em"). A
+    term-less pattern '\\b()\\b' would mark EVERY boundary, so no query
+    terms means no highlight."""
+    if not (post.highlight or post.highlight_fields) or not match.full_text:
+        return None
+    from ..functions.tokenize import tokenize_py
+
+    terms = sorted(set(tokenize_py(match.full_text)))
+    if not terms:
+        return None
+    return r"(?i)\b(" + "|".join(terms) + r")\b"
+
+
+def _kept_columns(columns: list[str], post: PostProcessing) -> list[str]:
+    """The columns of a page that its post-processing keeps."""
+    if post.ids_only:
+        return ["doc_id"]  # _source: [guid] analog (P10)
+    keep = list(columns)
+    if post.skip_keys or post.select_keys is not None:
+        keep_keys = set(post.select_keys or ())
+        keep = [
+            c for c in keep
+            if c in _SYSTEM_COLS
+            or c in _DATA_COLS
+            or c in keep_keys
+            or c.startswith("highlight_")  # per-field fragments stay
+        ]
+    if not post.include_content or post.skip_data:
+        keep = [c for c in keep if c not in _DATA_COLS]
+    return keep
+
+
 def _apply_post(
     page: DataFrame, match: MatchFilter, post: PostProcessing
 ) -> DataFrame:
     """P10/T13 post-processing over an ordered page."""
     if post.ids_only:
-        return page.select("doc_id")  # _source: [guid] analog (P10)
-    # ONE highlight semantics engine-wide (pinned by the driver oracle
-    # and the reference's ES highlighter, which marks ANALYZED-TOKEN
-    # matches, not raw substrings — `dup` must not light up inside
-    # `dedup`; ElasticIndexingStorageTest.java:1488-1535): one
-    # case-insensitive whole-token pass. \b is the [A-Za-z0-9_]
-    # boundary in BOTH Java regex and DuckDB's RE2 — exactly the
-    # analyzer's token alphabet — and a single alternation pass can't
-    # re-match inside the <em> tags it inserts (a per-term chain could,
-    # e.g. for the query term "em"). A term-less pattern '\b()\b' would
-    # mark EVERY boundary, so no query terms means no highlight.
-    pat = None
-    if (post.highlight or post.highlight_fields) and match.full_text:
-        from ..functions.tokenize import tokenize_py
-
-        terms = sorted(set(tokenize_py(match.full_text)))
-        if terms:
-            pat = r"(?i)\b(" + "|".join(terms) + r")\b"
+        return page.select("doc_id")
+    pat = _highlight_pattern(match, post)
     if post.highlight and pat:
         payload = next(
-            (c for c in ("text", "content", "sub_value")
-             if c in page.columns), None
+            (c for c in PAYLOAD_COLS if c in page.columns), None
         )
         if payload is None:
             # e.g. a store_text=False index — fail with the cause instead
@@ -458,20 +554,7 @@ def _apply_post(
                     F.regexp_replace(src, pat, "<em>$1</em>"),
                 ),
             )
-    if post.skip_keys or post.select_keys is not None:
-        keep_keys = set(post.select_keys or ())
-        drop = [
-            c for c in page.columns
-            if c not in _SYSTEM_COLS
-            and c not in _DATA_COLS
-            and c not in keep_keys
-            and not c.startswith("highlight_")  # per-field fragments stay
-        ]
-        page = page.drop(*drop)
-    if not post.include_content or post.skip_data:
-        drop = [c for c in _DATA_COLS if c in page.columns]
-        page = page.drop(*drop)
-    return page
+    return page.select(*_kept_columns(page.columns, post))
 
 
 def count_objects(
@@ -482,9 +565,11 @@ def count_objects(
     """hits.total (G3): the size of the FULL match set, independent of
     pagination — the reference returns it with every page
     (ElasticIndexingStorage.java:1557 total from ES hits.total). A pure
-    count: scores=False, so no BM25 math or tf/dl decode anywhere."""
-    if access is not None and access.is_empty():
-        return 0
+    count: scores=False, so no BM25 math or tf/dl decode anywhere; the
+    local match table's row count when the driver answers."""
+    rows = match_rows(index, match, access=access, scores=False)
+    if rows is not None:
+        return rows.num_rows
     return match_frame(index, match, access=access, scores=False).count()
 
 
@@ -495,11 +580,25 @@ def search_types(
     access: AccessFilter | None = None,
 ) -> DataFrame:
     """Count matching docs per type, size 0 (G1) — intersection-only
-    (scores=False: the aggregation never reads a score)."""
-    return match_frame(
-        index, match, access=access, scores=False
-    ).groupBy(F.col(type_col).alias("type")).agg(
-        F.count("*").alias("count")
+    (scores=False: the aggregation never reads a score). When the driver
+    answers the match set, an Arrow group count returned as a local
+    relation; else a Spark aggregation of the match frame."""
+    rows = match_rows(index, match, access=access, scores=False)
+    if rows is None:
+        return match_frame(
+            index, match, access=access, scores=False
+        ).groupBy(F.col(type_col).alias("type")).agg(
+            F.count("*").alias("count")
+        )
+    rows = index.with_columns(rows, [type_col])
+    counts = rows.group_by(type_col).aggregate([([], "count_all")])
+    return local_relation(
+        index.spark,
+        pa.table({"type": counts[type_col], "count": counts["count_all"]}),
+        StructType([
+            StructField("type", index.docs.schema[type_col].dataType),
+            StructField("count", LongType(), False),
+        ]),
     )
 
 

@@ -1,6 +1,8 @@
 """RpcService.search_objects pages: the page and hits.total come from one
-pass over the match frame (the reference reads both from one ES
-response, ElasticIndexingStorage.java:1557). Every case runs on both
+pass over the match set (the reference reads both from one ES
+response, ElasticIndexingStorage.java:1557): on the driver-local tier an
+Arrow table with no Spark job, on the fan-out one collect of the match
+frame. Every case runs on both
 query tiers (topk.LOCAL_POSTINGS_MAX forced to 0 and to sys.maxsize) and
 must equal the brute-force oracle, in total and in guids, within a
 Spark-job budget read from the status tracker."""
@@ -153,13 +155,14 @@ def test_page_and_total_equal_oracle_in_one_pass(
     assert out["total"] == n
     assert [o["guid"] for o in out["objects"]] == want
 
-    # job budget: one pass over the match frame. On the local tier that
-    # is one job; on the fan-out, the jobs of collecting the frame once
-    # (its shuffle and broadcast stages). A count-0 page, or one at or
-    # past the end, may take one more: a count when its plan folded, or,
-    # on the fan-out, the stages an empty frame's own collect skips but
-    # the observation still runs.
-    if case in KNOWN_EMPTY:
+    # job budget. The driver answers a full-text match set of the local
+    # tier, and any answer known empty, in Arrow: no job. Otherwise (the
+    # fan-out, or a filter-only docs scan) one pass over the match frame:
+    # the jobs of collecting the frame once (its shuffle and broadcast
+    # stages). A count-0 page, or one at or past the end, may take one
+    # more: a count when its plan folded, or, on the fan-out, the stages
+    # an empty frame's own collect skips but the observation still runs.
+    if case in KNOWN_EMPTY or (tier == "local" and query is not None):
         assert jobs == 0
         return
     mf = MatchFilter(full_text=query,
@@ -169,11 +172,11 @@ def test_page_and_total_equal_oracle_in_one_pass(
         svc.index, mf, access=access, scores=relevance).collect())
     at_end = start >= n or count == 0
     assert jobs <= frame_jobs + at_end, (jobs, frame_jobs)
-    if tier == "local":
-        assert jobs <= (0 if n == 0 else 1 + at_end)
 
 
-@pytest.mark.parametrize("tier", sorted(TIERS))
+# the fan-out only: a local-tier page is an Arrow slice of the match
+# table, whose row count is the total, so it observes nothing
+@pytest.mark.parametrize("tier", ["fanout"])
 def test_total_is_counted_in_the_result_stage(spark, svc, monkeypatch, tier):
     """The observed count has no exchange above it: it runs in the result
     stage, whose task metrics Spark applies once per partition, so a
@@ -299,3 +302,68 @@ def test_handle_reads_docs_without_a_job(spark, added, handle, probe):
         assert "access_groups" in out
     else:
         assert out["total"] == 0 and out["objects"] == []
+
+
+# ------------------------------------------------ driver-local answers
+
+
+@pytest.mark.parametrize("access", ["none", "alice"])
+@pytest.mark.parametrize("kind", ["search_types", "count_objects"])
+def test_local_types_and_count_run_no_job(
+    spark, svc, oracle, monkeypatch, kind, access
+):
+    """On the driver-local tier, search_types is an Arrow group count and
+    count_objects the match table's row count: no Spark job, and the
+    oracle's answers."""
+    monkeypatch.setattr(T, "LOCAL_POSTINGS_MAX", sys.maxsize)
+    user = None if access == "none" else access
+    ranked = _oracle_ranked(oracle, MID_PAIR, None, user)
+    assert ranked
+    if kind == "search_types":
+        params = {"match_filter": {"full_text_in_all": MID_PAIR}}
+        if user:
+            params["access_filter"] = {"with_private": 1}
+        got, jobs = _jobs(spark, lambda: svc.search_types(
+            params, user=user)["type_to_count"])
+        assert got == _types(ranked, oracle["lang"])
+    else:
+        got, jobs = _jobs(spark, lambda: count_objects(
+            svc.index, MatchFilter(full_text=MID_PAIR),
+            AccessFilter(user_groups=[GROUP]) if user else None))
+        assert got == len(ranked)
+    assert jobs == 0
+
+
+def test_local_page_over_a_large_payload_runs_no_job(
+    spark, tmp_path, monkeypatch
+):
+    """A local relation above Spark's local-relation size
+    (spark.sql.execution.arrow.localRelationThreshold, 48 MiB) is planned
+    as an RDD, and collecting it runs a job. The relation a doc_filter is
+    evaluated over therefore leaves the text payload out: a filtered
+    local page over 600 documents of 100 kB each runs no job, and reads
+    the payload of its own rows only."""
+    n, size = 600, 100_000
+    i = F.col("id")
+    corpus = spark.range(n, numPartitions=4).select(
+        F.lit("r").alias("repo"),
+        F.format_string("p%04d", i).alias("path"),
+        F.lit("c").alias("commit"),
+        F.when(i % 2 == 0, "python").otherwise("go").alias("lang"),
+        F.concat(F.lit("needle "), F.repeat(F.lit("x"), size)).alias("content"),
+    )
+    d = str(tmp_path / "idx")
+    IndexBuilder(spark, d, num_segments=4, segments_per_commit=4).build(
+        corpus, key_cols=KEYS
+    )
+    monkeypatch.setattr(T, "LOCAL_POSTINGS_MAX", sys.maxsize)
+    svc = rpc.RpcService(T.InvertedIndex(spark, d))
+    out, jobs = _jobs(spark, lambda: svc.search_objects({
+        "match_filter": {"full_text_in_all": "needle",
+                         "lookup_in_keys": {"lang": {"value": "python"}}},
+        "pagination": {"start": 0, "count": 10},
+    }))
+    assert out["total"] == n // 2
+    assert len(out["objects"]) == 10
+    assert all(len(o["data"]) == len("needle ") + size for o in out["objects"])
+    assert jobs == 0
