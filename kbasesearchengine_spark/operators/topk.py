@@ -22,9 +22,9 @@ ES returns a page with its hits.total from there:
       groups (match-only queries read the doc-id payload and its skip
       directory only)──► per-segment kernels in-process ──► global cut
   ──► docs snapshot ──pyarrow read of the candidates (their segments and
-      doc-id range), every column but the text payload──►
-  ──► the doc_filter, evaluated by Catalyst over a local relation of
-      those rows (it folds while planning: no job)
+      doc-id range), every column but the text payload──► the
+      doc_filter, evaluated by Catalyst over a local relation of those
+      rows (it folds while planning: no job)
   ──► one Arrow table: the match set, or its ranked top k
   Pages, hits.total and type counts are Arrow sorts, slices and counts of
   that table; topk and match_frame return it as a local relation, and
@@ -39,8 +39,8 @@ Fan-out tier (larger volumes, or a store pyarrow cannot read):
   ──► global orderBy(score desc, doc_id).limit(k)   [TakeOrderedAndProject]
   ──► left join to docs for hydration
 
-A handle scores one snapshot: stats, the term dictionary and the
-postings are opened together in ``InvertedIndex.refresh()``. A field
+A handle scores one snapshot: stats, the term dictionary, the postings
+and the docs are opened together in ``InvertedIndex.refresh()``. A field
 (``field_index``) is a posting set of the same index: it scores its own
 postings and term dictionary with the primary's n_docs and its own
 avgdl, and both tiers filter, prune by segment and hydrate against the
@@ -80,25 +80,26 @@ from .wand import and_topk_segment, wand_topk_segment
 log = logging.getLogger(__name__)
 
 # Largest posting volume (summed global df of the query terms) scored by
-# the driver-local tier; larger queries fan out over Spark. Crossover
-# sweep on a 4-core host (local[4]): 20,000-row code-corpus index in 16
-# segments, single-term queries, median of 5 interleaved reads per
-# point (ms), taken when the local tier still answered through one Spark
-# docs scan (a literal doc_id IN list and score map):
-#             every match (k=None,      top 10, scored,
-#   df sum    match-only): local/fan-out  hydrated: local/fan-out
-#       60        121 /  354               305 / 1083
-#      512        156 /  371               228 / 1003
-#     1024        175 /  385               261 / 1021
-#     2053        212 /  319               275 /  992
-#     4094        314 /  374               233 /  956
-#     8246        467 /  332               275 / 1041
-#    16444       1074 /  382               267 / 1029
-# The tier now answers in Arrow with no Spark job, and the bound also
-# caps what it holds on the driver: every match's docs row but the text
-# payload, and the local relation a doc_filter is evaluated over, which
-# must stay under Spark's local-relation size
-# (spark.sql.execution.arrow.localRelationThreshold) to run no job.
+# the driver-local tier; larger queries fan out over Spark. Sweep on a
+# 4-core host (local[4]): 20,000-row code-corpus index in 16 segments,
+# single-term OR queries, collect() of topk's frame, median of 5
+# interleaved reads per point (ms); in brackets, the same sweep when the
+# local tier still answered through one Spark docs scan (a literal
+# doc_id IN list and score map):
+#             every match (k=None,          top 10, scored,
+#   df sum    match-only): local/fan-out      hydrated: local/fan-out
+#       60     84 (121) /  434               177 (305) / 1197
+#      512     83 (156) /  380               142 (228) / 1268
+#     1024     82 (175) /  437               148 (261) / 1175
+#     2053     75 (212) /  335               179 (275) / 1105
+#     4094    102 (314) /  374               165 (233) / 1120
+#     8246    107 (467) /  369               157 (275) /  923
+#    16444    157 (1074) / 339               150 (267) /  999
+# Answered in Arrow, the local tier no longer crosses over in this range.
+# The bound also caps what it holds on the driver (every match's docs row
+# but the text payload) and the local relation a doc_filter is evaluated
+# over, which runs no job only under Spark's local-relation size
+# (spark.sql.execution.arrow.localRelationThreshold).
 LOCAL_POSTINGS_MAX = 4096
 
 # the docs columns that hold a document's text: the local tier reads them
